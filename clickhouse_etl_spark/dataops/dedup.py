@@ -67,70 +67,29 @@ def _word_ngrams(text: Column, n: int) -> Column:
     return F.array_distinct(grams)
 
 
-def _shingle_stream(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    n: int,
-    engine: str = "pandas",
-) -> DataFrame:
-    """The distinct-shingle stream (id, sz, g) — one row per distinct
-    n-gram per document, with sz = the document's distinct-shingle
-    count. Row-local (no shuffle) in both engines.
+def _exact_id_source(df: DataFrame, id_col: str, text_col: str):
+    """Project ``df`` to (_id_c, _id_n, _txt_c) for a row-local Arrow
+    kernel that must hand each id back EXACTLY, in the input id
+    column's own type (int32/string doc ids come back as int32/string).
 
-    ``engine="pandas"`` (default) generates shingles in ONE Arrow
-    ``mapInPandas`` pass: the Catalyst form's nested higher-order
-    functions (transform/slice/array_join over the token array) are
-    CodegenFallback — interpreted per element — and profiling at sf0.1
-    put that projection at ~80% of the whole pair-engine runtime
-    (2.6 s of 3.2 s for 5k docs). The Python generator replays the
-    exact same semantics (split on single space keeping empties,
-    space-joined n-word windows, first-occurrence-distinct) so the
-    stream is row-identical; ``engine="catalyst"`` keeps the
-    expression form as the equality-pinned reference
-    (tests/test_dataops.py)."""
-    if engine == "catalyst":
-        return df.select(
-            F.col(id_col).alias("id"),
-            _word_ngrams(F.col(text_col), n).alias("_grams"),
-        ).select(
-            "id",
-            F.size("_grams").cast("bigint").alias("sz"),
-            F.explode("_grams").alias("g"),
-        )
-
-    import pandas as pd
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    # preserve the input id column's actual type (ADVICE r7: hardcoding
-    # 'id long' made the engines diverge for int32/string doc ids)
-    id_field = df.schema[id_col]
-    out_schema = StructType(
-        [
-            StructField("id", id_field.dataType, id_field.nullable),
-            StructField("sz", LongType(), False),
-            StructField("g", StringType(), True),
-        ]
-    )
-    # nullable int ids must use pandas NULLABLE dtypes on the OUTPUT
-    # (ADVICE r8: a numpy int64 Series raises on a NULL id where the
-    # catalyst engine flows it through) — AND a non-null carrier on the
-    # INPUT: Arrow→pandas converts an int column containing any NULL to
-    # float64, silently rounding ids past 2^53 (review r9), so nullable
-    # int ids travel as coalesce(id, 0) + an isNull flag and the kernel
-    # reconstructs None exactly.
-    _np_int = {
+    Arrow→pandas converts an int column containing any NULL to
+    float64, silently rounding ids past 2^53, so nullable int ids
+    travel as coalesce(id, 0) + an isNull flag (``_id_n``) and the
+    kernel rebuilds None from the flag; the returned pandas dtype is
+    the NULLABLE one for nullable ints (a numpy int Series raises on a
+    NULL id). Returns (src, id_field, pandas id dtype)."""
+    np_int = {
         "bigint": "int64", "int": "int32", "smallint": "int16",
         "tinyint": "int8",
     }
-    _pd_int = {
+    pd_int = {
         "bigint": "Int64", "int": "Int32", "smallint": "Int16",
         "tinyint": "Int8",
     }
+    id_field = df.schema[id_col]
     simple = id_field.dataType.simpleString()
-    nullable_int = id_field.nullable and simple in _np_int
-    id_dtype = (_pd_int if id_field.nullable else _np_int).get(simple, "object")
-    if nullable_int:
+    id_dtype = (pd_int if id_field.nullable else np_int).get(simple, "object")
+    if id_field.nullable and simple in np_int:
         src = df.select(
             F.coalesce(F.col(id_col), F.lit(0))
             .cast(id_field.dataType)
@@ -144,6 +103,38 @@ def _shingle_stream(
             F.lit(False).alias("_id_n"),
             F.col(text_col).alias("_txt_c"),
         )
+    return src, id_field, id_dtype
+
+
+def _shingle_stream(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    n: int,
+) -> DataFrame:
+    """The distinct-shingle stream (id, sz, g) — one row per distinct
+    n-gram per document, with sz = the document's distinct-shingle
+    count. Row-local (no shuffle).
+
+    Generated in ONE Arrow ``mapInPandas`` pass: the Catalyst
+    :func:`_word_ngrams` form's nested higher-order functions
+    (transform/slice/array_join over the token array) are
+    CodegenFallback — interpreted per element — and profiling at sf0.1
+    put that projection at ~80% of the whole pair-engine runtime
+    (2.6 s of 3.2 s for 5k docs). The generator keeps the same
+    semantics (split on single space keeping empties, space-joined
+    n-word windows, first-occurrence-distinct)."""
+    import pandas as pd
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    src, id_field, id_dtype = _exact_id_source(df, id_col, text_col)
+    out_schema = StructType(
+        [
+            StructField("id", id_field.dataType, id_field.nullable),
+            StructField("sz", LongType(), False),
+            StructField("g", StringType(), True),
+        ]
+    )
 
     def gen(batches):
         for pdf in batches:
@@ -156,7 +147,7 @@ def _shingle_stream(
                 if id_null:
                     did = None
                 if text is None:
-                    continue  # split(NULL) -> NULL, explode drops the row
+                    continue  # NULL text has no shingles
                 w = text.split(" ")
                 if len(w) < n:
                     continue  # _word_ngrams guards short docs to []
@@ -186,7 +177,6 @@ def _shared_shingle_pairs(
     id_col: str,
     n: int,
     max_doc_freq: int,
-    engine: str = "pandas",
 ) -> DataFrame:
     """Inverted-index candidate pairs with shingle-overlap counts —
     the shared engine of :func:`ngram_jaccard_pairs` (symmetric
@@ -207,7 +197,7 @@ def _shared_shingle_pairs(
     from pyspark.sql import Window
 
     df = scale_out(df)
-    grams = _shingle_stream(df, text_col, id_col, n, engine=engine)
+    grams = _shingle_stream(df, text_col, id_col, n)
     capped = grams.withColumn("_df", F.count("*").over(Window.partitionBy("g"))).filter(
         (F.col("_df") > 1) & (F.col("_df") <= max_doc_freq)
     )
@@ -245,7 +235,6 @@ def ngram_jaccard_pairs(
     n: int = 5,
     threshold: float = 0.4,
     max_doc_freq: int = 100,
-    engine: str = "pandas",
 ) -> DataFrame:
     """Near-duplicate pairs by exact n-gram-set Jaccard, with an
     inverted-index candidate join (pairs must share >= 1 shingle).
@@ -266,7 +255,7 @@ def ngram_jaccard_pairs(
     ``exact_dedup``; texts dominated by boilerplate are what the cap is
     *supposed* to ignore).
     """
-    shared = _shared_shingle_pairs(df, text_col, id_col, n, max_doc_freq, engine=engine)
+    shared = _shared_shingle_pairs(df, text_col, id_col, n, max_doc_freq)
     return (
         shared.withColumn(
             "jaccard",
@@ -284,7 +273,6 @@ def ngram_containment_pairs(
     n: int = 5,
     threshold: float = 0.6,
     max_doc_freq: int = 100,
-    engine: str = "pandas",
 ) -> DataFrame:
     """ASYMMETRIC near-duplicate pairs by n-gram-set containment:
     ``containment = shared / min(size_a, size_b)`` — the smaller
@@ -301,7 +289,7 @@ def ngram_containment_pairs(
     division — oracle-exact. Output: (id_a, id_b, shared, size_a,
     size_b, containment), id_a < id_b.
     """
-    shared = _shared_shingle_pairs(df, text_col, id_col, n, max_doc_freq, engine=engine)
+    shared = _shared_shingle_pairs(df, text_col, id_col, n, max_doc_freq)
     return (
         shared.withColumn(
             "containment",
@@ -2164,7 +2152,7 @@ def _decontam_probe_kernel(probe, n: int, count: bool):
     the ``_score_kernel`` rule: one definition, composed everywhere):
     tokenize the raw text with the :func:`_word_tokens_expr` convention
     (:func:`fold.fold_word_tokens` — the ONE fold policy; see
-    ``dataops/fold.py`` for the declared engine-agreement contract),
+    ``dataops/fold.py`` for the declared fold-agreement contract),
     slide ``n``-grams, probe the seen-set. ``count=False`` returns an
     early-exit boolean verdict (drop mode / the fused stream);
     ``count=True`` returns the DISTINCT dirty-n-gram count (flag/audit
@@ -2337,8 +2325,9 @@ def _simhash_sigs_arrow(
 ) -> DataFrame:
     """Per-document SimHash signatures in ONE Arrow ``mapInPandas``
     pass — numerically identical to :func:`simhash` (equality-pinned in
-    tests/test_dataops.py), which keeps the expression form as the
-    oracle-visible reference.
+    tests/test_dataops.py) per document, except that each row is its
+    own document: duplicate ids are not pooled, and the id keeps its
+    type and NULLs (:func:`_exact_id_source`).
 
     Why: the expression form char-fold-hashes every word through an
     interpreted HOF chain (split-per-char → transform(ascii) →
@@ -2350,9 +2339,17 @@ def _simhash_sigs_arrow(
     """
     import numpy as np
     import pandas as pd
+    from pyspark.sql.types import LongType, StructField, StructType
 
     from .hashing import HASH_BASE, HASH_MOD
 
+    src, id_field, id_dtype = _exact_id_source(df, id_col, text_col)
+    out_schema = StructType(
+        [
+            StructField(id_col, id_field.dataType, id_field.nullable),
+            StructField("simhash", LongType(), True),
+        ]
+    )
     jidx = np.arange(bits, dtype=np.int64)
 
     def gen(batches):
@@ -2369,7 +2366,9 @@ def _simhash_sigs_arrow(
 
         for pdf in batches:
             ids, sigs = [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
+            for did, id_null, text in zip(
+                pdf["_id_c"], pdf["_id_n"], pdf["_txt_c"]
+            ):
                 if text is None:
                     continue
                 words = [w for w in text.split(" ") if w]
@@ -2379,16 +2378,16 @@ def _simhash_sigs_arrow(
                 # votes_j = sum over words of ((hash >> j) & 1 ? +1 : -1)
                 votes = (2 * ((hs[:, None] >> jidx) & 1) - 1).sum(axis=0)
                 sig = int(((votes > 0).astype(np.int64) << jidx).sum())
-                ids.append(did)
+                ids.append(None if id_null else did)
                 sigs.append(sig)
             yield pd.DataFrame(
                 {
-                    id_col: pd.Series(ids, dtype="int64"),
+                    id_col: pd.Series(ids, dtype=id_dtype),
                     "simhash": pd.Series(sigs, dtype="int64"),
                 }
             )
 
-    return df.select(id_col, text_col).mapInPandas(gen, f"{id_col} long, simhash long")
+    return src.mapInPandas(gen, out_schema)
 
 
 def simhash_near_dup_pairs(
@@ -2398,7 +2397,6 @@ def simhash_near_dup_pairs(
     bits: int = 32,
     bands: int = 4,
     max_hamming: int = 3,
-    engine: str = "pandas",
 ) -> DataFrame:
     """Near-dup pairs by banded SimHash — the third pair generator next
     to MinHash-LSH and the n-gram inverted index.
@@ -2418,16 +2416,15 @@ def simhash_near_dup_pairs(
     join's input quadratically (measured 10.3s -> 2.4s at 5k docs with
     identical output).  No all-pairs stage anywhere.
 
-    Output: (id_a, id_b, hamming), a < b, hamming <= max_hamming.
+    Output: (id_a, id_b, hamming), a < b, hamming <= max_hamming. Each
+    row is its own document (duplicate ids are not pooled); a NULL id
+    never pairs.
     """
     if max_hamming >= bands:
         raise ValueError("pigeonhole recall needs max_hamming < bands")
     band_bits = bits // bands
     mask = (1 << band_bits) - 1
-    if engine == "catalyst":
-        sigs = simhash(df, text_col=text_col, id_col=id_col, bits=bits)
-    else:
-        sigs = _simhash_sigs_arrow(scale_out(df), text_col, id_col, bits)
+    sigs = _simhash_sigs_arrow(scale_out(df), text_col, id_col, bits)
     g = sigs.select(F.col("simhash").alias("_s"), F.col(id_col).alias("_i"))
     within = (
         g.alias("x")
@@ -2474,6 +2471,9 @@ def simhash_near_dup_pairs(
             F.greatest("_ia", "_ib").alias("id_b"),
             "hamming",
         )
+        # least/greatest skip NULLs, and two rows may share an id:
+        # keep the a < b contract (a NULL id never pairs, as in within)
+        .filter(F.col("id_a") < F.col("id_b"))
     )
     return within.unionByName(cross)
 
@@ -2510,94 +2510,43 @@ def _band_geometry_check(n: int, k: int, rows_per_band: int) -> int:
     return k // rows_per_band
 
 
-def _band_keys_expr(
-    text: Column, n: int, k: int, rows_per_band: int
-) -> Column:
-    """Catalyst array of LSH band-key strings ``"{band_idx}:{v}_{v}"``
-    for one document — the exact key format
-    :func:`minhash_lsh_pairs`'s candidate join buckets on, over the
-    same portable signature family (:func:`_minhash_signature`). A
-    document with fewer than ``n`` words has no shingles, hence no
-    signature: the array is EMPTY (it neither registers in an artifact
-    nor probes one — the pair-miner analogue, where gram-less docs
-    cannot form verified pairs)."""
-    n_bands = _band_geometry_check(n, k, rows_per_band)
-    t = F.coalesce(text, F.lit(""))
-    grams = _word_ngrams(t, n)
-    # compose the ONE signature definition the pair miner uses — the
-    # no-false-negatives-vs-miner property depends on the persisted
-    # artifact and minhash_lsh_pairs deriving identical band values
-    sig = _minhash_signature(t, n, k)
-    bands = [
-        F.concat_ws(
-            ":",
-            F.lit(str(i)),
-            F.concat_ws(
-                "_",
-                *[
-                    sig[i * rows_per_band + j].cast("string")
-                    for j in range(rows_per_band)
-                ],
-            ),
-        )
-        for i in range(n_bands)
-    ]
-    return F.when(F.size(grams) >= 1, F.array(*bands)).otherwise(
-        F.expr("array()").cast("array<string>")
-    )
-
-
 def _distinct_band_keys(
     df: DataFrame,
     text_col: str,
     n: int,
     k: int,
     rows_per_band: int,
-    engine: str = "pandas",
 ) -> DataFrame:
     """The DISTINCT LSH band-key strings of a document frame (one
     ``band`` column) — the near-dup seen-set both artifact writers
     share (:func:`_distinct_lines` at band grain).
 
-    ``engine="pandas"`` (default) derives keys in ONE Arrow
-    ``mapInPandas`` pass via :func:`_band_keys_py` — the SAME kernel
-    the probe runs, so registered and probed keys agree by
-    construction. The Catalyst reference form (``engine="catalyst"``,
-    :func:`_band_keys_expr`) is equality-pinned by test but its nested
-    higher-order functions are CodegenFallback — interpreted per
-    shingle — which made the one-time artifact build ~25x slower than
-    the probe at decade scale (the `_shingle_stream` lesson)."""
-    if engine == "catalyst":
-        keyed = df.select(
-            F.explode(
-                _band_keys_expr(F.col(text_col), n, k, rows_per_band)
-            ).alias("band")
-        )
-    elif engine == "pandas":
-        from pyspark.sql.types import StringType, StructField, StructType
+    Keys derive in ONE Arrow ``mapInPandas`` pass via
+    :func:`_band_keys_py` — the SAME kernel the probe runs, so
+    registered and probed keys agree by construction (a Catalyst
+    higher-order-function form is CodegenFallback — interpreted per
+    shingle — and measured ~25x slower at decade scale)."""
+    from pyspark.sql.types import StringType, StructField, StructType
 
-        band_keys = _band_keys_py(n, k, rows_per_band)
-        schema = StructType([StructField("band", StringType())])
-        tcol = text_col
+    band_keys = _band_keys_py(n, k, rows_per_band)
+    schema = StructType([StructField("band", StringType())])
+    tcol = text_col
 
-        def gen(batches):
-            import pandas as pd
+    def gen(batches):
+        import pandas as pd
 
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                out = set()
-                for t in pdf[tcol]:
-                    out.update(band_keys(t))
-                if out:
-                    yield pd.DataFrame({"band": sorted(out)})
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            out = set()
+            for t in pdf[tcol]:
+                out.update(band_keys(t))
+            if out:
+                yield pd.DataFrame({"band": sorted(out)})
 
-        # prune to the text column BEFORE the repartition + Arrow
-        # boundary — the writers receive arbitrarily wide wave frames
-        keyed = scale_out(df.select(text_col)).mapInPandas(gen, schema)
-    else:
-        raise ValueError(f"unknown engine {engine!r}: pandas|catalyst")
-    return keyed.distinct()
+    # prune to the text column BEFORE the repartition + Arrow
+    # boundary — the writers receive arbitrarily wide wave frames
+    return scale_out(df.select(text_col)).mapInPandas(gen, schema).distinct()
 
 
 def _write_band_geometry(
@@ -2643,7 +2592,6 @@ def write_band_digest_table(
     rows_per_band: int = 2,
     text_col: str = "text",
     mode: str = "append",
-    engine: str = "pandas",
 ) -> None:
     """Persist the DISTINCT LSH band-key digests of an ingest wave —
     the near-dup mirror of :func:`write_digest_table`, and the
@@ -2683,7 +2631,7 @@ def write_band_digest_table(
                 " — nothing was written; rebuild or match the geometry"
             )
     (
-        _distinct_band_keys(df, text_col, n, k, rows_per_band, engine=engine)
+        _distinct_band_keys(df, text_col, n, k, rows_per_band)
         .select(F.md5("band").alias("digest"))
         .write.mode(mode)
         .parquet(f"{path.rstrip('/')}/bands")
@@ -2703,7 +2651,6 @@ def write_band_bloom_table(
     text_col: str = "text",
     mode: str = "overwrite",
     n_shards: int = 1,
-    engine: str = "pandas",
 ) -> None:
     """Band-grain Bloom seen-set: :func:`write_bloom_table` over the
     wave's distinct band keys — the 100-TB tier of the near-dup
@@ -2727,7 +2674,7 @@ def write_band_bloom_table(
         )
     _band_geometry_check(n, k, rows_per_band)
     write_bloom_table(
-        _distinct_band_keys(df, text_col, n, k, rows_per_band, engine=engine),
+        _distinct_band_keys(df, text_col, n, k, rows_per_band),
         f"{path.rstrip('/')}/bands",
         capacity,
         bits_per_key=bits_per_key,
@@ -2762,13 +2709,14 @@ def merge_band_bloom_tables(
 
 
 def _band_keys_py(n: int, k: int, rows_per_band: int):
-    """The ONE Python replay of the Catalyst band-key derivation
-    (``text -> list of band-key strings``) — single-space token split
-    keeping empties (``F.split(text, " ")``), guarded sliding
-    ``n``-word windows, distinct, char-fold hash, ``MINHASH_COEFFS[:k]``
-    affine minima, ``"{i}:{v}_{v}"`` keys. Shared by the probe kernel
-    AND the Arrow write path, so the registered and probed keys cannot
-    diverge (parity with :func:`_band_keys_expr` equality-pinned)."""
+    """The ONE band-key derivation (``text -> list of band-key
+    strings``) — single-space token split keeping empties, guarded
+    sliding ``n``-word windows, distinct, char-fold hash,
+    ``MINHASH_COEFFS[:k]`` affine minima, ``"{i}:{v}_{v}"`` keys: the
+    key format and signature family :func:`minhash_lsh_pairs`'s
+    candidate join buckets on (:func:`_minhash_signature`). Shared by
+    the probe kernel AND the write path, so the registered and probed
+    keys cannot diverge."""
     n_bands = _band_geometry_check(n, k, rows_per_band)
     from .hashing import HASH_MOD, char_fold_hash_py
 

@@ -10,15 +10,15 @@ is MEASURED, not assumed (tests/test_fold_policy.py pins it):
   special-casing set** — including the classic corners: ``'İ'``
   (U+0130 → ``'i'`` + U+0307 COMBINING DOT, 2 code points on BOTH
   engines), Greek final sigma (``'ΑΣ'`` → ``'ας'`` on both), and the
-  titlecase digraphs (``'ǅ'`` → ``'ǆ'``). Kernel<->Catalyst engine
-  swaps are therefore fold-safe beyond ASCII.
+  titlecase digraphs (``'ǅ'`` → ``'ǆ'``). A Python kernel and a
+  Catalyst expression over the same text therefore fold identically
+  beyond ASCII.
 - **DuckDB ``lower()`` is simple-mapping only** (``'İ'`` → 1-char
   ``'i'``; ``'ΑΣ'`` → ``'ασ'``, no final-sigma rule), so
   ORACLE-backed outputs may rely on case folding only for ASCII input
-  — the declared engine-agreement subset (the testdata corpus is
+  — the declared oracle-agreement subset (the testdata corpus is
   ASCII; a production corpus is not, which is fine: the oracle
-  replays correctness at test SF, the engine pair is what runs at
-  scale).
+  replays correctness at test SF, Spark is what runs at scale).
 
 Kernels with a stricter tokenizer (e.g. the decontamination
 ``[^a-z0-9]+`` split) additionally DISCARD non-ASCII letters as
@@ -54,5 +54,5 @@ def fold_word_tokens(s: "str | None") -> "list[str]":
     """Python replay of ``_word_tokens_expr`` (the decontamination /
     C4-blocklist token unit): :func:`fold_lower` → split on
     ``[^a-z0-9]+`` runs → drop empties. One definition on each side
-    of the engine pair, parity equality-pinned."""
+    (Python kernel / Catalyst expression), parity equality-pinned."""
     return [w for w in _WORD_SPLIT(fold_lower(s)) if w]

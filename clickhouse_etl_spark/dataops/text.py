@@ -1,11 +1,13 @@
 """Text analysis operators: language-ID, quality scoring, token stats,
 document fingerprinting.
 
-All pure Catalyst expressions over a string column — integer counts
-and exact ratio arithmetic so every output is reproducible in the
-DuckDB oracle. Tokenization is a plain single-space split (the corpus
-convention for the synthetic documents table); swap ``_tokens`` for a
-regex splitter when pointing at real text.
+Catalyst expressions over a string column, or one row-local Arrow
+pass where per-row work is procedural (normalize, repetition,
+hashing-trick featurization) — integer counts and exact ratio
+arithmetic so every output is reproducible in the DuckDB oracle.
+Tokenization is a plain single-space split (the corpus convention
+for the synthetic documents table); swap ``_tokens`` for a regex
+splitter when pointing at real text.
 
 Scale notes: each operator is a narrow projection (no shuffle); at
 100 TB these run scan-speed and pipeline with the parquet read.
@@ -106,34 +108,10 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
 GOPHER_REQUIRED_STOPS = ["the", "be", "to", "of", "and", "that", "have", "with"]
 
 
-def _gopher_counters_py(text: "str | None", req: "frozenset[str]"):
-    """Pure-Python mirror of the Catalyst counter battery in
-    :func:`gopher_rules` — same tokenizer (:func:`fold_space_tokens`),
-    same character-count arithmetic (code points on both engines; the
-    declared oracle-agreement subset is ASCII, see dataops/fold.py).
-    Returns the 8 counters in declaration order."""
-    import re
-
-    t = text if text is not None else ""
-    toks = fold_space_tokens(t)
-    lines = [li for li in t.split("\n") if li]
-    n_words = len(toks)
-    sum_word_len = sum(len(w) for w in toks)
-    n_symbol = sum(1 for w in toks if "#" in w or "..." in w)
-    n_alpha = sum(1 for w in toks if re.search(r"[a-z]", w))
-    n_lines = len(lines)
-    n_bullet = sum(1 for li in lines if li[:2] in ("- ", "* "))
-    n_ellipsis = sum(1 for li in lines if len(li) >= 3 and li[-3:] == "...")
-    n_req = len(req.intersection(toks))
-    return (n_words, sum_word_len, n_symbol, n_alpha, n_lines,
-            n_bullet, n_ellipsis, n_req)
-
-
 def gopher_rules(
     df: DataFrame,
     text_col: str = "text",
     required_stops: "list[str] | None" = None,
-    engine: str = "catalyst",
 ) -> DataFrame:
     """The full published Gopher quality-rule battery (Rae et al. 2021
     — public paper; complements :func:`quality_score`'s weighted score
@@ -164,96 +142,55 @@ def gopher_rules(
     are BIGINT, flags INTEGER 0/1 — every comparison is integer
     arithmetic, so the DuckDB oracle reproduces the battery exactly.
 
-    ``engine``: ``"catalyst"`` (default) is the pure-expression
-    battery; ``"pandas"`` computes the 8 counters in ONE Arrow
-    ``mapInPandas`` pass (the normalize / repetition_signals swap
-    pattern), counters equality-pinned across engines. MEASURED
-    NEGATIVE at the default (optimization r12): on ~54-token docs the
-    decade A/B at 1M docs is a wash (pandas ~5.2 s vs catalyst ~5.1 s
-    median over six interleaved pairs) — the keep-input Arrow boundary
-    cancels the interpreted-HOF saving, unlike normalize's regex-heavy
-    battery. The kernel stays as the measured knob for long-document
-    corpora. The flag stage below is shared, so the thresholds have
-    one definition.
+    A pure-expression battery: an Arrow ``mapInPandas`` counter kernel
+    measured a wash at 1M ~54-token docs (5.2 s vs 5.1 s median over
+    six interleaved pairs) — the keep-input Arrow boundary cancels the
+    interpreted-HOF saving.
     """
-    counter_cols = [
-        "n_words", "sum_word_len", "n_symbol_words", "n_alpha_words",
-        "n_lines", "n_bullet_lines", "n_ellipsis_lines", "n_req_stops",
-    ]
-    if engine == "pandas":
-        import pandas as pd
+    # null-text docs gate like empty docs (the digest-lifecycle
+    # rule), not as all-NULL counters
+    text = F.coalesce(F.col(text_col), F.lit(""))
+    toks = F.filter(_tokens(text), lambda t: F.length(t) > 0)
+    lines = F.filter(F.split(text, "\n"), lambda li: F.length(li) > 0)
 
-        from pyspark.sql import types as T
-
-        req_set = frozenset(required_stops or GOPHER_REQUIRED_STOPS)
-        schema = T.StructType(
-            list(df.schema.fields)
-            + [T.StructField(c, T.LongType(), False) for c in counter_cols]
+    n_words = F.size(toks).cast("bigint")
+    sum_word_len = F.aggregate(
+        toks, F.lit(0).cast("bigint"), lambda acc, t: acc + F.length(t)
+    )
+    n_symbol_words = F.size(
+        F.filter(toks, lambda t: t.contains("#") | t.contains("..."))
+    ).cast("bigint")
+    n_alpha_words = F.size(
+        F.filter(toks, lambda t: t.rlike("[a-z]"))
+    ).cast("bigint")
+    n_lines = F.size(lines).cast("bigint")
+    n_bullet_lines = F.size(
+        F.filter(lines, lambda li: F.substring(li, 1, 2).isin("- ", "* "))
+    ).cast("bigint")
+    n_ellipsis_lines = F.size(
+        F.filter(
+            lines,
+            lambda li: (F.length(li) >= 3)
+            & (li.substr(F.length(li) - 2, F.lit(3)) == "..."),
         )
+    ).cast("bigint")
+    req = F.array(
+        *[F.lit(w) for w in (required_stops or GOPHER_REQUIRED_STOPS)]
+    )
+    n_req_stops = F.size(
+        F.array_intersect(F.array_distinct(toks), req)
+    ).cast("bigint")
 
-        def battery(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                counters = [_gopher_counters_py(x, req_set) for x in pdf[text_col]]
-                out_pdf = pdf.copy()
-                for i, c in enumerate(counter_cols):
-                    out_pdf[c] = pd.Series(
-                        [row[i] for row in counters], index=pdf.index,
-                        dtype="int64",
-                    )
-                yield out_pdf
-
-        from .util import scale_out
-
-        out = scale_out(df).mapInPandas(battery, schema)
-    elif engine == "catalyst":
-        # null-text docs gate like empty docs (the digest-lifecycle
-        # rule), not as all-NULL counters that diverge between engines
-        text = F.coalesce(F.col(text_col), F.lit(""))
-        toks = F.filter(_tokens(text), lambda t: F.length(t) > 0)
-        lines = F.filter(F.split(text, "\n"), lambda li: F.length(li) > 0)
-
-        n_words = F.size(toks).cast("bigint")
-        sum_word_len = F.aggregate(
-            toks, F.lit(0).cast("bigint"), lambda acc, t: acc + F.length(t)
-        )
-        n_symbol_words = F.size(
-            F.filter(toks, lambda t: t.contains("#") | t.contains("..."))
-        ).cast("bigint")
-        n_alpha_words = F.size(
-            F.filter(toks, lambda t: t.rlike("[a-z]"))
-        ).cast("bigint")
-        n_lines = F.size(lines).cast("bigint")
-        n_bullet_lines = F.size(
-            F.filter(lines, lambda li: F.substring(li, 1, 2).isin("- ", "* "))
-        ).cast("bigint")
-        n_ellipsis_lines = F.size(
-            F.filter(
-                lines,
-                lambda li: (F.length(li) >= 3)
-                & (li.substr(F.length(li) - 2, F.lit(3)) == "..."),
-            )
-        ).cast("bigint")
-        req = F.array(
-            *[F.lit(w) for w in (required_stops or GOPHER_REQUIRED_STOPS)]
-        )
-        n_req_stops = F.size(
-            F.array_intersect(F.array_distinct(toks), req)
-        ).cast("bigint")
-
-        out = df.withColumns({
-            "n_words": n_words,
-            "sum_word_len": sum_word_len,
-            "n_symbol_words": n_symbol_words,
-            "n_alpha_words": n_alpha_words,
-            "n_lines": n_lines,
-            "n_bullet_lines": n_bullet_lines,
-            "n_ellipsis_lines": n_ellipsis_lines,
-            "n_req_stops": n_req_stops,
-        })
-    else:
-        raise ValueError(f"unknown engine {engine!r}")
+    out = df.withColumns({
+        "n_words": n_words,
+        "sum_word_len": sum_word_len,
+        "n_symbol_words": n_symbol_words,
+        "n_alpha_words": n_alpha_words,
+        "n_lines": n_lines,
+        "n_bullet_lines": n_bullet_lines,
+        "n_ellipsis_lines": n_ellipsis_lines,
+        "n_req_stops": n_req_stops,
+    })
 
     def flag(cond: Column) -> Column:
         return F.when(cond, F.lit(1)).otherwise(F.lit(0)).cast("int")
@@ -495,7 +432,6 @@ def decontaminate(
 
 def repetition_signals(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    engine: str = "pandas",
 ) -> DataFrame:
     """Gopher-style repetition quality signals per document: duplicate
     token fraction and the character fraction covered by the most
@@ -506,146 +442,78 @@ def repetition_signals(
     top_bigram, top_bigram_count, top_bigram_char_frac.
 
     The signal is entirely ROW-LOCAL — the bigram argmax only ever
-    compares grams of one document — so ``engine="pandas"`` (default)
-    computes it in one Arrow pass with a per-doc Counter: no explode,
-    ZERO shuffles, value-identical to the expression form
-    (equality-pinned; Python tuple-min over (-count, gram) matches the
-    struct min because UTF-8 byte order preserves code-point order,
-    and each ratio is the same single int/int IEEE division). The
-    row-local pass is also what makes the op genuinely STREAM-SAFE
-    (the expression form's (doc, gram) aggregation would be rejected
-    in append mode). Engines agree when ``id_col`` is unique (the
-    documents-table contract): on duplicate ids the expression form
-    pools grams across rows while the row-local pass scores each row
-    independently — the per-row semantic is the only one a stream can
-    have.
-
-    ``engine="catalyst"`` keeps the expression reference form: one
-    explode, one partial-agg shuffle on (doc, gram), then a
-    min(struct) argmax per doc — no window sort. Determinism: argmax
-    resolves ties by smallest gram (min over struct(-count, gram)).
+    compares grams of one document — so it runs as one Arrow pass with
+    a per-doc Counter: no explode, ZERO shuffles, STREAM-SAFE. Each row
+    is scored on its own, so duplicate ids pool nothing. Determinism:
+    argmax resolves ties by smallest gram (tuple-min over
+    (-count, gram); Python str order is code-point order, which UTF-8
+    byte order preserves), and each ratio is one int/int IEEE division.
     """
-    if engine == "pandas":
-        from collections import Counter
+    from collections import Counter
 
-        import pandas as pd
+    import pandas as pd
 
-        from pyspark.sql import types as T
+    from pyspark.sql import types as T
 
-        schema = T.StructType([
-            [f for f in df.schema.fields if f.name == id_col][0],
-            T.StructField("n_tokens", T.LongType(), True),
-            T.StructField("n_distinct_tokens", T.LongType(), True),
-            T.StructField("dup_token_ratio", T.DoubleType(), True),
-            T.StructField("top_bigram", T.StringType(), True),
-            T.StructField("top_bigram_count", T.LongType(), True),
-            T.StructField("top_bigram_char_frac", T.DoubleType(), True),
-        ])
-        src = scale_out(df.select(id_col, text_col))
-        tcol = text_col
+    schema = T.StructType([
+        [f for f in df.schema.fields if f.name == id_col][0],
+        T.StructField("n_tokens", T.LongType(), True),
+        T.StructField("n_distinct_tokens", T.LongType(), True),
+        T.StructField("dup_token_ratio", T.DoubleType(), True),
+        T.StructField("top_bigram", T.StringType(), True),
+        T.StructField("top_bigram_count", T.LongType(), True),
+        T.StructField("top_bigram_char_frac", T.DoubleType(), True),
+    ])
+    src = scale_out(df.select(id_col, text_col))
+    tcol = text_col
 
-        def signals(batches):
-            for pdf in batches:
-                if not len(pdf):
+    def signals(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            n_t, n_d, ratio, grams, cnts, fracs = [], [], [], [], [], []
+            for x in pdf[tcol]:
+                if x is None:
+                    # NULL text: size(NULL) = -1 counts, empty bigram
+                    n_t.append(-1)
+                    n_d.append(-1)
+                    ratio.append(0.0)
+                    grams.append("")
+                    cnts.append(0)
+                    fracs.append(0.0)
                     continue
-                n_t, n_d, ratio, grams, cnts, fracs = [], [], [], [], [], []
-                for x in pdf[tcol]:
-                    if x is None:
-                        # size(NULL) = -1 legacy contract; the left
-                        # join yields the coalesced defaults
-                        n_t.append(-1)
-                        n_d.append(-1)
-                        ratio.append(0.0)
-                        grams.append("")
-                        cnts.append(0)
-                        fracs.append(0.0)
-                        continue
-                    toks = [t for t in x.split(" ") if t]
-                    n = len(toks)
-                    d = len(set(toks))
-                    n_t.append(n)
-                    n_d.append(d)
-                    ratio.append((n - d) / n if n > 0 else 0.0)
-                    if n >= 2:
-                        cnt = Counter(
-                            toks[i] + " " + toks[i + 1] for i in range(n - 1)
-                        )
-                        neg_c, g = min((-c, g) for g, c in cnt.items())
-                        c = -neg_c
-                        grams.append(g)
-                        cnts.append(c)
-                        fracs.append(
-                            (c * len(g)) / len(x) if len(x) > 0 else 0.0
-                        )
-                    else:
-                        grams.append("")
-                        cnts.append(0)
-                        fracs.append(0.0)
-                yield pd.DataFrame({
-                    id_col: pdf[id_col].values,
-                    "n_tokens": pd.Series(n_t, dtype="int64"),
-                    "n_distinct_tokens": pd.Series(n_d, dtype="int64"),
-                    "dup_token_ratio": pd.Series(ratio, dtype="float64"),
-                    "top_bigram": grams,
-                    "top_bigram_count": pd.Series(cnts, dtype="int64"),
-                    "top_bigram_char_frac": pd.Series(fracs, dtype="float64"),
-                })
+                toks = [t for t in x.split(" ") if t]
+                n = len(toks)
+                d = len(set(toks))
+                n_t.append(n)
+                n_d.append(d)
+                ratio.append((n - d) / n if n > 0 else 0.0)
+                if n >= 2:
+                    cnt = Counter(
+                        toks[i] + " " + toks[i + 1] for i in range(n - 1)
+                    )
+                    neg_c, g = min((-c, g) for g, c in cnt.items())
+                    c = -neg_c
+                    grams.append(g)
+                    cnts.append(c)
+                    fracs.append(
+                        (c * len(g)) / len(x) if len(x) > 0 else 0.0
+                    )
+                else:
+                    grams.append("")
+                    cnts.append(0)
+                    fracs.append(0.0)
+            yield pd.DataFrame({
+                id_col: pdf[id_col].values,
+                "n_tokens": pd.Series(n_t, dtype="int64"),
+                "n_distinct_tokens": pd.Series(n_d, dtype="int64"),
+                "dup_token_ratio": pd.Series(ratio, dtype="float64"),
+                "top_bigram": grams,
+                "top_bigram_count": pd.Series(cnts, dtype="int64"),
+                "top_bigram_char_frac": pd.Series(fracs, dtype="float64"),
+            })
 
-        return src.mapInPandas(signals, schema)
-
-    text = F.col(text_col)
-    toks = F.filter(F.split(text, " "), lambda t: F.length(t) > 0)
-    base = (
-        scale_out(df)
-        .select(
-            F.col(id_col),
-            F.length(text).cast("bigint").alias("_n_chars"),
-            toks.alias("_w"),
-        )
-        .withColumn("n_tokens", F.size("_w").cast("bigint"))
-        .withColumn("n_distinct_tokens", F.size(F.array_distinct("_w")).cast("bigint"))
-    )
-    idx = F.when(
-        F.size("_w") >= 2, F.sequence(F.lit(1), F.size("_w") - 1)
-    ).otherwise(F.expr("array()").cast("array<int>"))
-    bigrams = base.select(
-        id_col,
-        F.explode(
-            F.transform(idx, lambda i: F.array_join(F.slice("_w", i, 2), " "))
-        ).alias("_g"),
-    )
-    counts = bigrams.groupBy(id_col, "_g").agg(F.count("*").alias("_cnt"))
-    top = (
-        counts.groupBy(id_col)
-        .agg(
-            F.min(
-                F.struct((-F.col("_cnt")).alias("nc"), F.col("_g").alias("g"))
-            ).alias("_top")
-        )
-        .select(
-            id_col,
-            F.col("_top.g").alias("_top_bigram"),
-            (-F.col("_top.nc")).cast("bigint").alias("_top_cnt"),
-        )
-    )
-    joined = base.drop("_w").join(top, id_col, "left")
-    n_tok = F.col("n_tokens")
-    return joined.select(
-        id_col,
-        "n_tokens",
-        "n_distinct_tokens",
-        F.when(n_tok > 0, (n_tok - F.col("n_distinct_tokens")) / n_tok)
-        .otherwise(F.lit(0.0))
-        .alias("dup_token_ratio"),
-        F.coalesce("_top_bigram", F.lit("")).alias("top_bigram"),
-        F.coalesce("_top_cnt", F.lit(0)).cast("bigint").alias("top_bigram_count"),
-        F.when(
-            F.col("_top_cnt").isNotNull() & (F.col("_n_chars") > 0),
-            (F.col("_top_cnt") * F.length("_top_bigram")) / F.col("_n_chars"),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("top_bigram_char_frac"),
-    )
+    return src.mapInPandas(signals, schema)
 
 
 def boilerplate_ngrams(
@@ -1064,7 +932,6 @@ def normalize_text(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    engine: str = "pandas",
 ) -> DataFrame:
     """Deterministic text canonicalization — the cleanup pass run
     before dedup/tokenization so that case and punctuation variants of
@@ -1078,108 +945,50 @@ def normalize_text(
     Adds ``text_norm`` plus the before/after whitespace token counts
     (the shrinkage diagnostic). Row-local, no shuffle.
 
-    ``engine="pandas"`` (default) runs the whole pass Arrow-batched —
-    compiled Python regex + counts, one ``mapInPandas``, ~6× the
-    Catalyst regexp_replace chain at 100k docs and still stream-safe.
-    Value-identical to ``engine="catalyst"`` (equality-pinned on the
-    test corpus), including the null contract (NULL text →
-    (NULL, -1, -1)); the post-replace strip is safe because every
-    non-[a-z0-9 space] char — tabs and newlines included — has already
-    become a plain space.
+    The whole pass runs Arrow-batched — compiled Python regex +
+    counts, one ``mapInPandas``, ~6× a Catalyst regexp_replace chain
+    at 100k docs and stream-safe. NULL text → (NULL, -1, -1); the
+    post-replace strip is safe because every non-[a-z0-9 space] char —
+    tabs and newlines included — has already become a plain space.
     """
-    if engine == "pandas":
-        import pandas as pd
+    import pandas as pd
 
-        from pyspark.sql import types as T
+    from pyspark.sql import types as T
 
-        schema = T.StructType(
-            list(df.schema.fields)
-            + [
-                T.StructField("text_norm", T.StringType(), True),
-                T.StructField("n_tokens_raw", T.LongType(), True),
-                T.StructField("n_tokens_norm", T.LongType(), True),
-            ]
-        )
-        in_cols = [f.name for f in df.schema.fields]
-        tcol = text_col
-        # single-file parquet reads as ONE partition — without an
-        # explicit repartition the whole Python regex pass runs on one
-        # core (the CLAUDE.md compute-heavy-dataop rule); scale_out is
-        # a no-op on streams
-        df = scale_out(df)
-
-        def normalize(batches):
-            norm = _normalize_kernel()
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                norms, nraws, nnorms = [], [], []
-                for x in pdf[tcol]:
-                    cleaned, nr, nn = norm(x)
-                    norms.append(cleaned)
-                    nraws.append(nr)
-                    nnorms.append(nn)
-                out = pdf[in_cols].copy()
-                out["text_norm"] = norms
-                out["n_tokens_raw"] = pd.Series(nraws, dtype="int64").values
-                out["n_tokens_norm"] = pd.Series(nnorms, dtype="int64").values
-                yield out
-
-        return df.mapInPandas(normalize, schema)
-
-    lowered = F.lower(F.col(text_col))
-    cleaned = F.trim(
-        F.regexp_replace(
-            F.regexp_replace(lowered, "[^a-z0-9 ]", " "), " +", " "
-        )
+    schema = T.StructType(
+        list(df.schema.fields)
+        + [
+            T.StructField("text_norm", T.StringType(), True),
+            T.StructField("n_tokens_raw", T.LongType(), True),
+            T.StructField("n_tokens_norm", T.LongType(), True),
+        ]
     )
-    # Token counts stay in whole-stage codegen: counting nonempty
-    # space-split tokens == counting non-space runs (regexp_count), and
-    # on the already-collapsed canonical form it's just spaces + 1.
-    # The previous size(filter(split(...))) HOFs were CodegenFallback
-    # (interpreted per token). coalesce(-1) preserves the legacy
-    # size(NULL) = -1 contract for null text.
-    n_raw = F.coalesce(
-        F.regexp_count(F.col(text_col), F.lit("[^ ]+")), F.lit(-1)
-    )
-    n_norm = F.coalesce(
-        F.when(cleaned == "", F.lit(0)).otherwise(
-            F.length(cleaned)
-            - F.length(F.replace(cleaned, F.lit(" "), F.lit("")))
-            + 1
-        ),
-        F.lit(-1),
-    )
-    return df.withColumn("text_norm", cleaned).withColumn(
-        "n_tokens_raw", n_raw.cast("bigint")
-    ).withColumn("n_tokens_norm", n_norm.cast("bigint"))
+    in_cols = [f.name for f in df.schema.fields]
+    tcol = text_col
+    # single-file parquet reads as ONE partition — without an
+    # explicit repartition the whole Python regex pass runs on one
+    # core (the CLAUDE.md compute-heavy-dataop rule); scale_out is
+    # a no-op on streams
+    df = scale_out(df)
 
+    def normalize(batches):
+        norm = _normalize_kernel()
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            norms, nraws, nnorms = [], [], []
+            for x in pdf[tcol]:
+                cleaned, nr, nn = norm(x)
+                norms.append(cleaned)
+                nraws.append(nr)
+                nnorms.append(nn)
+            out = pdf[in_cols].copy()
+            out["text_norm"] = norms
+            out["n_tokens_raw"] = pd.Series(nraws, dtype="int64").values
+            out["n_tokens_norm"] = pd.Series(nnorms, dtype="int64").values
+            yield out
 
-def hash_bucket_counts(
-    df: DataFrame,
-    dim: int = 64,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Sparse (id, _b, _c) bucket-count rows of the feature-hashing
-    featurizer — the shared corpus-scale stage of
-    :func:`hash_embedding` (dense form) and the long-form registry
-    entry. The char-fold hash (interpreted HOF) runs once per DISTINCT
-    token via a vocabulary dictionary broadcast back onto the token
-    stream; for corpora whose vocabulary exceeds the broadcast budget,
-    hash per occurrence instead (results identical)."""
-    from .hashing import char_fold_hash
-
-    toks = F.filter(_tokens(F.col(text_col)), lambda t: F.length(t) > 0)
-    exploded = scale_out(df).select(
-        F.col(id_col), F.explode(toks).alias("_tok")
-    )
-    vocab = exploded.select("_tok").distinct()
-    tok_dict = vocab.select(
-        "_tok", (char_fold_hash(F.col("_tok")) % dim).alias("_b")
-    )
-    buckets = exploded.join(F.broadcast(tok_dict), "_tok").select(id_col, "_b")
-    return buckets.groupBy(id_col, "_b").agg(F.count("*").alias("_c"))
+    return df.mapInPandas(normalize, schema)
 
 
 def importance_weights(
@@ -1189,7 +998,6 @@ def importance_weights(
     text_col: str = "text",
     id_col: str = "doc_id",
     source_col: str = "source",
-    engine: str = "pandas",
 ) -> DataFrame:
     """DSIR-style data selection via importance weighting (Xie et al.
     2023, "Data Selection for Language Models via Importance
@@ -1197,8 +1005,8 @@ def importance_weights(
     much does each document's hashed-token distribution look like the
     TARGET domain rather than the raw corpus?
 
-    - featurize every doc with the hashing trick
-      (:func:`hash_bucket_counts` — portable char-fold hash % dim);
+    - featurize every doc with the hashing trick (portable char-fold
+      hash % dim);
     - per-bucket counts ``n_t`` over the target docs (``source_col``
       ∈ ``target_sources``) and ``n_r`` over the whole corpus;
     - bucket weight ``wt = floor((n_t+1)·2^20 / (n_r+1))`` — add-one
@@ -1215,17 +1023,14 @@ def importance_weights(
 
     Scale shape: the weight build aggregates straight to BUCKET grain
     (map-side partial combine → a dim-bounded shuffle; the target pass
-    re-featurizes only the small target slice), and the scoring pass
-    — ``engine="pandas"``, the default — is ONE row-local Arrow
-    ``mapInPandas`` with the collected weight dict in the task closure
-    (the classify_against pattern): no corpus-side (doc, bucket)
-    shuffle, no join, memory independent of corpus size. The frame is
-    deliberately never localCheckpointed: an in-heap checkpoint of a
-    corpus-scale frame evicts under pressure and dies at 10M docs (the
-    write_classifier_table lesson — measured OOM in scale_test
-    section_r9b before this shape). ``engine="catalyst"`` keeps the
-    explode → broadcast-join → groupBy reference form, equality-pinned
-    by test. Corpus-global (the weight table is a corpus aggregate) —
+    re-featurizes only the small target slice), and the scoring pass is
+    ONE row-local Arrow ``mapInPandas`` with the collected weight dict
+    in the task closure (the classify_against pattern): no corpus-side
+    (doc, bucket) shuffle, no join, memory independent of corpus size.
+    The frame is deliberately never localCheckpointed: an in-heap
+    checkpoint of a corpus-scale frame evicts under pressure and dies
+    at 10M docs (the write_classifier_table lesson — measured OOM in
+    scale_test section_r9b). Corpus-global (the weight table is a corpus aggregate) —
     batch-only on the spec surface; the train-offline/score-online
     split is :func:`write_importance_table` /
     :func:`importance_against_path` (score parity equality-pinned).
@@ -1233,19 +1038,6 @@ def importance_weights(
     if not target_sources:
         raise ValueError("importance_weights needs >=1 target source")
     w = _importance_table(df, target_sources, dim, text_col, source_col)
-
-    if engine == "catalyst":
-        db = hash_bucket_counts(df, dim=dim, text_col=text_col, id_col=id_col)
-        return (
-            db.join(F.broadcast(w), "_b")
-            .groupBy(id_col)
-            .agg(
-                F.sum("_c").cast("bigint").alias("n_tokens"),
-                F.sum(F.col("_c") * F.col("_wt")).cast("bigint").alias("score"),
-            )
-        )
-    if engine != "pandas":
-        raise ValueError(f"unknown engine {engine!r}; use 'pandas' or 'catalyst'")
     wt_map = {r["_b"]: r["_wt"] for r in w.collect()}  # <= dim rows
     # batch-only op -> safe to scale_out before the Python-side kernel
     # (a single-file corpus would otherwise score on ONE core — the
@@ -1435,14 +1227,14 @@ def _iw_score_frame(
                 continue
             # Python str.lower() here vs Spark lower() on the
             # weight-build path: identical on ASCII, divergent on
-            # locale-sensitive Unicode corners ('İ' etc.) — engine
-            # equality and serve parity are pinned for ASCII corpora
+            # locale-sensitive Unicode corners ('İ' etc.) — serve
+            # parity is pinned for ASCII corpora
             # (the classify_against family's documented assumption;
             # ADVICE r9). Non-ASCII inputs should normalize_text first.
             tok_lists = [fold_space_tokens(x) for x in pdf[text_col]]
             keep = [i for i, tl in enumerate(tok_lists) if tl]
             if not keep:
-                continue  # token-less docs drop, as in the catalyst form
+                continue  # token-less docs drop, as in importance_weights
             n_toks, scores = score([tok_lists[i] for i in keep])
             out = pdf.iloc[keep][out_cols].copy()
             out[tokens_col] = np.asarray(n_toks, dtype=np.int64)
@@ -1538,7 +1330,6 @@ def hash_embedding(
     dim: int = 64,
     text_col: str = "text",
     id_col: str = "doc_id",
-    engine: str = "pandas",
 ) -> DataFrame:
     """Hashing-trick document featurization: token → portable
     ``char_fold_hash % dim`` bucket → per-doc bucket-count histogram →
@@ -1548,136 +1339,84 @@ def hash_embedding(
     similarity/dedup op (cosine_topk, LSH, semantic_dedup) composes on
     raw text with no model artifact to ship.
 
-    Scale shape: one explode + (doc, bucket) hash aggregation, then a
-    per-doc map rebuild — shuffles carry (id, bucket, count) ints only.
-    The char-fold hash (an interpreted HOF) runs once per DISTINCT
-    token, not per occurrence: the vocabulary dictionary (token →
-    bucket) is built from the distinct-token table (map-side partial
-    distinct makes this cheap under Zipf) and broadcast back onto the
-    token stream — at sf0.1 this cut the hash stage ~9000× (31 distinct
-    vs 270k occurrences). The dictionary is vocab-bounded; for corpora
-    whose vocabulary exceeds the broadcast budget, hash per occurrence
-    instead (drop the dict join — results identical). The dense array
-    materializes via ``map_from_entries`` + a dim-bounded transform
-    (64 lookups/row, Catalyst-side). Determinism: counts are integers,
-    the norm is a sqrt of an integer sum, and each weight is ONE
-    division of exact values — the oracle reproduces every float.
+    Scale shape: the WHOLE featurization is one Arrow-batched
+    ``mapInPandas`` pass (the ``pq_encode`` pattern): tokenize,
+    char-fold hash (memoized per distinct token, the same Zipf-head
+    trick as ``apply_bpe``), bincount, and norm all row-local in
+    numpy/Python integers — no explode, no vocabulary join, no shuffle.
+    Each row is featurized on its own (duplicate ids pool nothing) and
+    token-less docs are omitted. Determinism: the char fold is plain
+    int math (no overflow below 2^53·31), counts are exact small
+    integers, ``np.sum`` over a ≤128-element vector is a strict
+    sequential left fold including the zero squares, and each weight is
+    ONE division of exact values — the oracle reproduces every float.
 
     Output: (id, n_tokens, embedding array<double>, l2_norm).
-
-    ``engine``: ``"pandas"`` (default) runs the WHOLE featurization as
-    one Arrow-batched ``mapInPandas`` pass — the documented
-    ``pq_encode`` fix pattern (VERDICT r6 #3) taken to its conclusion:
-    tokenize, char-fold hash (memoized per distinct token, the same
-    Zipf-head trick as ``apply_bpe``), bincount, and norm all row-local
-    in numpy/Python integers, eliminating the explode, the vocabulary
-    broadcast join, and BOTH shuffles of the reference form. The
-    arithmetic replays Catalyst exactly: the char fold is plain int
-    math (no overflow below 2^53·31), counts are exact small integers,
-    ``np.sum`` over a ≤128-element vector is a strict sequential left
-    fold including the zero squares, and each weight is the same single
-    division — bit-identical, pinned by
-    ``test_hash_embedding_engines_identical``. ``"catalyst"`` keeps
-    the pure-expression two-shuffle form as the oracle-reference path.
     """
-    if engine == "pandas":
-        import numpy as np
-        import pandas as pd
+    import numpy as np
+    import pandas as pd
 
-        from .hashing import HASH_BASE, HASH_MOD
-        from pyspark.sql import types as T
+    from .hashing import HASH_BASE, HASH_MOD
+    from pyspark.sql import types as T
 
-        src = scale_out(df.select(id_col, text_col))
-        id_field = [f for f in src.schema.fields if f.name == id_col][0]
-        schema = T.StructType([
-            id_field,
-            T.StructField("n_tokens", T.LongType(), True),
-            T.StructField("embedding", T.ArrayType(T.DoubleType()), True),
-            T.StructField("l2_norm", T.DoubleType(), True),
-        ])
+    src = scale_out(df.select(id_col, text_col))
+    id_field = [f for f in src.schema.fields if f.name == id_col][0]
+    schema = T.StructType([
+        id_field,
+        T.StructField("n_tokens", T.LongType(), True),
+        T.StructField("embedding", T.ArrayType(T.DoubleType()), True),
+        T.StructField("l2_norm", T.DoubleType(), True),
+    ])
 
-        def featurize(batches):
-            # per-distinct-token bucket memo across batches (Zipf head)
-            bucket: dict[str, int] = {}
+    def featurize(batches):
+        # per-distinct-token bucket memo across batches (Zipf head)
+        bucket: dict[str, int] = {}
 
-            def tok_bucket(w: str) -> int:
-                b = bucket.get(w)
-                if b is None:
-                    h = 0
-                    for ch in w:
-                        h = (h * HASH_BASE + ord(ch)) % HASH_MOD
-                    b = h % dim
-                    bucket[w] = b
-                return b
+        def tok_bucket(w: str) -> int:
+            b = bucket.get(w)
+            if b is None:
+                h = 0
+                for ch in w:
+                    h = (h * HASH_BASE + ord(ch)) % HASH_MOD
+                b = h % dim
+                bucket[w] = b
+            return b
 
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                tok_lists = [fold_space_tokens(x) for x in pdf[text_col]]
-                # the explode in the reference form drops token-less docs
-                keep = [i for i, tl in enumerate(tok_lists) if tl]
-                if not keep:
-                    continue
-                lens = np.fromiter(
-                    (len(tok_lists[i]) for i in keep), dtype=np.int64,
-                    count=len(keep),
-                )
-                total = int(lens.sum())
-                rows = np.repeat(np.arange(len(keep)), lens)
-                flat = np.fromiter(
-                    (tok_bucket(t) for i in keep for t in tok_lists[i]),
-                    dtype=np.int64, count=total,
-                )
-                mat = (
-                    np.bincount(rows * dim + flat, minlength=len(keep) * dim)
-                    .astype(np.float64)
-                    .reshape(len(keep), dim)
-                )
-                # sequential left fold (numpy pairwise kicks in only
-                # above 128 elements); summing the zero squares too
-                # replays the Catalyst aggregate bit for bit
-                norms = np.sqrt(np.sum(mat * mat, axis=1))
-                emb = (mat / norms[:, None]).tolist()
-                yield pd.DataFrame({
-                    id_col: pdf[id_col].iloc[keep].values,
-                    "n_tokens": pd.Series(lens, dtype="int64"),
-                    "embedding": emb,
-                    "l2_norm": pd.Series(norms, dtype="float64"),
-                })
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            tok_lists = [fold_space_tokens(x) for x in pdf[text_col]]
+            # token-less docs have no features: omitted
+            keep = [i for i, tl in enumerate(tok_lists) if tl]
+            if not keep:
+                continue
+            lens = np.fromiter(
+                (len(tok_lists[i]) for i in keep), dtype=np.int64,
+                count=len(keep),
+            )
+            total = int(lens.sum())
+            rows = np.repeat(np.arange(len(keep)), lens)
+            flat = np.fromiter(
+                (tok_bucket(t) for i in keep for t in tok_lists[i]),
+                dtype=np.int64, count=total,
+            )
+            mat = (
+                np.bincount(rows * dim + flat, minlength=len(keep) * dim)
+                .astype(np.float64)
+                .reshape(len(keep), dim)
+            )
+            # sequential left fold (numpy pairwise kicks in only
+            # above 128 elements), zero squares included
+            norms = np.sqrt(np.sum(mat * mat, axis=1))
+            emb = (mat / norms[:, None]).tolist()
+            yield pd.DataFrame({
+                id_col: pdf[id_col].iloc[keep].values,
+                "n_tokens": pd.Series(lens, dtype="int64"),
+                "embedding": emb,
+                "l2_norm": pd.Series(norms, dtype="float64"),
+            })
 
-        return src.mapInPandas(featurize, schema)
-
-    counts = hash_bucket_counts(df, dim, text_col, id_col)
-    per_doc = counts.groupBy(id_col).agg(
-        F.map_from_entries(
-            F.sort_array(F.collect_list(F.struct("_b", "_c")))
-        ).alias("_m"),
-        F.sum("_c").alias("n_tokens"),
-    )
-    # the dense rebuild + norm fold below are interpreted HOFs (~4k ops
-    # per row); AQE coalesces the small per-doc aggregate to ONE
-    # partition, which would serialize them onto one core — scale_out
-    # restores explicit parallelism before the compute-heavy projection
-    per_doc = scale_out(per_doc)
-    dense = F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
-        lambda b: F.coalesce(
-            F.element_at(F.col("_m"), b.cast("bigint")), F.lit(0)
-        ).cast("double"),
-    )
-    withv = per_doc.withColumn("_v", dense)
-    norm = F.sqrt(
-        F.aggregate(F.col("_v"), F.lit(0.0), lambda a, x: a + x * x)
-    )
-    return withv.withColumn("l2_norm", norm).select(
-        F.col(id_col),
-        F.col("n_tokens").cast("bigint").alias("n_tokens"),
-        F.when(
-            F.col("l2_norm") > 0,
-            F.transform(F.col("_v"), lambda x: x / F.col("l2_norm")),
-        ).alias("embedding"),
-        "l2_norm",
-    )
+    return src.mapInPandas(featurize, schema)
 
 
 def hash_feature_classifier(
@@ -1687,7 +1426,6 @@ def hash_feature_classifier(
     id_col: str = "doc_id",
     label_col: str = "label",
     train_col: str = "is_train",
-    engine: str = "pandas",
 ) -> DataFrame:
     """Linear text classifier over hashed bag-of-words features — the
     fastText/CCNet corpus-curation pattern (Joulin et al. 2016;
@@ -1711,11 +1449,14 @@ def hash_feature_classifier(
       (an order-statistic threshold would need a full rank; the mean
       matches its apply accuracy on the test corpora within 1 doc).
 
-    Scale shape: one explode + (doc, bucket) count shuffle; the weight
-    table and both scalar aggregates are broadcast back, so the corpus
-    never re-shuffles after the feature stage. The fixed-point
-    divisions are exact across the full int64 range (decimal-exact
-    floor div Catalyst-side, numpy int64 `//` in the Arrow path), and
+    Scale shape: the sparse per-doc bucket counts come from ONE
+    row-local Arrow ``mapInPandas`` pass (tokenize + memoized char-fold
+    hash + bincount scatter, the hash_embedding pattern) — zero
+    shuffles for the feature stage; the weight table and both scalar
+    aggregates are broadcast back, so the corpus never re-shuffles
+    after it. The fixed-point divisions are exact across the full
+    int64 range (numpy int64 `//` for features, decimal-exact floor
+    div for weights), and
     the two threshold terms — ``Σ train scores`` and ``score·n_train``
     — are DECIMAL(38,0) (:func:`_classifier_threshold` /
     :func:`_calibrated_pred`), so no term anywhere saturates int64 at
@@ -1724,17 +1465,8 @@ def hash_feature_classifier(
     Input must carry ``label_col`` (0/1) and ``train_col`` (0/1).
     Output: one row per document with ≥1 token — (id, is_train,
     label, score, pred).
-
-    ``engine="pandas"`` (default) computes the sparse per-doc bucket
-    counts in ONE Arrow ``mapInPandas`` pass (tokenize + memoized
-    char-fold hash + bincount scatter, the documented hash_embedding
-    fix pattern) — row-local, zero shuffles for the feature stage, and
-    integer-identical to the ``"catalyst"`` explode/dictionary-join
-    reference form (equality-pinned in tests/test_dataops.py).
     """
-    feats = _classifier_feats(
-        df, dim, text_col, id_col, label_col, train_col, engine
-    )
+    feats = _classifier_feats(df, dim, text_col, id_col, label_col, train_col)
     w, scored, thr = _classifier_model(feats, id_col)
     return scored.crossJoin(F.broadcast(thr)).select(
         F.col(id_col),
@@ -1770,7 +1502,6 @@ def _classifier_feats(
     id_col: str,
     label_col: str,
     train_col: str,
-    engine: str,
     checkpoint: bool = True,
 ) -> DataFrame:
     """Sparse labeled fixed-point features (id, _tr, _y, _n, _b, _c,
@@ -1782,111 +1513,86 @@ def _classifier_feats(
     in executor storage, and a decade-scale feature frame evicts them
     — an unrecoverable 'Block rdd_N does not exist' failure, hit at
     10M docs in scale_test section_r9)."""
-    from .hashing import char_fold_hash
+    import numpy as np
+    import pandas as pd
 
-    fp = F.lit(_CLF_FP).cast("bigint")
-    idiv = _clf_idiv
+    from pyspark.sql import types as T
 
-    if engine == "pandas":
-        import numpy as np
-        import pandas as pd
+    from .hashing import char_fold_hash_py
 
-        from pyspark.sql import types as T
+    src = scale_out(df.select(id_col, train_col, label_col, text_col))
+    id_field = [f for f in src.schema.fields if f.name == id_col][0]
+    feat_schema = T.StructType([
+        id_field,
+        T.StructField("_tr", T.LongType(), True),
+        T.StructField("_y", T.LongType(), True),
+        T.StructField("_n", T.LongType(), True),
+        T.StructField("_b", T.LongType(), True),
+        T.StructField("_c", T.LongType(), True),
+        T.StructField("_f", T.LongType(), True),
+    ])
 
-        from .hashing import char_fold_hash_py
+    def featurize(batches):
+        bucket: dict[str, int] = {}
 
-        src = scale_out(df.select(id_col, train_col, label_col, text_col))
-        id_field = [f for f in src.schema.fields if f.name == id_col][0]
-        feat_schema = T.StructType([
-            id_field,
-            T.StructField("_tr", T.LongType(), True),
-            T.StructField("_y", T.LongType(), True),
-            T.StructField("_n", T.LongType(), True),
-            T.StructField("_b", T.LongType(), True),
-            T.StructField("_c", T.LongType(), True),
-            T.StructField("_f", T.LongType(), True),
-        ])
+        def tok_bucket(w: str) -> int:
+            b = bucket.get(w)
+            if b is None:
+                b = char_fold_hash_py(w) % dim
+                bucket[w] = b
+            return b
 
-        def featurize(batches):
-            bucket: dict[str, int] = {}
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            tok_lists = [fold_space_tokens(x) for x in pdf[text_col]]
+            keep = [i for i, tl in enumerate(tok_lists) if tl]
+            if not keep:
+                continue
+            lens = np.fromiter(
+                (len(tok_lists[i]) for i in keep), dtype=np.int64,
+                count=len(keep),
+            )
+            total = int(lens.sum())
+            rows = np.repeat(np.arange(len(keep)), lens)
+            flat = np.fromiter(
+                (tok_bucket(t) for i in keep for t in tok_lists[i]),
+                dtype=np.int64, count=total,
+            )
+            mat = np.bincount(
+                rows * dim + flat, minlength=len(keep) * dim
+            ).reshape(len(keep), dim)
+            di, bi = mat.nonzero()
+            n_di = lens.take(di)
+            c_di = mat[di, bi]
+            yield pd.DataFrame({
+                id_col: pdf[id_col].iloc[keep].values.take(di),
+                # nullable: a NULL split/label (e.g. the derived split of
+                # a NULL id) arrives as NaN and stays NULL — such rows
+                # never train and score with a NULL is_train/label
+                "_tr": pd.Series(
+                    pdf[train_col].iloc[keep].values.take(di),
+                    dtype="Int64",
+                ),
+                "_y": pd.Series(
+                    pdf[label_col].iloc[keep].values.take(di),
+                    dtype="Int64",
+                ),
+                "_n": pd.Series(n_di, dtype="int64"),
+                "_b": pd.Series(bi, dtype="int64"),
+                "_c": pd.Series(c_di, dtype="int64"),
+                # numpy int64 floor division — exact, and c*2^20
+                # stays far under 2^63 (c <= per-doc token count)
+                "_f": pd.Series(
+                    (c_di.astype(np.int64) * _CLF_FP) // n_di,
+                    dtype="int64",
+                ),
+            })
 
-            def tok_bucket(w: str) -> int:
-                b = bucket.get(w)
-                if b is None:
-                    b = char_fold_hash_py(w) % dim
-                    bucket[w] = b
-                return b
-
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                tok_lists = [fold_space_tokens(x) for x in pdf[text_col]]
-                keep = [i for i, tl in enumerate(tok_lists) if tl]
-                if not keep:
-                    continue
-                lens = np.fromiter(
-                    (len(tok_lists[i]) for i in keep), dtype=np.int64,
-                    count=len(keep),
-                )
-                total = int(lens.sum())
-                rows = np.repeat(np.arange(len(keep)), lens)
-                flat = np.fromiter(
-                    (tok_bucket(t) for i in keep for t in tok_lists[i]),
-                    dtype=np.int64, count=total,
-                )
-                mat = np.bincount(
-                    rows * dim + flat, minlength=len(keep) * dim
-                ).reshape(len(keep), dim)
-                di, bi = mat.nonzero()
-                n_di = lens.take(di)
-                c_di = mat[di, bi]
-                yield pd.DataFrame({
-                    id_col: pdf[id_col].iloc[keep].values.take(di),
-                    "_tr": pd.Series(
-                        pdf[train_col].iloc[keep].values.take(di),
-                        dtype="int64",
-                    ),
-                    "_y": pd.Series(
-                        pdf[label_col].iloc[keep].values.take(di),
-                        dtype="int64",
-                    ),
-                    "_n": pd.Series(n_di, dtype="int64"),
-                    "_b": pd.Series(bi, dtype="int64"),
-                    "_c": pd.Series(c_di, dtype="int64"),
-                    # numpy int64 floor division — exact, and c*2^20
-                    # stays far under 2^63 (c <= per-doc token count)
-                    "_f": pd.Series(
-                        (c_di.astype(np.int64) * _CLF_FP) // n_di,
-                        dtype="int64",
-                    ),
-                })
-
-        feats = src.mapInPandas(featurize, feat_schema)
-    else:
-        toks = F.filter(_tokens(F.col(text_col)), lambda t: F.length(t) > 0)
-        n_tok = F.regexp_count(F.col(text_col), F.lit("[^ ]+")).cast("bigint")
-        base = scale_out(df).select(
-            F.col(id_col),
-            F.col(train_col).cast("bigint").alias("_tr"),
-            F.col(label_col).cast("bigint").alias("_y"),
-            n_tok.alias("_n"),
-            F.explode(toks).alias("_tok"),
-        )
-        # char-fold hash once per DISTINCT token (the hash_bucket_counts
-        # vocabulary-dictionary trick — Zipf head makes this cheap)
-        tok_dict = base.select("_tok").distinct().select(
-            "_tok", (char_fold_hash(F.col("_tok")) % dim).alias("_b")
-        )
-        feats = (
-            base.join(F.broadcast(tok_dict), "_tok")
-            .groupBy(id_col, "_tr", "_y", "_n", "_b")
-            .agg(F.count("*").cast("bigint").alias("_c"))
-            .withColumn("_f", idiv(F.col("_c") * fp, F.col("_n")))
-        )
     # feats feeds THREE consumers (weights, scoring, and the threshold
-    # via scored) — without a checkpoint each one re-derives the whole
-    # explode/distinct/agg chain (the q15/curation two-consumer lesson)
-    feats = scale_out(feats)
+    # via scored) — without a checkpoint each one re-runs the Arrow
+    # featurization (the q15/curation two-consumer lesson)
+    feats = scale_out(src.mapInPandas(featurize, feat_schema))
     return feats.localCheckpoint() if checkpoint else feats
 
 
@@ -1971,7 +1677,6 @@ def trained_quality_classifier(
     id_col: str = "doc_id",
     label_col: str = "label",
     train_col: str = "is_train",
-    engine: str = "pandas",
 ) -> DataFrame:
     """Spec-surface form of :func:`hash_feature_classifier`: when the
     input stream carries no label/split columns (the raw documents
@@ -1989,7 +1694,6 @@ def trained_quality_classifier(
         id_col=id_col,
         label_col=label_col,
         train_col=train_col,
-        engine=engine,
     )
 
 
@@ -2041,7 +1745,6 @@ def write_classifier_table(
     id_col: str = "doc_id",
     label_col: str = "label",
     train_col: str = "is_train",
-    engine: str = "pandas",
     mode: str = "overwrite",
 ) -> None:
     """Persist the trained classifier as a tiny parquet artifact — the
@@ -2068,8 +1771,7 @@ def write_classifier_table(
 
     df = _derive_stop_labels(df, text_col, id_col, label_col, train_col)
     lazy_feats = _classifier_feats(
-        df, dim, text_col, id_col, label_col, train_col, engine,
-        checkpoint=False,
+        df, dim, text_col, id_col, label_col, train_col, checkpoint=False,
     )
     spark = df.sparkSession
     tmp = f"{path}_feats_tmp_{_os.getpid()}"
@@ -2132,8 +1834,8 @@ def write_classifier_table(
 def _normalize_kernel():
     """Compiled row-local normalize function — ``text → (text_norm,
     n_tokens_raw, n_tokens_norm)`` replaying :func:`normalize_text`'s
-    semantics exactly (NULL → (None, -1, -1)). The ONE definition the
-    pandas engine and the fused curation pass
+    semantics exactly (NULL → (None, -1, -1)). The ONE definition
+    :func:`normalize_text` and the fused curation pass
     (streaming/curation.py) both call, so the character class can
     never silently diverge between them."""
     import re as _re

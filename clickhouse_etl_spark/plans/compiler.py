@@ -119,20 +119,6 @@ DATAOPS = frozenset({
     "span_dedup_against", "decontaminate_against", "neardup_against",
     "gopher_repetition", "semantic_dedup_against", "scrub_pii_battery",
 })
-# params with no usable default — their absence fails at PARSE time
-# (spec/model.py), not on the first chain run (ADVICE r4 principle)
-REQUIRED_DATAOP_PARAMS = {
-    "dedup_against": ("seen_path",),
-    "classify_against": ("weights_path",),
-    "ann_serve": ("index_path",),
-    "importance_weights": ("target_sources",),
-    "importance_against": ("weights_path",),
-    "line_dedup_against": ("seen_path",),
-    "span_dedup_against": ("seen_path",),
-    "decontaminate_against": ("seen_path",),
-    "neardup_against": ("seen_path",),
-    "semantic_dedup_against": ("seen_path",),
-}
 # Row-local / explode-only ops — no window, no aggregation, no global
 # state — safe as mid-chain transforms under Structured Streaming
 # append mode (upsample_mixture is a row-local hash-gated explode, so
@@ -274,12 +260,14 @@ def resolve_dataop(op: str):
         upsample_mixture,
     )
 
-    def balanced_sample_docs(df, label_col="source", id_col="doc_id", **kw):
+    def balanced_sample_docs(df, label_col="source", id_col="doc_id"):
         # spec-surface defaults follow the documents stream like every
         # other registered op (the library function keeps its vec_id/
         # label embedding-side defaults) — ADVICE r4: a plan declaring
-        # the op without params must not fail only at runtime
-        return balanced_sample(df, label_col=label_col, id_col=id_col, **kw)
+        # the op without params must not fail only at runtime. The
+        # wrapper takes exactly the forwarded function's params, so
+        # parse-time binding (spec/model.py) checks what the op accepts
+        return balanced_sample(df, label_col=label_col, id_col=id_col)
 
     def ann_serve_op(
         df,
@@ -306,7 +294,8 @@ def resolve_dataop(op: str):
         )
 
     def cluster_sample_docs(
-        df, cap=20, n_centroids=16, id_col="doc_id", vec_col="embedding", **kw
+        df, cap=20, n_centroids=16, id_col="doc_id", vec_col="embedding",
+        centroids=None,
     ):
         # documents-stream default: when the stream has no vector
         # column, hash-embed the text first (the docs_hash_embed_topk
@@ -322,7 +311,7 @@ def resolve_dataop(op: str):
             src = df.select(id_col, vec_col)
         sel = cluster_balanced_sample(
             src, cap=cap, n_centroids=n_centroids,
-            id_col=id_col, vec_col=vec_col, **kw
+            id_col=id_col, vec_col=vec_col, centroids=centroids,
         )
         # sel is (cell, n_total, id, sample_rank) — no vector column
         return df.join(sel, id_col)

@@ -5193,12 +5193,7 @@ def docs_curation_v4(spark, sf_dir):
     from .dataops.util import scale_out
 
     docs = _t(spark, sf_dir, "documents")
-    # in-chain the fused Catalyst regex form measures ~0.3s faster at
-    # bench corpus sizes (codegen fusion beats the Arrow boundary below
-    # ~20k docs; interleaved ABBA, CLAUDE.md) — past the crossover a
-    # production chain flips to the default engine="pandas" (4.8x per
-    # doc at 100k)
-    norm = normalize_text(docs, engine="catalyst").select(
+    norm = normalize_text(docs).select(
         "doc_id", "source", F.col("text_norm").alias("text")
     )
     w1 = Window.partitionBy(F.md5("text")).orderBy("doc_id")
@@ -7358,6 +7353,31 @@ _STALE_SIGNED = frozenset({
     # only; gram arrays join back per surviving candidate (the LSH
     # keys-only pattern). Same candidates, same Jaccard; oracle exact:
     "docs_minhash_lsh_pairs",
+    # one implementation per op: each op with two implementations keeps
+    # only its default one (Arrow/pandas; Catalyst for gopher_rules;
+    # fused for the curation stream), so each entry reaching a touched
+    # function runs the plan it ran before — except docs_curation_v4,
+    # whose normalize_text now runs the Arrow pass. _classifier_feats
+    # keeps a NULL split/label NULL instead of failing:
+    "docs_ngram_jaccard_pairs",
+    "docs_ngram_containment_pairs",
+    "docs_dup_clusters",
+    "docs_dup_keep_best",
+    "docs_decontamination",
+    "docs_pipeline_e2e",
+    "docs_curation_v3",
+    "docs_curation_v4",
+    "docs_curation_e2e",
+    "docs_normalize_text",
+    "docs_repetition_signals",
+    "docs_top_terms",
+    "docs_hash_embed_topk",
+    "docs_trained_classifier",
+    "emb_ivf_ann_topk",
+    "emb_pq_ann_topk",
+    "emb_ivf_pq_ann_topk",
+    "emb_cluster_sample",
+    "emb_pq_index_ann_topk",
 })
 
 

@@ -13,6 +13,7 @@ filter -> dedup -> stateless (cmd/glassflow/dedup_component.go:210-225).
 
 from __future__ import annotations
 
+import inspect
 import json
 from dataclasses import dataclass, field as dc_field
 from typing import Any, Optional
@@ -161,18 +162,16 @@ def _parse_transforms(transforms: list[dict], sources: dict[str, dict]) -> None:
             if not op:
                 raise SpecError("dataop transform requires config.op")
             # fail at parse time, not first chain run (lazy import — the
-            # compiler imports this module at load)
-            from ..plans.compiler import DATAOPS, REQUIRED_DATAOP_PARAMS
+            # compiler imports this module at load): bind the params
+            # against the function the chain will call, so an unknown
+            # or missing param is a SpecError, not a mid-run TypeError
+            from ..plans.compiler import resolve_dataop
 
-            if op not in DATAOPS:
-                raise SpecError(f"unknown dataop {op!r}; available: {sorted(DATAOPS)}")
             params = {k: v for k, v in cfg.items() if k != "op"}
-            missing = [p for p in REQUIRED_DATAOP_PARAMS.get(op, ()) if p not in params]
-            if missing:
-                raise SpecError(
-                    f"dataop {op!r} requires config params {missing} "
-                    "(no usable default)"
-                )
+            try:
+                inspect.signature(resolve_dataop(op)).bind(None, **params)
+            except TypeError as e:
+                raise SpecError(f"dataop {op!r} config params: {e}") from None
             slot["dataops"].append(DataopConfig(op=op, params=params))
         elif ttype in ("stateless", "transform"):
             outs = tuple(

@@ -19,6 +19,7 @@ from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators.filter import apply_filter
 from ..operators.transform import apply_transform
@@ -182,6 +183,14 @@ class StreamingPipeline:
         staged: dict[str, DataFrame] = {}
         for src in pipe_sources:
             source_df = sources[src.source_id]
+            ts = ts_cols[src.source_id]
+            if ts in source_df.columns and isinstance(
+                source_df.schema[ts].dataType, T.TimestampNTZType
+            ):
+                # timezone-naive parquet timestamps read as TIMESTAMP_NTZ,
+                # which withWatermark rejects as event time — read them
+                # in the session zone once, before any watermark is set
+                source_df = source_df.withColumn(ts, F.col(ts).cast("timestamp"))
             # schema validation with a DLQ branch: the failure frame runs
             # as its OWN StreamingQuery over the same source (each query
             # keeps independent offsets — the reference's per-operator
@@ -200,12 +209,10 @@ class StreamingPipeline:
                     .start()
                 )
                 self.dlq_queries.append(dq)
-            chain = streaming_source_chain(src, ts_cols[src.source_id])
+            chain = streaming_source_chain(src, ts)
             staged[src.source_id] = chain(source_df)
 
         if self.spec.join is not None:
-            from pyspark.sql import types as T
-
             from .temporal_join import temporal_join_streaming
 
             left = staged[self.spec.join.left.source_id]

@@ -267,18 +267,17 @@ def curation_chain_bench(spark) -> None:
         .add("source", "string")
         .add("ts", "timestamp")
     )
-    # the third variant carries the optional DSIR importance stage in
-    # the SAME fused pass (VERDICT r9 #8); the fourth adds the
+    # the second variant carries the optional DSIR importance stage in
+    # the SAME fused pass (VERDICT r9 #8); the third adds the
     # decontamination probe as the fused chain's FIRST stage (r10) —
     # the full five-stage deployment in ONE StreamingQuery
-    # the fifth variant adds the near-dup band probe after the exact
+    # the fourth variant adds the near-dup band probe after the exact
     # bloom dedup — the full SIX-stage deployment in ONE StreamingQuery
-    for engine, iw, dc, nd in (
-        ("staged", None, None, None),
-        ("fused", None, None, None),
-        ("fused", iw_path, None, None),
-        ("fused", iw_path, dc_path, None),
-        ("fused", iw_path, dc_path, nd_path),
+    for iw, dc, nd in (
+        (None, None, None),
+        (iw_path, None, None),
+        (iw_path, dc_path, None),
+        (iw_path, dc_path, nd_path),
     ):
         best = float("inf")
         for i in range(2):
@@ -286,7 +285,7 @@ def curation_chain_bench(spark) -> None:
             release_ngram_digest_cache()
             release_band_digest_cache()
             tag = f"{'iw' if iw else 'plain'}{'_dc' if dc else ''}{'_nd' if nd else ''}"
-            ckpt = f"{BASE}/curation_ckpt_{engine}_{tag}_{i}"
+            ckpt = f"{BASE}/curation_ckpt_fused_{tag}_{i}"
             shutil.rmtree(ckpt, ignore_errors=True)
             stream = (
                 spark.readStream.schema(schema)
@@ -294,7 +293,7 @@ def curation_chain_bench(spark) -> None:
                 .parquet(docs_dir_ts)
             )
             rolled = curation_rollup_stream(
-                stream, bloom_path, model_path, engine=engine,
+                stream, bloom_path, model_path,
                 importance_path=iw, decontam_path=dc, neardup_path=nd,
             )
             t0 = time.perf_counter()
@@ -311,7 +310,7 @@ def curation_chain_bench(spark) -> None:
             json.dumps(
                 {
                     "metric": "curation_chain_throughput",
-                    "engine": engine
+                    "engine": "fused"
                     + ("+importance" if iw else "")
                     + ("+decontam" if dc else "")
                     + ("+neardup" if nd else ""),

@@ -14,6 +14,14 @@ from clickhouse_etl_spark.dataops.dedup import (
 from clickhouse_etl_spark.dataops.similarity import cosine_topk, lsh_bucket_topk
 from clickhouse_etl_spark.dataops.text import language_id
 from clickhouse_etl_spark.sources.batch import load_table
+from tests.helpers import (
+    as_id_type,
+    band_keys_expr,
+    curation_chain,
+    hostile_docs,
+    required_dataop_params,
+    sort_rows,
+)
 
 
 @pytest.fixture(scope="module")
@@ -665,11 +673,33 @@ def test_pq_encode_codes_in_range(spark, sf_dir):
     for r in out[:50]:
         assert len(r["pq_codes"]) == 8
         assert all(0 <= c < 16 for c in r["pq_codes"])
-    # the Arrow-batched encoder and the pure-Catalyst reference form
-    # must emit bit-identical codes (same fold order, same tie rule)
-    cat = {r["vec_id"]: list(r["pq_codes"])
-           for r in pq_encode(emb, books, engine="catalyst").collect()}
-    assert {r["vec_id"]: list(r["pq_codes"]) for r in out} == cat
+    # exact codes on hand-built vectors: nearest code per subspace by the
+    # sequential squared-L2 fold, EXACT distance ties to the lowest code
+    vecs = spark.createDataFrame(
+        [
+            (0, [0.0, 0.0, 1.0, 1.0]),
+            (1, [1.0, 1.0, 0.0, 0.0]),
+            (2, [0.5, 0.5, 0.5, 0.5]),
+            (3, [2.0, -1.0, 0.25, 0.75]),
+            (4, [0.1, 0.2, 0.3, 0.4]),
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    for books, want in (
+        (
+            [[[0.0, 0.0], [1.0, 1.0], [0.5, 0.5]], [[1.0, 1.0], [0.0, 0.0]]],
+            {0: [0, 0], 1: [1, 1], 2: [2, 0], 3: [2, 0], 4: [0, 1]},
+        ),
+        (
+            [[[0.0, 0.0], [1.0, 1.0]], [[1.0, 0.0], [0.0, 1.0]]],
+            {0: [0, 0], 1: [1, 0], 2: [0, 0], 3: [0, 1], 4: [0, 1]},
+        ),
+    ):
+        got = {
+            r["vec_id"]: list(r["pq_codes"])
+            for r in pq_encode(vecs, books).collect()
+        }
+        assert got == want
 
 
 def test_ivf_pq_topk_recall_vs_brute_force(spark, sf_dir):
@@ -1369,58 +1399,111 @@ def test_hash_embedding_contract(spark, sf_dir):
     }
 
 
-def test_hash_embedding_engines_identical(spark, sf_dir):
-    """The Arrow-batched dense rebuild (default) and the pure-Catalyst
-    reference form must emit BIT-identical embeddings and norms — the
-    numpy path replays the same scatter, the same sequential square
-    fold, and the same single division per weight (pq_encode fix
-    pattern, VERDICT r6 #3)."""
+#: hash_embedding(dim=16) of HOSTILE_DOCS as (doc_id, n_tokens,
+#: {bucket: weight}, l2_norm): token-less and NULL-text rows are
+#: omitted, and each row — including both id-6 rows and both NULL-id
+#: rows — is embedded on its own
+_HOSTILE_HASH_EMBEDDING = [
+    (1, 13, {1: 0.6, 4: 0.4, 5: 0.2, 6: 0.2, 7: 0.2, 12: 0.4, 13: 0.4, 15: 0.2}, 5.0),
+    (10, 3, {4: 0.5773502691896258, 7: 0.5773502691896258, 10: 0.5773502691896258},
+     1.7320508075688772),
+    (5, 3, {9: 0.5773502691896258, 14: 0.5773502691896258, 15: 0.5773502691896258},
+     1.7320508075688772),
+    (6, 10, {0: 0.6859943405700353, 8: 0.5144957554275265, 9: 0.5144957554275265},
+     5.830951894845301),
+    (6, 6, {1: 0.7071067811865476, 2: 0.7071067811865476}, 4.242640687119285),
+    (7, 7, {0: 0.30151134457776363, 1: 0.30151134457776363, 11: 0.6030226891555273,
+            12: 0.30151134457776363, 14: 0.6030226891555273}, 3.3166247903554),
+    (8, 8, {2: 0.5773502691896258, 6: 0.5773502691896258, 12: 0.2886751345948129,
+            13: 0.2886751345948129, 14: 0.2886751345948129, 15: 0.2886751345948129},
+     3.4641016151377544),
+    (9, 8, {2: 0.75, 6: 0.5, 12: 0.25, 13: 0.25, 14: 0.25}, 4.0),
+    (None, 3, {15: 1.0}, 3.0),
+    (None, 8, {2: 0.5773502691896258, 6: 0.5773502691896258, 12: 0.2886751345948129,
+               13: 0.2886751345948129, 14: 0.2886751345948129, 15: 0.2886751345948129},
+     3.4641016151377544),
+]
+
+
+def test_hash_embedding_engines_identical(spark):
+    """hash_embedding's exact rows on hostile input for every id type:
+    the dense vector rebuilt from the bucket scatter, the sequential
+    square fold, and ONE division per weight — every float pinned."""
     from clickhouse_etl_spark.dataops.text import hash_embedding
 
-    docs = load_table(spark, sf_dir, "documents")
-    pan = {
-        r["doc_id"]: (r["n_tokens"], r["embedding"], r["l2_norm"])
-        for r in hash_embedding(docs, dim=64, engine="pandas").collect()
-    }
-    cat = {
-        r["doc_id"]: (r["n_tokens"], r["embedding"], r["l2_norm"])
-        for r in hash_embedding(docs, dim=64, engine="catalyst").collect()
-    }
-    assert pan == cat
+    want = [
+        (i, n, [sparse.get(b, 0.0) for b in range(16)], norm)
+        for i, n, sparse, norm in _HOSTILE_HASH_EMBEDDING
+    ]
+    for id_type in ("bigint", "int", "string"):
+        got = hash_embedding(hostile_docs(spark, id_type), dim=16)
+        assert sort_rows(got.collect()) == sort_rows(as_id_type(want, id_type))
 
 
-def test_shingle_stream_engines_identical(spark, sf_dir):
-    """The Arrow-batched shingle generator (default) and the
-    Catalyst HOF reference form must emit ROW-identical (id, sz, g)
-    streams — the Python generator replays split-on-single-space
-    (empties kept), space-joined n-word windows, and
-    first-occurrence-distinct exactly (pq_encode fix pattern; the HOF
-    projection was ~80% of the pair-engine runtime at sf0.1)."""
+#: (doc_id, sz) -> distinct 5-word shingles of HOSTILE_DOCS: split on
+#: single spaces keeping empties, first-occurrence distinct; docs with
+#: fewer than 5 tokens and NULL text emit nothing
+_HOSTILE_SHINGLES = {
+    (1, 9): ["The quick brown fox jumps", "brown fox jumps over the",
+             "dog and the dog sleeps", "fox jumps over the lazy",
+             "jumps over the lazy dog", "lazy dog and the dog",
+             "over the lazy dog and", "quick brown fox jumps over",
+             "the lazy dog and the"],
+    (10, 3): ["  Leading and trailing", " Leading and trailing ",
+              "Leading and trailing  "],
+    (6, 2): ["a b a b a", "b a b a b"],
+    (6, 6): ["x x y zz aa", "x y y x x", "x y zz aa zz", "y x x y zz",
+             "y y x x y", "y zz aa zz aa"],
+    (7, 3): ["École MIXED case 42 tokens", "İstanbul ΑΣ École MIXED case",
+             "ΑΣ École MIXED case 42"],
+    (8, 4): ["four five six seven eight", "one two three four five",
+             "three four five six seven", "two three four five six"],
+    (9, 4): ["four five six seven nine", "one two three four five",
+             "three four five six seven", "two three four five six"],
+    (None, 4): ["four five six seven eight", "one two three four five",
+                "three four five six seven", "two three four five six"],
+}
+
+
+def test_shingle_stream_engines_identical(spark):
+    """The Arrow shingle stream's exact (id, sz, g) rows on hostile
+    input for every id type, and the composed Jaccard / containment
+    pairs (a NULL id pairs like any other id; sizes are distinct-shingle
+    counts per row)."""
     from clickhouse_etl_spark.dataops.dedup import (
         _shingle_stream,
+        ngram_containment_pairs,
         ngram_jaccard_pairs,
     )
 
-    docs = load_table(spark, sf_dir, "documents")
-    pan = sorted(map(tuple, _shingle_stream(docs, "text", "doc_id", 5).collect()))
-    cat = sorted(
-        map(
-            tuple,
-            _shingle_stream(docs, "text", "doc_id", 5, engine="catalyst").collect(),
-        )
-    )
-    assert pan == cat
-    assert pan, "empty shingle stream on the test corpus"
-    # and the composed pair output stays identical end to end
-    pj = sorted(map(tuple, ngram_jaccard_pairs(docs).collect()))
-    cj = sorted(map(tuple, ngram_jaccard_pairs(docs, engine="catalyst").collect()))
-    assert pj == cj
+    stream = [
+        (i, sz, g) for (i, sz), grams in _HOSTILE_SHINGLES.items() for g in grams
+    ]
+    jac = [
+        (8, 9, 5, 6, 6, 0.7142857142857143),
+        (None, 8, 6, 6, 6, 1.0),
+        (None, 9, 5, 6, 6, 0.7142857142857143),
+    ]
+    con = [
+        (8, 9, 5, 6, 6, 0.8333333333333334),
+        (None, 8, 6, 6, 6, 1.0),
+        (None, 9, 5, 6, 6, 0.8333333333333334),
+    ]
+    for id_type in ("bigint", "int", "string"):
+        docs = hostile_docs(spark, id_type)
+        got = _shingle_stream(docs, "text", "doc_id", 5).collect()
+        assert sort_rows(got) == sort_rows(as_id_type(stream, id_type))
+        for fn, want, thr in (
+            (ngram_jaccard_pairs, jac, 0.3),
+            (ngram_containment_pairs, con, 0.5),
+        ):
+            pairs = fn(docs, n=3, threshold=thr).collect()
+            want = as_id_type(want, id_type, id_cols=(0, 1))
+            assert sort_rows(pairs) == sort_rows(want), (fn.__name__, id_type)
 
 
 def test_shingle_stream_null_and_short_docs(spark):
-    """NULL text drops the row (split(NULL) -> explode drops) and a
-    doc shorter than n words emits no shingles — same as the guarded
-    Catalyst form."""
+    """NULL text and a doc shorter than n words emit no shingles."""
     from clickhouse_etl_spark.dataops.dedup import _shingle_stream
 
     df = spark.createDataFrame(
@@ -1428,16 +1511,18 @@ def test_shingle_stream_null_and_short_docs(spark):
         "doc_id long, text string",
     )
     rows = _shingle_stream(df, "text", "doc_id", 5).collect()
-    assert {r["id"] for r in rows} == {3}
-    cat = _shingle_stream(df, "text", "doc_id", 5, engine="catalyst").collect()
-    assert sorted(map(tuple, rows)) == sorted(map(tuple, cat))
+    assert sorted(map(tuple, rows)) == [
+        (3, 2, "one two three four five"),
+        (3, 2, "two three four five six"),
+    ]
 
 
 def test_simhash_arrow_sigs_identical(spark, sf_dir):
-    """The Arrow SimHash signature stage (pair-generator default) must
-    equal the expression-form simhash() bit for bit — same char-fold
-    hash per word (memoized), same ±1 bit votes, same bit packing —
-    and the banded pair output must be identical end to end."""
+    """The Arrow SimHash signature stage must equal the expression-form
+    simhash() bit for bit — same char-fold hash per word (memoized),
+    same ±1 bit votes, same bit packing. On hostile input the banded
+    pair output is exact for every id type: a NULL id keeps its NULL
+    (and never pairs), each row is its own document."""
     from clickhouse_etl_spark.dataops.dedup import (
         _simhash_sigs_arrow,
         simhash,
@@ -1448,9 +1533,14 @@ def test_simhash_arrow_sigs_identical(spark, sf_dir):
     arrow = sorted(map(tuple, _simhash_sigs_arrow(docs, "text", "doc_id", 32).collect()))
     expr = sorted(map(tuple, simhash(docs).collect()))
     assert arrow == expr
-    pa = sorted(map(tuple, simhash_near_dup_pairs(docs).collect()))
-    pc = sorted(map(tuple, simhash_near_dup_pairs(docs, engine="catalyst").collect()))
-    assert pa == pc
+    for id_type in ("bigint", "int", "string"):
+        h = hostile_docs(spark, id_type)
+        sigs = _simhash_sigs_arrow(h, "text", "doc_id", 32)
+        assert sigs.schema["doc_id"].dataType == h.schema["doc_id"].dataType
+        assert sigs.filter("doc_id IS NULL").count() == 2
+        pairs = simhash_near_dup_pairs(h).collect()
+        want = as_id_type([(8, 9, 1)], id_type, id_cols=(0, 1))
+        assert sort_rows(pairs) == sort_rows(want), id_type
 
 
 def test_cms_overestimates_only_and_merges(spark, sf_dir):
@@ -1735,44 +1825,28 @@ def test_cluster_balanced_sample_cap_and_coverage(spark):
     )
 
 
-@pytest.mark.heavy
-def test_hash_feature_classifier_engines_identical(spark, sf_dir):
-    """The Arrow-batched feature stage must replay the explode/
-    dictionary-join reference form exactly — integer counts, so
-    equality is bitwise across the whole output."""
+def test_hash_feature_classifier_engines_identical(spark):
+    """trained_quality_classifier's exact (id, is_train, label, score,
+    pred) rows on hostile input for every id type. The derived split of
+    a NULL id is NULL: those rows never train and score with a NULL
+    is_train; rows sharing (id, split, label) score as one document
+    (the two NULL-id rows), token-less rows are omitted."""
     from clickhouse_etl_spark.dataops.text import trained_quality_classifier
-    from clickhouse_etl_spark.sources.batch import load_table
 
-    docs = load_table(spark, sf_dir, "documents")
-    rows_a = sorted(
-        tuple(r) for r in trained_quality_classifier(docs).collect()
-    )  # engine defaults to pandas
-    # catalyst reference: the same label/split derivation, engine pinned
-    from pyspark.sql import functions as F
-    from clickhouse_etl_spark.dataops.hashing import affine_hash
-    from clickhouse_etl_spark.dataops.text import (
-        STOPWORDS,
-        SPLIT_A,
-        SPLIT_B,
-        _stop_hits,
-        _tokens,
-        hash_feature_classifier,
-    )
-
-    toks = _tokens(F.col("text"))
-    n_tok = F.regexp_count(F.col("text"), F.lit("[^ ]+")).cast("bigint")
-    labeled = docs.select(
-        F.col("doc_id"),
-        F.col("text"),
-        (
-            affine_hash(F.col("doc_id").cast("bigint"), SPLIT_A, SPLIT_B) % 100 < 80
-        ).cast("int").alias("is_train"),
-        (16 * _stop_hits(toks, STOPWORDS["en"]).cast("bigint") >= n_tok)
-        .cast("int").alias("label"),
-    )
-    ref = hash_feature_classifier(labeled, engine="catalyst")
-    rows_b = sorted(tuple(r) for r in ref.collect())
-    assert rows_a == rows_b
+    want = [
+        (1, 0, 1, 60513547863, 1),
+        (5, 1, 0, -143721184750, 0),
+        (6, 1, 0, -109322129626, 0),
+        (6, 1, 1, 190451286016, 1),
+        (7, 1, 0, -67166971018, 0),
+        (None, None, 0, -148073218048, 0),
+        (8, 1, 0, -47285141504, 0),
+        (9, 1, 0, -17506762752, 0),
+        (10, 1, 1, 183251064150, 1),
+    ]
+    for id_type in ("bigint", "int", "string"):
+        got = trained_quality_classifier(hostile_docs(spark, id_type), dim=16)
+        assert sort_rows(got.collect()) == sort_rows(as_id_type(want, id_type))
 
 
 def test_bloom_table_no_false_negatives_and_fpr(spark, tmp_path):
@@ -1859,14 +1933,14 @@ def test_bloom_merge_equals_rebuild_on_union(spark, tmp_path):
         merge_bloom_tables(spark, [p1, p3], str(tmp_path / "bx"))
 
 
-def test_normalize_text_engines_identical(spark, sf_dir):
-    """The Arrow normalize pass must replay the Catalyst regex chain
-    value-for-value, including the NULL-text (NULL, -1, -1) contract
-    and messy whitespace/punctuation edges."""
+def test_normalize_text_engines_identical(spark):
+    """normalize_text's exact rows on hostile input for every id type:
+    the NULL-text (NULL, -1, -1) contract, messy whitespace and
+    punctuation, non-ASCII letters scrubbed to spaces, and duplicate /
+    NULL ids kept row by row."""
     from clickhouse_etl_spark.dataops.text import normalize_text
-    from clickhouse_etl_spark.sources.batch import load_table
 
-    docs = load_table(spark, sf_dir, "documents")
+    cols = ["doc_id", "text_norm", "n_tokens_raw", "n_tokens_norm"]
     edge = spark.createDataFrame(
         [
             (9001, None),
@@ -1876,16 +1950,34 @@ def test_normalize_text_engines_identical(spark, sf_dir):
             (9005, "---"),
             (9006, "  Leading and trailing  "),
         ],
-        ["doc_id", "text"],
-    ).withColumn("source", F.lit("edge")).withColumn(
-        "lang", F.lit("en")
-    ).withColumn("n_chars", F.length("text").cast("long"))
-    corpus = docs.unionByName(edge.select(*docs.columns))
-    a = sorted(tuple(r) for r in normalize_text(corpus).collect())
-    b = sorted(
-        tuple(r) for r in normalize_text(corpus, engine="catalyst").collect()
+        "doc_id long, text string",
     )
-    assert a == b
+    assert sort_rows(normalize_text(edge).select(cols).collect()) == sort_rows([
+        (9001, None, -1, -1),
+        (9002, "", 0, 0),
+        (9003, "", 0, 0),
+        (9004, "tabs and newlines mixed 42", 3, 5),
+        (9005, "", 1, 0),
+        (9006, "leading and trailing", 3, 3),
+    ])
+    want = [
+        (1, "the quick brown fox jumps over the lazy dog and the dog sleeps", 13, 13),
+        (2, None, -1, -1),
+        (3, "", 0, 0),
+        (4, "", 0, 0),
+        (5, "tabs and newlines mixed 42", 3, 5),
+        (6, "a b a b a b", 6, 6),
+        (6, "x y y x x y zz aa zz aa", 10, 10),
+        (7, "i stanbul cole mixed case 42 tokens", 7, 7),
+        (None, "one two three four five six seven eight", 8, 8),
+        (None, "solo solo solo", 3, 3),
+        (8, "one two three four five six seven eight", 8, 8),
+        (9, "one two three four five six seven nine", 8, 8),
+        (10, "leading and trailing", 3, 3),
+    ]
+    for id_type in ("bigint", "int", "string"):
+        got = normalize_text(hostile_docs(spark, id_type)).select(cols).collect()
+        assert sort_rows(got) == sort_rows(as_id_type(want, id_type)), id_type
 
 
 def test_clf_idiv_exact_across_int64_range(spark):
@@ -1921,15 +2013,14 @@ def test_clf_idiv_exact_across_int64_range(spark):
         assert r["q"] == r["a"] // r["b"], (r["a"], r["b"], r["q"])
 
 
-def test_repetition_signals_engines_identical(spark, sf_dir):
-    """The Arrow per-doc Counter pass must replay the explode/agg
-    expression form value-for-value — including the NULL (-1, -1)
-    contract, single-token docs, tie-broken argmax, and the exact
-    IEEE ratio divisions."""
+def test_repetition_signals_engines_identical(spark):
+    """repetition_signals' exact rows on hostile input for every id
+    type — the NULL (-1, -1) contract, single-token docs, tie-broken
+    argmax (smallest gram), the exact IEEE ratio divisions — and each
+    row scored on its own: the two id-6 rows and the two NULL-id rows
+    keep separate signals (nothing pools across a shared doc_id)."""
     from clickhouse_etl_spark.dataops.text import repetition_signals
-    from clickhouse_etl_spark.sources.batch import load_table
 
-    docs = load_table(spark, sf_dir, "documents")
     edge = spark.createDataFrame(
         [
             (9001, None),
@@ -1939,26 +2030,44 @@ def test_repetition_signals_engines_identical(spark, sf_dir):
             (9005, "x y y x x y"),      # ties: 'x y' vs 'y x' vs 'y y' ... min gram wins
             (9006, "  spaced   out  "),
         ],
-        ["doc_id", "text"],
-    ).withColumn("source", F.lit("edge")).withColumn(
-        "lang", F.lit("en")
-    ).withColumn("n_chars", F.length("text").cast("long"))
-    corpus = docs.unionByName(edge.select(*docs.columns))
-    a = sorted(tuple(r) for r in repetition_signals(corpus).collect())
-    b = sorted(
-        tuple(r) for r in repetition_signals(corpus, engine="catalyst").collect()
+        "doc_id long, text string",
     )
-    assert a == b
+    assert sort_rows(repetition_signals(edge).collect()) == sort_rows([
+        (9001, -1, -1, 0.0, "", 0, 0.0),
+        (9002, 0, 0, 0.0, "", 0, 0.0),
+        (9003, 1, 1, 0.0, "", 0, 0.0),
+        (9004, 6, 2, 0.6666666666666666, "a b", 3, 0.8181818181818182),
+        (9005, 6, 2, 0.6666666666666666, "x y", 2, 0.5454545454545454),
+        (9006, 2, 2, 0.0, "spaced out", 1, 0.625),
+    ])
+    want = [
+        (1, 13, 11, 0.15384615384615385, "The quick", 1, 0.14516129032258066),
+        (2, -1, -1, 0.0, "", 0, 0.0),
+        (3, 0, 0, 0.0, "", 0, 0.0),
+        (4, 0, 0, 0.0, "", 0, 0.0),
+        (5, 3, 3, 0.0, "MIXED?? 42", 1, 0.3333333333333333),
+        (6, 6, 2, 0.6666666666666666, "a b", 3, 0.8181818181818182),
+        (6, 10, 4, 0.6, "x y", 2, 0.2608695652173913),
+        (7, 7, 7, 0.0, "42 tokens", 1, 0.23684210526315788),
+        (None, 8, 8, 0.0, "five six", 1, 0.20512820512820512),
+        (None, 3, 1, 0.6666666666666666, "solo solo", 2, 1.2857142857142858),
+        (8, 8, 8, 0.0, "five six", 1, 0.20512820512820512),
+        (9, 8, 8, 0.0, "five six", 1, 0.21052631578947367),
+        (10, 3, 3, 0.0, "Leading and", 1, 0.4583333333333333),
+    ]
+    for id_type in ("bigint", "int", "string"):
+        got = repetition_signals(hostile_docs(spark, id_type)).collect()
+        assert sort_rows(got) == sort_rows(as_id_type(want, id_type)), id_type
 
 
-def test_top_terms_engines_identical(spark, sf_dir):
-    """Per-doc Counter top-k must replay the explode/agg/rank window
-    form exactly — argmax ties (tf desc, term asc), min_len filter,
-    and NULL/empty docs dropping."""
+def test_top_terms_engines_identical(spark):
+    """top_terms' exact rows on hostile input for every id type —
+    argmax ties (tf desc, term asc), the min_len filter, NULL/empty docs
+    dropping — with each row ranked on its own: the id-6 row whose
+    terms are all shorter than min_len contributes nothing, and the
+    two NULL-id rows rank separately."""
     from clickhouse_etl_spark.dataops.chunking import top_terms
-    from clickhouse_etl_spark.sources.batch import load_table
 
-    docs = load_table(spark, sf_dir, "documents")
     edge = spark.createDataFrame(
         [
             (9001, None),
@@ -1967,16 +2076,26 @@ def test_top_terms_engines_identical(spark, sf_dir):
             (9004, "zz aa zz aa bb bb cc"),    # ties everywhere
             (9005, "solo solo solo"),
         ],
-        ["doc_id", "text"],
-    ).withColumn("source", F.lit("edge")).withColumn(
-        "lang", F.lit("en")
-    ).withColumn("n_chars", F.length("text").cast("long"))
-    corpus = docs.unionByName(edge.select(*docs.columns))
-    a = sorted(tuple(r) for r in top_terms(corpus, k=3).collect())
-    b = sorted(
-        tuple(r) for r in top_terms(corpus, k=3, engine="catalyst").collect()
+        "doc_id long, text string",
     )
-    assert a == b
+    assert sort_rows(top_terms(edge, k=3).collect()) == sort_rows([
+        (9004, "aa", 2, 1), (9004, "bb", 2, 2), (9004, "zz", 2, 3),
+        (9005, "solo", 3, 1),
+    ])
+    want = [
+        (1, "the", 3, 1), (1, "dog", 2, 2), (1, "and", 1, 3),
+        (5, "42", 1, 1), (5, "mixed??", 1, 2), (5, "tabs\tand\nnewlines!", 1, 3),
+        (6, "aa", 2, 1), (6, "zz", 2, 2),
+        (7, "42", 1, 1), (7, "case", 1, 2), (7, "i\u0307stanbul", 1, 3),
+        (None, "eight", 1, 1), (None, "five", 1, 2), (None, "four", 1, 3),
+        (None, "solo", 3, 1),
+        (8, "eight", 1, 1), (8, "five", 1, 2), (8, "four", 1, 3),
+        (9, "five", 1, 1), (9, "four", 1, 2), (9, "nine", 1, 3),
+        (10, "and", 1, 1), (10, "leading", 1, 2), (10, "trailing", 1, 3),
+    ]
+    for id_type in ("bigint", "int", "string"):
+        got = top_terms(hostile_docs(spark, id_type), k=3).collect()
+        assert sort_rows(got) == sort_rows(as_id_type(want, id_type)), id_type
 
 
 def test_digest_cache_invalidates_on_rewrite(spark, sf_dir, tmp_path):
@@ -2094,12 +2213,16 @@ def test_release_bloom_cache_and_rewrite_invalidation(spark, tmp_path):
 
 
 def test_shingle_stream_preserves_id_type(spark):
-    """ADVICE r7: the Arrow shingle engine must carry the input id
+    """ADVICE r7: the Arrow shingle stream must carry the input id
     column's actual type (int32, string) instead of hardcoding long —
-    both engines agree on schema AND values for every id type."""
+    schema AND values, for every id type."""
     from clickhouse_etl_spark.dataops.dedup import _shingle_stream
 
     text = "one two three four five six seven"
+    grams = [
+        "one two three four five", "three four five six seven",
+        "two three four five six",
+    ]
     for id_vals, id_type in [
         ([1, 2], "int"),
         ([10**12, 10**12 + 1], "long"),
@@ -2109,11 +2232,10 @@ def test_shingle_stream_preserves_id_type(spark):
             [(v, text) for v in id_vals],
             f"doc_id {id_type}, text string",
         )
-        a = _shingle_stream(df, "text", "doc_id", 5, engine="pandas")
-        b = _shingle_stream(df, "text", "doc_id", 5, engine="catalyst")
-        assert a.schema["id"].dataType == b.schema["id"].dataType, id_type
-        assert sorted(map(tuple, a.collect())) == sorted(
-            map(tuple, b.collect())
+        a = _shingle_stream(df, "text", "doc_id", 5)
+        assert a.schema["id"].dataType == df.schema["doc_id"].dataType, id_type
+        assert sort_rows(a.collect()) == sort_rows(
+            [(v, 3, g) for v in id_vals for g in grams]
         ), id_type
 
 
@@ -2164,10 +2286,10 @@ def test_classifier_threshold_decimal_past_int64(spark):
 
 @pytest.mark.heavy
 def test_curation_fused_engine_identical(spark, sf_dir, tmp_path):
-    """The fused single-pass curation body must replay the staged
-    3-op composition row-for-row — normalize NULL contract, bloom
-    drop decisions, token-less and all-unseen-bucket drops, exact
-    scores and calibrated preds."""
+    """The fused single-pass curation body must replay the chain of
+    public ops (tests/helpers.curation_chain) row-for-row — normalize
+    NULL contract, bloom drop decisions, token-less and
+    all-unseen-bucket drops, exact scores and calibrated preds."""
     from pyspark.sql import functions as F
 
     from clickhouse_etl_spark.dataops.dedup import (
@@ -2202,21 +2324,17 @@ def test_curation_fused_engine_identical(spark, sf_dir, tmp_path):
     )
     a = sorted(
         tuple(r)
-        for r in curation_scored_stream(
-            corpus, bloom, weights, engine="staged"
-        ).collect()
+        for r in curation_chain(corpus, bloom, weights).collect()
     )
     b = sorted(
         tuple(r)
-        for r in curation_scored_stream(
-            corpus, bloom, weights, engine="fused"
-        ).collect()
+        for r in curation_scored_stream(corpus, bloom, weights).collect()
     )
     assert a == b
     assert a, "curation output must be non-empty"
 
     # VERDICT r9 #8: the optional DSIR importance stage composes into
-    # the same pass — fused == staged incl. iw_tokens/iw_score, and the
+    # the same pass — fused == chained incl. iw_tokens/iw_score, and the
     # survivor set is unchanged (importance scoring never drops a
     # classifier survivor: every scored doc has >= 1 token)
     from clickhouse_etl_spark.dataops.text import write_importance_table
@@ -2232,18 +2350,18 @@ def test_curation_fused_engine_identical(spark, sf_dir, tmp_path):
     corpus2 = corpus.withColumn("source", F.lit("srcX"))
     a2 = sorted(
         tuple(r)
-        for r in curation_scored_stream(
-            corpus2, bloom, weights, engine="staged", importance_path=iw_path
+        for r in curation_chain(
+            corpus2, bloom, weights, importance_path=iw_path
         ).collect()
     )
     b2 = sorted(
         tuple(r)
         for r in curation_scored_stream(
-            corpus2, bloom, weights, engine="fused", importance_path=iw_path
+            corpus2, bloom, weights, importance_path=iw_path
         ).collect()
     )
     assert a2 == b2
-    assert a2, "importance-staged curation output must be non-empty"
+    assert a2, "importance curation output must be non-empty"
     cols2 = curation_scored_stream(
         corpus2, bloom, weights, importance_path=iw_path
     ).columns
@@ -2259,7 +2377,7 @@ def test_curation_fused_engine_identical(spark, sf_dir, tmp_path):
 
     # the optional DECONTAMINATION stage composes into the same pass
     # (r10): persist the n-grams of a benchmark slice of the corpus,
-    # probe on the RAW text — fused == staged with the stage active,
+    # probe on the RAW text — fused == chained with the stage active,
     # every benchmark-colliding doc is gone, the stage strictly
     # shrinks the survivor set, and clean survivors are unchanged
     from clickhouse_etl_spark.dataops.dedup import (
@@ -2273,15 +2391,15 @@ def test_curation_fused_engine_identical(spark, sf_dir, tmp_path):
     )
     a3 = sorted(
         tuple(r)
-        for r in curation_scored_stream(
-            corpus2, bloom, weights, engine="staged",
+        for r in curation_chain(
+            corpus2, bloom, weights,
             importance_path=iw_path, decontam_path=dc_path, decontam_n=5,
         ).collect()
     )
     b3 = sorted(
         tuple(r)
         for r in curation_scored_stream(
-            corpus2, bloom, weights, engine="fused",
+            corpus2, bloom, weights,
             importance_path=iw_path, decontam_path=dc_path, decontam_n=5,
         ).collect()
     )
@@ -2306,7 +2424,7 @@ def test_curation_fused_engine_identical(spark, sf_dir, tmp_path):
 
     # the optional NEAR-dup stage composes into the same pass (third
     # r10 session): register a slice's CANONICAL band keys, probe
-    # text_norm after the exact bloom dedup — fused == staged with the
+    # text_norm after the exact bloom dedup — fused == chained with the
     # stage active, the stage strictly shrinks the survivor set, and
     # the in-chain verdict == the standalone dataop on the same
     # canonical text (composition law)
@@ -2327,18 +2445,14 @@ def test_curation_fused_engine_identical(spark, sf_dir, tmp_path):
     )
     a4 = sorted(
         tuple(r)
-        for r in curation_scored_stream(
-            corpus2, bloom, weights, engine="staged", **kw
-        ).collect()
+        for r in curation_chain(corpus2, bloom, weights, **kw).collect()
     )
     b4 = sorted(
         tuple(r)
-        for r in curation_scored_stream(
-            corpus2, bloom, weights, engine="fused", **kw
-        ).collect()
+        for r in curation_scored_stream(corpus2, bloom, weights, **kw).collect()
     )
     assert a4 == b4
-    assert a4, "near-dup-staged curation output must be non-empty"
+    assert a4, "near-dup curation output must be non-empty"
     assert len(a4) < len(a3), "the near-dup probe must drop colliders"
     nd_clean_ids = {
         r["doc_id"]
@@ -2353,26 +2467,26 @@ def test_curation_fused_engine_identical(spark, sf_dir, tmp_path):
 
 
 def test_shingle_stream_null_id_both_engines(spark):
-    """ADVICE r8: a NULL id must flow through the Arrow shingle engine
-    exactly like the catalyst form (the numpy int dtypes raised on
-    construction; nullable ids now use pandas nullable dtypes)."""
+    """ADVICE r8: a NULL id must flow through the Arrow shingle stream
+    (the numpy int dtypes raised on construction; nullable ids use
+    pandas nullable dtypes) for every id type."""
     from clickhouse_etl_spark.dataops.dedup import _shingle_stream
 
     text = "one two three four five six seven"
+    grams = [
+        "one two three four five", "three four five six seven",
+        "two three four five six",
+    ]
     for id_type in ["int", "long", "string"]:
+        one = "1" if id_type == "string" else 1
         df = spark.createDataFrame(
-            [("1" if id_type == "string" else 1, text), (None, text)],
-            f"doc_id {id_type}, text string",
+            [(one, text), (None, text)], f"doc_id {id_type}, text string"
         )
-        a = _shingle_stream(df, "text", "doc_id", 5, engine="pandas")
-        b = _shingle_stream(df, "text", "doc_id", 5, engine="catalyst")
-        assert a.schema["id"].dataType == b.schema["id"].dataType, id_type
-        from collections import Counter
-
-        ra = Counter(map(tuple, a.collect()))
-        rb = Counter(map(tuple, b.collect()))
-        assert ra == rb, id_type
-        assert any(k[0] is None for k in ra), id_type  # NULL id survived
+        a = _shingle_stream(df, "text", "doc_id", 5)
+        assert a.schema["id"].dataType == df.schema["doc_id"].dataType, id_type
+        assert sort_rows(a.collect()) == sort_rows(
+            [(i, 3, g) for i in (one, None) for g in grams]
+        ), id_type
 
     # review r9: Arrow->pandas converts a nullable int64 column to
     # float64, rounding ids past 2^53 — the non-null-carrier + flag
@@ -2381,12 +2495,7 @@ def test_shingle_stream_null_id_both_engines(spark):
     df = spark.createDataFrame(
         [(big, text), (None, text)], "doc_id long, text string"
     )
-    got = {
-        r["id"]
-        for r in _shingle_stream(
-            df, "text", "doc_id", 5, engine="pandas"
-        ).collect()
-    }
+    got = {r["id"] for r in _shingle_stream(df, "text", "doc_id", 5).collect()}
     assert big in got and None in got, got
 
 
@@ -2431,9 +2540,9 @@ def test_calibrated_pred_product_exact_across_int64():
 
 
 def test_curation_clash_guard_both_engines(spark):
-    """ADVICE r8: the output-column clash guard applies to BOTH
-    engines — staged must reject the same inputs fused does instead of
-    silently overwriting text_norm."""
+    """ADVICE r8: the curation pass rejects an input that already
+    carries one of its output columns instead of silently overwriting
+    text_norm."""
     import pytest as _pytest
 
     from clickhouse_etl_spark.streaming.curation import curation_scored_stream
@@ -2441,9 +2550,8 @@ def test_curation_clash_guard_both_engines(spark):
     df = spark.createDataFrame(
         [(1, "some text", "stale")], ["doc_id", "text", "text_norm"]
     )
-    for engine in ["staged", "fused"]:
-        with _pytest.raises(ValueError, match="already carries"):
-            curation_scored_stream(df, "/nonexistent", "/nonexistent", engine=engine)
+    with _pytest.raises(ValueError, match="already carries"):
+        curation_scored_stream(df, "/nonexistent", "/nonexistent")
 
 
 def test_score_kernel_chunking_identical(spark, monkeypatch):
@@ -2610,11 +2718,12 @@ def test_pq_index_cell_skew_report_and_rebalance(spark, sf_dir, tmp_path):
 
 
 def test_gopher_rules_engines_identical(spark):
-    """The Arrow counter kernel (default, r12) is row-identical to the
-    Catalyst expression battery — real corpus + the edge shapes (null,
-    empty, all-punct, bullet/ellipsis lines, substring-short lines)."""
+    """gopher_rules' exact counters and flags on the edge shapes (null,
+    empty, all-punct, bullet/ellipsis lines, substring-short lines) and
+    on hostile input for every id type. Columns: doc_id, the 8 counters
+    (words, Σlen, symbol words, alpha words, lines, bullet lines,
+    ellipsis lines, required stopwords), the 7 rule flags, pass."""
     from clickhouse_etl_spark.dataops.text import gopher_rules
-    from clickhouse_etl_spark.sources import load_table
 
     edge = spark.createDataFrame(
         [
@@ -2624,18 +2733,34 @@ def test_gopher_rules_engines_identical(spark):
         ],
         "doc_id long, text string",
     )
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents").select(
-        "doc_id", "text"
-    ).unionByName(edge)
-    a = sorted(
-        map(tuple, gopher_rules(docs, engine="pandas").collect()),
-        key=repr,
-    )
-    b = sorted(
-        map(tuple, gopher_rules(docs, engine="catalyst").collect()),
-        key=repr,
-    )
-    assert a == b and len(a) > 8
+    assert sort_rows(gopher_rules(edge).drop("text").collect()) == sort_rows([
+        (100, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 1, 1, 1, 1, 0, 0),
+        (101, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 1, 1, 1, 1, 0, 0),
+        (102, 0, 0, 0, 0, 1, 0, 0, 0, 0, 0, 1, 1, 1, 1, 0, 0),
+        (103, 1, 3, 1, 0, 1, 0, 1, 0, 0, 1, 0, 1, 0, 0, 0, 0),
+        (104, 1, 1, 0, 0, 1, 0, 0, 0, 0, 0, 1, 1, 1, 0, 0, 0),
+        (105, 1, 1, 0, 0, 1, 1, 0, 0, 0, 0, 1, 0, 1, 0, 0, 0),
+        (106, 2, 12, 1, 1, 3, 1, 2, 0, 0, 1, 0, 1, 0, 0, 0, 0),
+        (107, 5, 33, 3, 4, 2, 0, 0, 0, 0, 1, 0, 1, 1, 1, 0, 0),
+    ])
+    want = [
+        (1, 13, 50, 0, 13, 1, 0, 0, 2, 0, 1, 1, 1, 1, 1, 1, 0),
+        (2, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 1, 1, 1, 1, 0, 0),
+        (3, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 1, 1, 1, 1, 0, 0),
+        (4, 0, 0, 0, 0, 1, 0, 0, 0, 0, 0, 1, 1, 1, 1, 0, 0),
+        (5, 3, 27, 0, 2, 2, 0, 0, 0, 0, 1, 1, 1, 1, 0, 0, 0),
+        (6, 6, 6, 0, 6, 1, 0, 0, 0, 0, 0, 1, 1, 1, 1, 0, 0),
+        (6, 10, 14, 0, 10, 1, 0, 0, 0, 0, 0, 1, 1, 1, 1, 0, 0),
+        (7, 7, 33, 0, 5, 1, 0, 0, 0, 0, 1, 1, 1, 1, 0, 0, 0),
+        (None, 8, 32, 0, 8, 1, 0, 0, 0, 0, 1, 1, 1, 1, 1, 0, 0),
+        (None, 3, 12, 0, 3, 1, 0, 0, 0, 0, 1, 1, 1, 1, 1, 0, 0),
+        (8, 8, 32, 0, 8, 1, 0, 0, 0, 0, 1, 1, 1, 1, 1, 0, 0),
+        (9, 8, 31, 0, 8, 1, 0, 0, 0, 0, 1, 1, 1, 1, 1, 0, 0),
+        (10, 3, 18, 0, 3, 1, 0, 0, 1, 0, 1, 1, 1, 1, 1, 0, 0),
+    ]
+    for id_type in ("bigint", "int", "string"):
+        got = gopher_rules(hostile_docs(spark, id_type)).drop("text", "source")
+        assert sort_rows(got.collect()) == sort_rows(as_id_type(want, id_type))
 
 
 def test_gopher_rules_battery(spark):
@@ -3241,9 +3366,10 @@ def test_importance_weights_null_source(spark):
 
 
 def test_importance_weights_engine_equality(spark):
-    """The Arrow scoring pass (default) is value-identical to the
-    catalyst explode/join/groupBy reference form, including null/empty
-    text drops and repeated-token counting (r9 wave 2)."""
+    """importance_weights' exact (id, n_tokens, score) rows — null/empty
+    text drops, repeated-token counting — and on hostile input for every
+    id type, each row scored on its own (the two id-6 rows and the two
+    NULL-id rows keep separate scores)."""
     from clickhouse_etl_spark.dataops.text import importance_weights
 
     rows = [
@@ -3255,14 +3381,20 @@ def test_importance_weights_engine_equality(spark):
         (5, "zzz yyy xxx www", "tgt"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    kw = dict(target_sources=["tgt"], dim=32)
-    a = sorted(
-        map(tuple, importance_weights(df, engine="pandas", **kw).collect())
-    )
-    b = sorted(
-        map(tuple, importance_weights(df, engine="catalyst", **kw).collect())
-    )
-    assert a == b and len(a) == 4  # null/empty text dropped by both
+    got = importance_weights(df, target_sources=["tgt"], dim=32).collect()
+    assert sort_rows(got) == sort_rows([
+        (0, 5, 3710345), (1, 2, 1048576), (4, 50, 2016450), (5, 4, 4194304),
+    ])
+    want = [
+        (1, 13, 9493354), (5, 3, 1954844), (6, 6, 3109980), (6, 10, 3442822),
+        (7, 7, 5348983), (None, 8, 4794622), (None, 3, 2359296),
+        (8, 8, 4794622), (9, 8, 4389490), (10, 3, 2009770),
+    ]
+    for id_type in ("bigint", "int", "string"):
+        got = importance_weights(
+            hostile_docs(spark, id_type), target_sources=["wiki"], dim=16
+        ).collect()
+        assert sort_rows(got) == sort_rows(as_id_type(want, id_type)), id_type
 
 
 def test_importance_table_serve_parity(spark, tmp_path):
@@ -3566,7 +3698,6 @@ def test_neardup_against_lifecycle(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from clickhouse_etl_spark.dataops.dedup import (
-        _band_keys_expr,
         _distinct_band_keys,
         neardup_against_path,
         release_band_digest_cache,
@@ -3603,7 +3734,7 @@ def test_neardup_against_lifecycle(spark, tmp_path):
         r["doc_id"]: len(set(r["keys"]) & w1_keys)
         for r in wave2.select(
             "doc_id",
-            _band_keys_expr(F.col("text"), 3, 8, 2).alias("keys"),
+            band_keys_expr(F.col("text"), 3, 8, 2).alias("keys"),
         ).collect()
     }
     assert expected[10] == 4  # identical text -> all k/rows_per_band bands
@@ -3642,18 +3773,15 @@ def test_neardup_against_lifecycle(spark, tmp_path):
 
 
 def test_neardup_band_catalyst_python_parity(spark):
-    """The Catalyst band-key derivation the artifact writers use
-    (_band_keys_expr: single-space split keeping empties, guarded
-    sliding windows, distinct, char-fold, affine minima, "{i}:{v}_{v}"
-    keys) produces EXACTLY the keys the Python probe kernel replays —
-    the decontam parity rule at band grain, on short/empty/null/
-    multi-space edges."""
+    """The Catalyst band-key reference (band_keys_expr, composed from
+    the pair miner's own signature: single-space split keeping empties,
+    guarded sliding windows, distinct, char-fold, affine minima,
+    "{i}:{v}_{v}" keys) produces EXACTLY the keys the Python probe
+    kernel replays — the decontam parity rule at band grain, on
+    short/empty/null/multi-space edges."""
     from pyspark.sql import functions as F
 
-    from clickhouse_etl_spark.dataops.dedup import (
-        _band_keys_expr,
-        _neardup_probe_kernel,
-    )
+    from clickhouse_etl_spark.dataops.dedup import _neardup_probe_kernel
 
     texts = [
         "the quick brown fox jumps over the lazy dog",
@@ -3669,7 +3797,7 @@ def test_neardup_band_catalyst_python_parity(spark):
     catalyst = {
         r["i"]: list(r["keys"])
         for r in df.select(
-            "i", _band_keys_expr(F.col("text"), 3, 8, 2).alias("keys")
+            "i", band_keys_expr(F.col("text"), 3, 8, 2).alias("keys")
         ).collect()
     }
 
@@ -3998,10 +4126,12 @@ def test_lsh_geometry_tuning_helpers():
 
 
 def test_band_keys_engines_identical(spark):
-    """The Arrow write path (default, _band_keys_py — the probe's own
-    kernel) and the Catalyst reference form (_band_keys_expr) derive
-    the IDENTICAL distinct band-key set, on short/empty/null/
-    multi-space edges and real-looking text."""
+    """The Arrow write path (_band_keys_py — the probe's own kernel)
+    and the Catalyst reference form (band_keys_expr) derive the
+    IDENTICAL distinct band-key set, on short/empty/null/multi-space
+    edges and real-looking text."""
+    from pyspark.sql import functions as F
+
     from clickhouse_etl_spark.dataops.dedup import _distinct_band_keys
 
     texts = [
@@ -4015,15 +4145,14 @@ def test_band_keys_engines_identical(spark):
         "repeat repeat repeat repeat repeat",
     ]
     df = spark.createDataFrame([(t,) for t in texts], "text string")
-    a = {
-        r["band"]
-        for r in _distinct_band_keys(df, "text", 3, 8, 2, engine="pandas").collect()
-    }
+    a = {r["band"] for r in _distinct_band_keys(df, "text", 3, 8, 2).collect()}
     b = {
         r["band"]
-        for r in _distinct_band_keys(df, "text", 3, 8, 2, engine="catalyst").collect()
+        for r in df.select(
+            F.explode(band_keys_expr(F.col("text"), 3, 8, 2)).alias("band")
+        ).collect()
     }
-    assert a == b and a, "engines diverged or produced nothing"
+    assert a == b and a, "kernel and reference diverged or produced nothing"
 
 
 @pytest.mark.heavy
@@ -4171,13 +4300,12 @@ def test_vec_dedup_against_guards(spark, tmp_path):
     )
     from clickhouse_etl_spark.plans.compiler import (
         DATAOPS,
-        REQUIRED_DATAOP_PARAMS,
         STREAM_SAFE_DATAOPS,
     )
 
     assert "semantic_dedup_against" in DATAOPS
     assert "semantic_dedup_against" in STREAM_SAFE_DATAOPS
-    assert REQUIRED_DATAOP_PARAMS["semantic_dedup_against"] == ("seen_path",)
+    assert required_dataop_params("semantic_dedup_against") == ("seen_path",)
 
     vecs = spark.createDataFrame(
         [(0, [float(i) for i in range(8)])],

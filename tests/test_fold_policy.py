@@ -1,12 +1,12 @@
 """The ONE case-fold policy (VERDICT r10 #4): `dataops/fold.py` is the
-single Python fold definition, its engine-agreement contract is
+single Python fold definition, its fold-agreement contract is
 MEASURED and pinned here — including the non-ASCII corners the four
 kernel families used to document separately with nothing pinned.
 
 Measured reality the policy encodes:
 - Python ``str.lower()`` == Spark ``lower()`` on the full Unicode
-  special-casing set ('İ', final sigma, titlecase digraphs) — so the
-  kernel<->Catalyst engine swaps are fold-safe beyond ASCII;
+  special-casing set ('İ', final sigma, titlecase digraphs) — so a
+  Python kernel and a Catalyst expression fold alike beyond ASCII;
 - DuckDB ``lower()`` is simple-mapping only — so ORACLE-backed outputs
   rely on folding only for ASCII input (the declared subset).
 """
@@ -107,7 +107,7 @@ def test_word_token_family_matches_catalyst_beyond_ascii(spark):
 
 
 def test_decontam_write_probe_parity_beyond_ascii(spark, tmp_path):
-    """End-to-end engine-pair parity on non-ASCII text: an eval doc
+    """End-to-end Catalyst/Python parity on non-ASCII text: an eval doc
     registered through the CATALYST artifact writer is caught by the
     PYTHON probe kernel on an identical (and a case-variant) training
     doc — the cross-engine property the shared fold guarantees."""
@@ -137,23 +137,27 @@ def test_decontam_write_probe_parity_beyond_ascii(spark, tmp_path):
 
 
 def test_normalize_engines_agree_beyond_ascii(spark):
-    """normalize_text's pandas and catalyst engines stay equal on
-    non-ASCII rows (the ASCII-class scrub makes even the DuckDB-
-    divergent fold corners collapse identically: divergent characters
-    are non-[a-z0-9 ] on every engine and scrub to spaces)."""
+    """normalize_text's exact rows on non-ASCII input: the ASCII-class
+    scrub makes even the DuckDB-divergent fold corners collapse the
+    same way (divergent characters are non-[a-z0-9 ] and scrub to
+    spaces), so the canonical text is fold-policy independent."""
     rows = [(i, c) for i, c in enumerate(CASES + ["İ MIXED ΑΣ case 42"])]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     from clickhouse_etl_spark.dataops.text import normalize_text
 
-    a = {
+    got = {
         r["doc_id"]: (r["text_norm"], r["n_tokens_raw"], r["n_tokens_norm"])
-        for r in normalize_text(df, engine="pandas").collect()
+        for r in normalize_text(df).collect()
     }
-    b = {
-        r["doc_id"]: (r["text_norm"], r["n_tokens_raw"], r["n_tokens_norm"])
-        for r in normalize_text(df, engine="catalyst").collect()
+    scrubbed = ("", 1, 0)
+    assert got == {
+        0: ("i", 1, 1), 1: ("i", 1, 1), 2: scrubbed, 3: scrubbed,
+        4: scrubbed, 5: scrubbed, 6: ("ungla", 1, 1), 7: scrubbed,
+        8: ("cole", 1, 1), 9: scrubbed, 10: scrubbed, 11: scrubbed,
+        12: ("a", 1, 1), 13: ("abcxyz", 1, 1), 14: scrubbed, 15: scrubbed,
+        16: scrubbed, 17: ("i stanbul ba", 2, 3), 18: ("mix cole end", 4, 3),
+        19: ("i mixed case 42", 5, 4),
     }
-    assert a == b
 
 
 def test_fold_py_is_the_only_python_lower_site():

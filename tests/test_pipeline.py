@@ -13,6 +13,7 @@ import pytest
 
 from clickhouse_etl_spark.plans import compile_pipeline
 from clickhouse_etl_spark.spec import parse_pipeline_json
+from tests.helpers import curation_chain, required_dataop_params
 
 V3_DOC = {
     "version": "v3",
@@ -168,6 +169,51 @@ def test_dataop_transforms_in_spec(spark):
     from clickhouse_etl_spark.spec.model import SpecError
     with _pytest.raises(SpecError, match="unknown dataop"):
         parse_pipeline_json(bad)
+
+
+def test_dataop_params_bound_at_parse_time():
+    """A dataop param the op's function does not accept — e.g. a saved
+    spec that still sets ``engine`` — and a missing no-default param
+    both fail at PARSE time with a SpecError naming the param, instead
+    of a TypeError on the first chain run."""
+    import inspect
+
+    import pytest as _pytest
+
+    from clickhouse_etl_spark.dataops.similarity import (
+        balanced_sample,
+        cluster_balanced_sample,
+    )
+    from clickhouse_etl_spark.plans.compiler import resolve_dataop
+    from clickhouse_etl_spark.spec.model import SpecError
+
+    def _doc(cfg):
+        return {
+            "version": "v3", "pipeline_id": "p", "name": "n",
+            "sources": [{"type": "kafka", "source_id": "documents",
+                         "topic": "documents"}],
+            "transforms": [{"type": "dataop", "source_id": "documents",
+                            "config": cfg}],
+            "sink": {"type": "clickhouse", "table": "t"},
+        }
+
+    with _pytest.raises(SpecError, match="engine"):
+        parse_pipeline_json(_doc({"op": "normalize_text", "engine": "catalyst"}))
+    with _pytest.raises(SpecError, match="seen_path"):
+        parse_pipeline_json(_doc({"op": "dedup_against"}))
+    ok = parse_pipeline_json(_doc({"op": "normalize_text", "text_col": "body"}))
+    assert ok.source("documents").dataops[0].params == {"text_col": "body"}
+
+    # the documents-default wrappers accept exactly the params of the
+    # function they forward to
+    for op, target in (
+        ("balanced_sample", balanced_sample),
+        ("cluster_sample", cluster_balanced_sample),
+    ):
+        wrapper = list(inspect.signature(resolve_dataop(op)).parameters)[1:]
+        assert wrapper == list(inspect.signature(target).parameters)[1:], op
+    with _pytest.raises(SpecError, match="cap"):
+        parse_pipeline_json(_doc({"op": "balanced_sample", "cap": 3}))
 
 
 def test_streaming_chain_applies_stream_safe_dataops(spark, tmp_path):
@@ -783,8 +829,8 @@ def test_six_stage_curation_chain_from_one_pipeline_json(spark, tmp_path):
     thesis) — decontaminate → normalize → bloom dedup → near-dup probe
     → classifier → DSIR importance, each stage bound to its persisted
     artifact path — assembles into the one StreamingQuery and
-    equality-pins against curation_scored_stream(engine='staged') on
-    the same wave."""
+    equality-pins against the chain of public ops
+    (tests/helpers.curation_chain) on the same wave."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -802,7 +848,6 @@ def test_six_stage_curation_chain_from_one_pipeline_json(spark, tmp_path):
         write_importance_table,
     )
     from clickhouse_etl_spark.sources import load_table
-    from clickhouse_etl_spark.streaming.curation import curation_scored_stream
     from clickhouse_etl_spark.streaming.runner import streaming_source_chain
 
     corpus = (
@@ -846,9 +891,8 @@ def test_six_stage_curation_chain_from_one_pipeline_json(spark, tmp_path):
     )
     truth = sorted(
         tuple(r)
-        for r in curation_scored_stream(
-            spark.read.parquet(wave_dir), bloom, weights,
-            engine="staged", **stage_kw,
+        for r in curation_chain(
+            spark.read.parquet(wave_dir), bloom, weights, **stage_kw
         ).collect()
     )
     assert truth, "the six-stage wave must have survivors"
@@ -1277,7 +1321,6 @@ def test_line_dedup_against_on_spec_surface(spark, tmp_path):
     from clickhouse_etl_spark.dataops.dedup import write_line_digest_table
     from clickhouse_etl_spark.plans.compiler import (
         DATAOPS,
-        REQUIRED_DATAOP_PARAMS,
         STREAM_SAFE_DATAOPS,
         resolve_dataop,
     )
@@ -1287,7 +1330,7 @@ def test_line_dedup_against_on_spec_surface(spark, tmp_path):
 
     assert "line_dedup_against" in DATAOPS
     assert "line_dedup_against" in STREAM_SAFE_DATAOPS
-    assert REQUIRED_DATAOP_PARAMS["line_dedup_against"] == ("seen_path",)
+    assert required_dataop_params("line_dedup_against") == ("seen_path",)
 
     def _doc(cfg):
         return _json.dumps({
@@ -1351,7 +1394,7 @@ def test_line_dedup_against_on_spec_surface(spark, tmp_path):
     from clickhouse_etl_spark.dataops.dedup import write_span_digest_table
 
     assert "span_dedup_against" in STREAM_SAFE_DATAOPS
-    assert REQUIRED_DATAOP_PARAMS["span_dedup_against"] == ("seen_path",)
+    assert required_dataop_params("span_dedup_against") == ("seen_path",)
     with _pytest.raises(SpecError, match="seen_path"):
         parse_pipeline_json(_doc({"op": "span_dedup_against"}))
     span_seen = str(tmp_path / "seen_spans")
@@ -1380,7 +1423,6 @@ def test_importance_weights_on_spec_surface(spark):
 
     from clickhouse_etl_spark.plans.compiler import (
         DATAOPS,
-        REQUIRED_DATAOP_PARAMS,
         STREAM_SAFE_DATAOPS,
         resolve_dataop,
     )
@@ -1388,7 +1430,7 @@ def test_importance_weights_on_spec_surface(spark):
 
     assert "importance_weights" in DATAOPS
     assert "importance_weights" not in STREAM_SAFE_DATAOPS
-    assert REQUIRED_DATAOP_PARAMS["importance_weights"] == ("target_sources",)
+    assert required_dataop_params("importance_weights") == ("target_sources",)
     import json as _json
 
     from clickhouse_etl_spark.spec import parse_pipeline_json
@@ -1509,7 +1551,6 @@ def test_decontaminate_against_on_spec_surface(spark, tmp_path):
     from clickhouse_etl_spark.dataops.dedup import write_ngram_digest_table
     from clickhouse_etl_spark.plans.compiler import (
         DATAOPS,
-        REQUIRED_DATAOP_PARAMS,
         STREAM_SAFE_DATAOPS,
         resolve_dataop,
     )
@@ -1519,7 +1560,7 @@ def test_decontaminate_against_on_spec_surface(spark, tmp_path):
 
     assert "decontaminate_against" in DATAOPS
     assert "decontaminate_against" in STREAM_SAFE_DATAOPS
-    assert REQUIRED_DATAOP_PARAMS["decontaminate_against"] == ("seen_path",)
+    assert required_dataop_params("decontaminate_against") == ("seen_path",)
 
     def _doc(cfg):
         return _json.dumps({
@@ -1602,7 +1643,6 @@ def test_neardup_against_on_spec_surface(spark, tmp_path):
     from clickhouse_etl_spark.dataops.dedup import write_band_digest_table
     from clickhouse_etl_spark.plans.compiler import (
         DATAOPS,
-        REQUIRED_DATAOP_PARAMS,
         STREAM_SAFE_DATAOPS,
         resolve_dataop,
     )
@@ -1612,7 +1652,7 @@ def test_neardup_against_on_spec_surface(spark, tmp_path):
 
     assert "neardup_against" in DATAOPS
     assert "neardup_against" in STREAM_SAFE_DATAOPS
-    assert REQUIRED_DATAOP_PARAMS["neardup_against"] == ("seen_path",)
+    assert required_dataop_params("neardup_against") == ("seen_path",)
 
     def _doc(cfg):
         return _json.dumps({

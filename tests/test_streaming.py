@@ -264,6 +264,72 @@ def test_streaming_pipeline_end_to_end(spark, tmp_path):
     assert rows[0]["id"] == "u1" and rows[0]["name"] == "Alice" and rows[0]["email"] == "a@x.com"
 
 
+def test_streaming_pipeline_accepts_ntz_event_time(spark, tmp_path):
+    """Timezone-naive parquet timestamps (no UTC flag) read as
+    TIMESTAMP_NTZ, which withWatermark rejects as event time. The
+    pipeline reads them in the session zone, so a dedup + temporal-join
+    pipeline over NTZ parquet drains with availableNow and joins."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    base_us = 1_704_103_200_000_000  # 2024-01-01T10:00:00
+    paths = {}
+    for name, cols in (
+        ("left", {"id": pa.array(["u1", "u1"]), "name": pa.array(["Alice", "Alice"]),
+                  "lts": pa.array([base_us + 1_000_000] * 2, pa.timestamp("us"))}),
+        ("right", {"id": pa.array(["u1"]), "email": pa.array(["a@x.com"]),
+                   "rts": pa.array([base_us], pa.timestamp("us"))}),
+    ):
+        d = tmp_path / f"ntz_{name}"
+        d.mkdir()
+        pq.write_table(pa.table(cols), str(d / "p.parquet"))
+        paths[name] = str(d)
+    sources = {
+        n: spark.readStream.schema(spark.read.parquet(p).schema).parquet(p)
+        for n, p in paths.items()
+    }
+    assert isinstance(sources["left"].schema["lts"].dataType, T.TimestampNTZType)
+    doc = {
+        "version": "v3", "pipeline_id": "ntz", "name": "ntz",
+        "sources": [
+            {"type": "kafka", "source_id": "left", "topic": "left",
+             "schema_fields": [{"name": "id", "type": "string"},
+                               {"name": "name", "type": "string"}]},
+            {"type": "kafka", "source_id": "right", "topic": "right",
+             "schema_fields": [{"name": "id", "type": "string"},
+                               {"name": "email", "type": "string"}]},
+        ],
+        "transforms": [{"type": "dedup", "source_id": "left",
+                        "config": {"key": "name", "time_window": "1h"}}],
+        "join": {
+            "enabled": True, "type": "temporal",
+            "left_source": {"source_id": "left", "key": "id", "time_window": "1h"},
+            "right_source": {"source_id": "right", "key": "id", "time_window": "1h"},
+            "output_fields": [
+                {"source_id": "left", "name": "id"},
+                {"source_id": "left", "name": "name"},
+                {"source_id": "right", "name": "email"},
+            ],
+        },
+        "sink": {"type": "clickhouse", "table": "out", "max_delay_time": "1s"},
+    }
+    sink = ClickHouseSink(table="out", parquet_fallback_path=str(tmp_path / "sink_ntz"))
+    pipe = StreamingPipeline(
+        spec=parse_pipeline_json(json.dumps(doc)),
+        checkpoint_dir=str(tmp_path / "ckpt_ntz"),
+    )
+    q = pipe.start(
+        spark, sources=sources, ts_cols={"left": "lts", "right": "rts"},
+        sink_fn=sink.foreach_batch(), trigger={"availableNow": True},
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    rows = spark.read.parquet(str(tmp_path / "sink_ntz")).collect()
+    assert [(r["id"], r["name"], r["email"]) for r in rows] == [
+        ("u1", "Alice", "a@x.com")
+    ]
+
+
 def test_streaming_dlq_branch(spark, tmp_path):
     """Per-operator DLQ middleware in streaming: malformed payloads land
     in the DLQ table while valid rows flow to the sink
@@ -372,55 +438,6 @@ def test_metrics_listener_captures_progress(spark, tmp_path):
         assert snap["batches"] >= 1
     finally:
         spark.streams.removeListener(listener)
-
-
-def test_temporal_join_tws_semantics(spark, tmp_path):
-    """Same golden scenario as the applyInPandasWithState variant, on the
-    Spark 4 transformWithStateInPandas API."""
-    from clickhouse_etl_spark.streaming.temporal_join_tws import HAS_TWS, temporal_join_tws
-
-    if not HAS_TWS:
-        pytest.skip("transformWithStateInPandas unavailable")
-
-    base = ts("2024-01-01T10:00:00")
-    left_rows = [
-        ("u1", "Alice", base),
-        ("u2", "Bob", base + dt.timedelta(seconds=1)),
-        ("u3", "Carol", base),
-    ]
-    right_rows = [
-        ("u1", "old@x.com", base + dt.timedelta(milliseconds=200)),
-        ("u1", "new@x.com", base + dt.timedelta(milliseconds=500)),
-        ("u2", "bob@x.com", base + dt.timedelta(milliseconds=300)),
-    ]
-    lpath = _write_stream_input(spark, str(tmp_path), "left", left_rows, LEFT_SCHEMA)
-    rpath = _write_stream_input(spark, str(tmp_path), "right", right_rows, RIGHT_SCHEMA)
-    left = spark.readStream.schema(LEFT_SCHEMA).parquet(lpath)
-    right = spark.readStream.schema(RIGHT_SCHEMA).parquet(rpath)
-    out_schema = T.StructType(
-        [
-            T.StructField("id", T.StringType()),
-            T.StructField("name", T.StringType()),
-            T.StructField("email", T.StringType()),
-        ]
-    )
-    joined = temporal_join_tws(
-        left, right, _join_cfg(), left_ts="lts", right_ts="rts", output_schema=out_schema
-    )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("tws_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_tws"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    rows = {(r["id"], r["name"], r["email"]) for r in spark.sql("SELECT * FROM tws_out").collect()}
-    assert ("u1", "Alice", "old@x.com") in rows
-    assert ("u2", "Bob", "bob@x.com") in rows
-    assert not any(r[0] == "u3" for r in rows)
-    assert len(rows) == 2
 
 
 def test_stream_stream_join_all_matches(spark, tmp_path):
