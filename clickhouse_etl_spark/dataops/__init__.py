@@ -22,15 +22,12 @@ from .dedup import (
     ngram_containment_pairs,
     dedup_against_path,
     exact_dedup,
-    release_ngram_digest_cache,
     write_ngram_bloom_table,
     write_ngram_digest_table,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     line_dedup,
     line_dedup_against_path,
-    release_line_digest_cache,
-    release_span_digest_cache,
     sentence_span_dedup,
     simhash,
     snapshot_diff,
@@ -54,6 +51,7 @@ from .similarity import (
     pq_index_query,
     truncate_renorm,
 )
+from .util import release_artifact_cache
 from .text import (
     bigram_pmi,
     doc_fingerprint,
@@ -77,13 +75,10 @@ __all__ = [
     "dedup_against",
     "dedup_against_path",
     "decontaminate_against_path",
-    "release_ngram_digest_cache",
     "write_ngram_bloom_table",
     "write_ngram_digest_table",
     "line_dedup",
     "line_dedup_against_path",
-    "release_line_digest_cache",
-    "release_span_digest_cache",
     "sentence_span_dedup",
     "span_dedup_against_path",
     "write_span_bloom_table",
@@ -92,6 +87,7 @@ __all__ = [
     "write_line_bloom_table",
     "write_line_digest_table",
     "snapshot_diff",
+    "release_artifact_cache",
     "cosine_topk",
     "embedding_near_dup_pairs",
     "ivf_pq_topk",

@@ -16,7 +16,15 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .hashing import MINHASH_COEFFS, affine_hash, char_fold_hash
-from .util import scale_out
+from .util import (
+    arrow_key_pass,
+    cached_artifact,
+    check_geometry,
+    per_row,
+    read_geometry,
+    scale_out,
+    write_geometry,
+)
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -702,14 +710,13 @@ def dedup_against_path(
     seen_path: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    cache_static: bool = True,
-    seen_format: str = "digests",
 ) -> DataFrame:
     """Spec-surface / stream-safe form of :func:`dedup_against`: the
-    seen corpus comes from a parquet path (JSON-declarable), either a
-    documents table (digested on ``text_col``) or a precomputed digest
-    table (single ``digest`` column — ship digests, not text, between
-    ingest waves).
+    seen corpus comes from a parquet path (JSON-declarable). The
+    artifact names its format (:func:`_artifact_format`): a documents table
+    (digested on ``text_col``), a precomputed digest table (single
+    ``digest`` column — ship digests, not text, between ingest waves),
+    or a :func:`write_bloom_table` bitmap.
 
     Batch: full :func:`dedup_against` (cross-wave anti-join + within-
     batch first-wins). Streaming: the cross-wave anti-join only — a
@@ -719,100 +726,41 @@ def dedup_against_path(
     (``dropDuplicatesWithinWatermark``), keeping this op row-local and
     append-safe (VERDICT r4 #7).
 
-    ``cache_static=True`` (default) persists the distinct digest set on
-    the STREAMING path: Structured Streaming re-executes the static
-    side of a stream-static join on EVERY micro-batch, so an uncached
-    seen set re-reads and re-distincts per batch — negligible on local
-    disk at test scale (A/B best-of-2 measured parity), material when
-    the digest table lives on object storage or holds billions of
-    digests. The cache is the digest set — orders of magnitude smaller
-    than the corpus by construction; pass False for a digest table too
-    large for cluster cache (it then degrades to per-batch reads,
-    never to wrong results).
+    The streaming path caches the distinct digest set
+    (:func:`~clickhouse_etl_spark.dataops.util.cached_artifact`):
+    Structured Streaming re-executes the static side of a stream-static
+    join on EVERY micro-batch, so an uncached seen set would re-read
+    and re-distinct per batch — material when the digest table lives
+    on object storage or holds billions of digests. Repeat calls for
+    the same path reuse the cached frame; a rewrite or append rotates
+    it; :func:`~clickhouse_etl_spark.dataops.util.release_artifact_cache`
+    frees it when a wave completes.
 
-    Cache LIFETIME (ADVICE r6): caches are registered per
-    ``seen_path`` — repeat calls for the same path REUSE the cached
-    frame instead of stacking a second copy, and a long session that
-    cycles through many waves should call
-    :func:`release_digest_cache` (one path or all) when a wave
-    completes; otherwise retired digest sets stay in executor storage
-    for the session's lifetime.
-
-    ``seen_format="bloom"`` points ``seen_path`` at a
-    :func:`write_bloom_table` artifact instead: the probe becomes one
-    row-local Arrow pass against the closure-shipped bitmap (no join
-    at all — the 100-TB tier where even the digest table is too big to
-    ship), followed by the same within-batch first-wins half on the
-    batch path. Seen documents still always drop; ~FPR of fresh
-    documents drop with them (declared bits/key trade).
+    A bloom artifact makes the probe one row-local Arrow pass against
+    the broadcast bitmap (no join at all — the 100-TB tier where even
+    the digest table is too big to ship), followed by the same
+    within-batch first-wins half on the batch path. Seen documents
+    still always drop; ~FPR of fresh documents drop with them (declared
+    bits/key trade).
     """
     spark = df.sparkSession
-    if seen_format == "bloom":
+    fmt = _artifact_format(spark, seen_path, "document")
+    if fmt == "bloom":
         survivors = dedup_against_bloom_path(df, seen_path, text_col, id_col)
-        if df.isStreaming:
-            return survivors
-        return exact_dedup_keep(survivors, text_col=text_col, id_col=id_col)
-    if seen_format != "digests":
-        raise ValueError(f"unknown seen_format {seen_format!r}: digests|bloom")
-    seen_raw = spark.read.parquet(seen_path)
-    if "digest" in seen_raw.columns:
-        seen = seen_raw.select(F.col("digest").alias("_h")).distinct()
     else:
-        seen = seen_raw.select(_content_digest(text_col).alias("_h")).distinct()
-    if df.isStreaming:
-        if cache_static:
-            # keyed by (path, file listing): a wave that REWRITES the
-            # digest table at the same path produces new part files
-            # (overwrite and append both change the listing), so a
-            # stale cached seen-set is detected and dropped instead of
-            # silently anti-joining against old digests (ADVICE r7)
-            sig = tuple(sorted(seen_raw.inputFiles()))
-            entry = _DIGEST_CACHES.get(seen_path)
-            if entry is not None and entry[0] != sig:
-                entry[1].unpersist()
-                entry = None
-            if entry is None:
-                entry = (sig, seen.cache())
-                _DIGEST_CACHES[seen_path] = entry
-            seen = entry[1]
-        return (
+        seen_raw = spark.read.parquet(seen_path)
+        h = F.col("digest") if fmt == "digests" else _content_digest(text_col)
+        seen = seen_raw.select(h.alias("_h")).distinct()
+        if df.isStreaming:
+            seen = cached_artifact(spark, seen_path, [seen_path], seen.cache)
+        survivors = (
             df.withColumn("_h", _content_digest(text_col))
             .join(seen, "_h", "left_anti")
             .drop("_h")
         )
-    survivors = (
-        df.withColumn("_h", _content_digest(text_col))
-        .join(seen, "_h", "left_anti")
-        .drop("_h")
-    )
+    if df.isStreaming:
+        return survivors
     return exact_dedup_keep(survivors, text_col=text_col, id_col=id_col)
-
-
-#: streaming static-digest caches keyed by seen_path, valued
-#: (file-listing signature, cached frame) — see
-#: :func:`dedup_against_path` (cache lifetime + staleness) and
-#: :func:`release_digest_cache`
-_DIGEST_CACHES: dict = {}
-
-
-def release_digest_cache(seen_path: str | None = None) -> int:
-    """Unpersist the static digest cache for ``seen_path`` (or ALL
-    cached digest sets when None) — call when an ingest wave completes
-    so retired seen sets don't occupy executor storage for the session
-    lifetime. Returns the number of caches released. Safe to call for
-    a path that was never cached."""
-    paths = (
-        [seen_path]
-        if seen_path is not None
-        else list(_DIGEST_CACHES)
-    )
-    released = 0
-    for p in paths:
-        entry = _DIGEST_CACHES.pop(p, None)
-        if entry is not None:
-            entry[1].unpersist()
-            released += 1
-    return released
 
 
 def write_digest_table(
@@ -916,17 +864,16 @@ def write_bloom_table(
     writing a second wave with ``mode="append"`` would leave two rows
     per overlapping (shard, word_idx) and the loader's plain row
     assignment then clobbers one wave's bits (silent FALSE NEGATIVES)
-    — so ``append`` is rejected here at the base writer too (ADVICE
-    r10 #2 promoted the docstring warning: the grain wrappers already
-    rejected it, but a direct caller could still hit the footgun).
-    Write each wave to its own path and OR-merge.
+    — so ``append`` is rejected here, for every grain wrapper too
+    (ADVICE r10 #2). Write each wave to its own path and OR-merge.
     """
     if mode == "append":
         raise ValueError(
             "write_bloom_table cannot append in place — bloom rows "
             "from two waves would clobber each other's bits at load "
             "time (false negatives); write each wave to its own path "
-            "and OR-merge with merge_bloom_tables"
+            "and OR-merge with merge_bloom_tables (merge_band_bloom_tables "
+            "for band artifacts)"
         )
     m, coeffs = _bloom_params(capacity, bits_per_key, n_hashes, n_shards)
     # materialize the key hash ONCE per row before fanning out — the
@@ -1019,123 +966,173 @@ def merge_bloom_tables(spark, paths: list[str], out_path: str, mode: str = "over
     )
 
 
-#: bloom bitmap broadcast caches keyed by seen_path, valued
-#: (file-listing signature, broadcast, m, n_hashes, n_shards) — repeat
-#: per-wave probes in one session reuse the executor-resident bitmap
-#: instead of stacking a new ~0.5 GB broadcast per call (ADVICE r7);
-#: see :func:`release_bloom_cache`
-_BLOOM_CACHES: dict = {}
-
 #: refuse to materialize a dense probe bitmap larger than this many
 #: bytes across all shards — a mis-declared capacity should fail loud
 #: at plan build, not slowly strain executors (VERDICT r7 nit); callers
 #: with genuinely huge seen-sets pass max_bitmap_bytes explicitly
 _BLOOM_BITMAP_MAX_BYTES = 1 << 30
 
+#: refuse to broadcast an exact digest set larger than this many keys
+#: (~0.6 GB of Python set at 10M) — a bigger seen-set should move to
+#: the bloom tier, not strain executors; callers who accept the
+#: footprint pass max_broadcast_digests
+_DIGEST_MAX_KEYS = 10_000_000
 
-def release_bloom_cache(seen_path: str | None = None) -> int:
-    """Unpersist the broadcast bloom bitmap for ``seen_path`` (or ALL
-    cached bitmaps when None) — the bloom mirror of
-    :func:`release_digest_cache`. Returns the number released."""
-    paths = (
-        [seen_path]
-        if seen_path is not None
-        else list(_BLOOM_CACHES)
+
+def _artifact_format(spark, seen_path: str, grain: str) -> str:
+    """The format a seen-set artifact names by its parquet schema — the
+    ONE place a probe decides it: a ``word_idx`` column is a
+    :func:`write_bloom_table` bitmap ("bloom"), a ``digest`` column an
+    exact digest set ("digests"); at the document grain any other table
+    is a raw documents table ("documents", digested on the probe's
+    text column by :func:`dedup_against_path`)."""
+    cols = spark.read.parquet(seen_path).columns
+    if "word_idx" in cols:
+        return "bloom"
+    if "digest" in cols:
+        return "digests"
+    if grain == "document":
+        return "documents"
+    raise ValueError(
+        f"{grain} seen-set at {seen_path!r} is neither a bloom table "
+        "(word_idx column) nor a digest table (digest column)"
     )
-    released = 0
-    for p in paths:
-        entry = _BLOOM_CACHES.pop(p, None)
-        if entry is not None:
-            entry[1].unpersist()
-            released += 1
-    return released
 
 
-def _bloom_broadcast(spark, seen_path: str, max_bitmap_bytes: int | None = None):
-    """(broadcast dense bitmap, m, n_hashes, n_shards) for the
-    :func:`write_bloom_table` artifact at ``seen_path`` — cached per
-    path (``_BLOOM_CACHES``), invalidated when the artifact's parquet
-    file listing changes, released via :func:`release_bloom_cache`.
-    Shared by :func:`dedup_against_bloom_path` and the fused curation
-    pass (streaming/curation.py)."""
+def _load_bloom(spark, seen_path: str, check):
+    """(dense-bitmap bytes, broadcast bitmap, m, n_hashes, n_shards)
+    for the bloom table at ``seen_path``; ``check(bytes)`` runs before
+    the dense bitmap is materialized."""
     import numpy as np
 
-    seen_raw = spark.read.parquet(seen_path)
-    sig = tuple(sorted(seen_raw.inputFiles()))
-    entry = _BLOOM_CACHES.get(seen_path)
-    if entry is not None and entry[0] != sig:
-        entry[1].unpersist()
-        entry = None
-    if entry is None:
-        rows = seen_raw.collect()
-        if not rows:
-            raise ValueError(
-                f"bloom table at {seen_path!r} is empty — write it with "
-                "write_bloom_table first"
-            )
-        # a single distinct geometry across the artifact rows — a
-        # mode='append' write with a different capacity would otherwise
-        # mix m values the probe silently misreads, breaking the
-        # no-false-negative guarantee (ADVICE r7; merge_bloom_tables
-        # already asserts this)
-        metas = {
-            (
-                int(r["m"]),
-                int(r["n_hashes"]),
-                int(r["n_shards"]) if "n_shards" in r.asDict() else 1,
-            )
-            for r in rows
-        }
-        if len(metas) != 1:
-            raise ValueError(
-                f"bloom table at {seen_path!r} mixes geometries "
-                f"{sorted(metas)} — rebuild or merge_bloom_tables with "
-                "one (m, n_hashes, n_shards)"
-            )
-        m, k, n_shards = next(iter(metas))
-        first = rows[0].asDict()
-        sharded = "shard" in first
-        words_per_shard = m // _BLOOM_WORD_BITS + 1
-        total_bytes = n_shards * words_per_shard * 8
-        cap = (
-            max_bitmap_bytes
-            if max_bitmap_bytes is not None
-            else _BLOOM_BITMAP_MAX_BYTES
-        )
-        if total_bytes > cap:
-            raise ValueError(
-                f"dense bloom bitmap would materialize {total_bytes} bytes "
-                f"across {n_shards} shard(s) (> {cap}); the declared "
-                "capacity is likely mis-sized — shrink it, or pass "
-                "max_bitmap_bytes to accept the footprint"
-            )
-        words = np.zeros((n_shards, words_per_shard), dtype=np.int64)
-        for r in rows:
-            words[int(r["shard"]) if sharded else 0, int(r["word_idx"])] = int(
-                r["word"]
-            )
-        # ship the bitmap ONCE per executor, not once per task closure —
-        # at the per-shard m <= 2^31 cap the dense array can reach
-        # ~0.5 GB per shard; cache per seen_path so repeated waves reuse
-        # it (release_bloom_cache frees it)
-        entry = (sig, spark.sparkContext.broadcast(words), m, k, n_shards)
-        _BLOOM_CACHES[seen_path] = entry
-    _, bc_words, m, k, n_shards = entry
-    # enforce the caller's cap on cache HITS too — a permissive first
-    # call must not grandfather an oversized bitmap past a later,
-    # stricter caller
-    cached_bytes = n_shards * (m // _BLOOM_WORD_BITS + 1) * 8
-    cap = (
-        max_bitmap_bytes if max_bitmap_bytes is not None else _BLOOM_BITMAP_MAX_BYTES
-    )
-    if cached_bytes > cap:
+    rows = spark.read.parquet(seen_path).collect()
+    if not rows:
         raise ValueError(
-            f"dense bloom bitmap is {cached_bytes} bytes across "
-            f"{n_shards} shard(s) (> {cap}); the declared capacity is "
-            "likely mis-sized — shrink it, or pass max_bitmap_bytes to "
-            "accept the footprint"
+            f"bloom table at {seen_path!r} is empty — write it with "
+            "write_bloom_table first"
         )
-    return bc_words, m, k, n_shards
+    # a single distinct geometry across the artifact rows — a legacy
+    # in-place append with a different capacity would otherwise mix m
+    # values the probe silently misreads, breaking the
+    # no-false-negative guarantee (ADVICE r7; merge_bloom_tables
+    # asserts the same)
+    sharded = "shard" in rows[0].asDict()
+    metas = {
+        (
+            int(r["m"]),
+            int(r["n_hashes"]),
+            int(r["n_shards"]) if sharded else 1,
+        )
+        for r in rows
+    }
+    if len(metas) != 1:
+        raise ValueError(
+            f"bloom table at {seen_path!r} mixes geometries "
+            f"{sorted(metas)} — rebuild or merge_bloom_tables with "
+            "one (m, n_hashes, n_shards)"
+        )
+    m, k, n_shards = next(iter(metas))
+    words_per_shard = m // _BLOOM_WORD_BITS + 1
+    size = n_shards * words_per_shard * 8
+    check(size)
+    words = np.zeros((n_shards, words_per_shard), dtype=np.int64)
+    for r in rows:
+        words[int(r["shard"]) if sharded else 0, int(r["word_idx"])] = int(
+            r["word"]
+        )
+    # ship the bitmap ONCE per executor, not once per task closure — at
+    # the per-shard m <= 2^31 cap the dense array can reach ~0.5 GB per
+    # shard
+    return size, spark.sparkContext.broadcast(words), m, k, n_shards
+
+
+def _load_digests(spark, seen_path: str, check):
+    """(distinct-key count, broadcast frozenset of 16-byte digests) for
+    the digest table at ``seen_path``; ``check(count)`` runs before the
+    set is collected."""
+    distinct = spark.read.parquet(seen_path).select("digest").distinct()
+    # the broadcast set is the DISTINCT digest set (append-mode waves
+    # overlap by design), so the cap counts distinct keys, not raw
+    # parquet rows
+    check(distinct.count())
+    digests = frozenset(bytes.fromhex(r["digest"]) for r in distinct.collect())
+    return len(digests), spark.sparkContext.broadcast(digests)
+
+
+def _seen_probe_factory(
+    spark,
+    seen_path: str,
+    grain: str,
+    max_bitmap_bytes: int | None = None,
+    max_broadcast_digests: int | None = None,
+):
+    """The seen-set loader: a zero-arg factory producing a ``key → bool``
+    probe for the bloom or digest artifact at ``seen_path``, whose
+    format the artifact names (:func:`_artifact_format`). Every probe op
+    and the fused curation pass load through here. The loaded bitmap or
+    digest set is cached per path
+    (:func:`~clickhouse_etl_spark.dataops.util.cached_artifact`), and
+    the size cap is checked on EVERY call — a permissive first call
+    must not grandfather an oversized artifact past a later, stricter
+    caller. ``grain`` labels the messages. Call the factory INSIDE the
+    Arrow generator so each task builds its own kernel from the
+    broadcast value."""
+    fmt = _artifact_format(spark, seen_path, grain)
+    if fmt == "bloom":
+        cap = (
+            _BLOOM_BITMAP_MAX_BYTES if max_bitmap_bytes is None
+            else max_bitmap_bytes
+        )
+        load = _load_bloom
+        what, fix = "bytes of dense bloom bitmap", (
+            "the declared capacity is likely mis-sized — shrink it, or "
+            "pass max_bitmap_bytes to accept the footprint"
+        )
+    elif grain == "document":
+        raise ValueError(
+            f"document seen-set at {seen_path!r} is a {fmt} table — "
+            "dedup_against_path anti-joins those; the row-local probe "
+            "needs a write_bloom_table artifact"
+        )
+    else:
+        cap = (
+            _DIGEST_MAX_KEYS if max_broadcast_digests is None
+            else max_broadcast_digests
+        )
+        load = _load_digests
+        what, fix = "distinct digests", (
+            "too large to broadcast exactly; "
+            + (f"use the bloom tier (write_{grain}_bloom_table), or "
+               if grain != "bucket" else "shard the waves, or ")
+            + "pass max_broadcast_digests to accept the footprint"
+        )
+
+    def check(size: int) -> None:
+        if size > cap:
+            raise ValueError(
+                f"{grain} seen-set at {seen_path!r} holds {size} {what} "
+                f"(> {cap}) — {fix}"
+            )
+
+    size, bc, *geom = cached_artifact(
+        spark, seen_path, [seen_path], lambda: load(spark, seen_path, check)
+    )
+    check(size)
+    if fmt == "bloom":
+        m, k, n_shards = geom
+        return lambda: _bloom_probe_kernel(bc.value, m, k, n_shards)
+
+    def make_probe():
+        import hashlib
+
+        seen_set = bc.value
+
+        def seen(key: str) -> bool:
+            return hashlib.md5(key.encode("utf-8")).digest() in seen_set
+
+        return seen
+
+    return make_probe
 
 
 def dedup_against_bloom_path(
@@ -1149,36 +1146,58 @@ def dedup_against_bloom_path(
     :func:`write_bloom_table` artifact — the row-local half of the
     100-TB digest lifecycle: the bitmap loads ONCE at plan build
     (bounded by the DECLARED capacity: m/32 words ≈ 40 KB per 100k
-    keys) and ships in the task closure, so probing is one Arrow
-    ``mapInPandas`` pass with no join, no shuffle, and no state —
-    stream-safe under append mode.
+    keys) and ships as a broadcast, so probing is one Arrow pass with
+    no join, no shuffle, and no state — stream-safe under append mode.
 
     Guarantees: every previously-seen document drops (no false
     negatives — dup leaks are impossible); ~FPR of genuinely fresh
     documents drop with it (the declared bits/key trade). The Python
     md5/char-fold replay is bit-identical to the Catalyst build
     expressions (pinned by test)."""
-    bc_words, m, k, n_shards = _bloom_broadcast(
-        df.sparkSession, seen_path, max_bitmap_bytes
+    make_probe = _seen_probe_factory(
+        df.sparkSession, seen_path, "document", max_bitmap_bytes
     )
-    in_cols = [f.name for f in df.schema.fields]
-    tcol = text_col
+    return _drop_or_flag(df, text_col, [], lambda count: make_probe())
 
-    def survivors(batches):
-        seen = _bloom_probe_kernel(bc_words.value, m, k, n_shards)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            keep = [i for i, x in enumerate(pdf[tcol]) if not seen(x)]
-            if keep:
-                yield pdf.iloc[keep][in_cols]
 
-    return df.mapInPandas(survivors, df.schema)
+def _flag_columns(df: DataFrame, action: str, flag_col: str, count_col: str, op: str):
+    """The columns a drop|flag seen-set probe appends — none for
+    ``drop``; (``flag_col`` boolean, ``count_col`` bigint) for
+    ``flag``, which must not already be in the input."""
+    from pyspark.sql.types import BooleanType, LongType
+
+    if action not in ("drop", "flag"):
+        raise ValueError(f"unknown action {action!r}: drop|flag")
+    if action == "drop":
+        return []
+    for c in (flag_col, count_col):
+        if c in df.columns:
+            raise ValueError(
+                f"input already has a {c!r} column — rename it before {op}"
+            )
+    return [(flag_col, BooleanType()), (count_col, LongType())]
+
+
+def _drop_or_flag(df: DataFrame, key_col: str, added, make_kernel) -> DataFrame:
+    """ONE Arrow pass of a whole-row seen-set verdict.
+    ``make_kernel(count)`` returns the row check: with no ``added``
+    columns (drop) it is an early-exit boolean and hit rows drop; with
+    the two :func:`_flag_columns` (flag) it returns the hit count and
+    every row stays, flagged."""
+    flag = bool(added)
+
+    def make_fn():
+        check = make_kernel(flag)
+        if flag:
+            return per_row(lambda x: ((n := check(x)) > 0, n))
+        return per_row(lambda x: None if check(x) else ())
+
+    return arrow_key_pass(df, key_col, make_fn, added)
 
 
 def _bloom_probe_kernel(wd, m: int, k: int, n_shards: int):
     """Compiled row-local membership test against a resolved dense
-    bitmap (the ``.value`` of a :func:`_bloom_broadcast` broadcast) —
+    bitmap (the broadcast value :func:`_load_bloom` ships) —
     ``text → bool`` replaying the build expressions bit for bit
     (md5 of ``text or ''`` → char fold → k affine positions). The ONE
     definition :func:`dedup_against_bloom_path` and the fused curation
@@ -1576,19 +1595,11 @@ def write_line_bloom_table(
     lifecycle, for corpora whose distinct-line set is too large to
     broadcast as exact digests (size ``capacity`` to the true distinct
     LINE count). Cross-wave accumulation is :func:`merge_bloom_tables`
-    ONLY — in-place ``mode="append"`` is rejected (two waves' sparse
-    bitmap rows clobber each other's bits at load time: silent false
-    negatives; the band-tier lesson). Probe via
-    ``line_dedup_against_path(..., seen_format="bloom")``. No false
+    ONLY — :func:`write_bloom_table` rejects in-place ``mode="append"``.
+    :func:`line_dedup_against_path` probes it like the digest table
+    (the artifact names its format). No false
     negatives: a seen line always drops; ~FPR of fresh lines drop with
     it (bits/key trade, declared)."""
-    if mode == "append":
-        raise ValueError(
-            "bloom tables cannot append in place — rows from two waves "
-            "clobber each other's bits at load time (false negatives); "
-            "write each wave to its own path and OR-merge with "
-            "merge_bloom_tables"
-        )
     write_bloom_table(
         _distinct_lines(df, text_col),
         path,
@@ -1601,157 +1612,10 @@ def write_line_bloom_table(
     )
 
 
-#: exact line-digest broadcast caches keyed by seen_path, valued
-#: (file-listing signature, broadcast frozenset of 16-byte digests) —
-#: the line-grain mirror of _BLOOM_CACHES; see
-#: :func:`release_line_digest_cache`
-_LINE_DIGEST_CACHES: dict = {}
-
-#: refuse to broadcast an exact line-digest set larger than this many
-#: keys (~0.6 GB of Python set at 10M) — a bigger seen-set should move
-#: to the bloom tier (write_line_bloom_table), not strain executors;
-#: callers who accept the footprint pass max_broadcast_digests
-_LINE_DIGEST_MAX_KEYS = 10_000_000
-
-
-def release_line_digest_cache(seen_path: str | None = None) -> int:
-    """Unpersist the broadcast line-digest set for ``seen_path`` (or
-    ALL when None) — the line-grain mirror of
-    :func:`release_digest_cache` / :func:`release_bloom_cache`.
-    Returns the number released."""
-    paths = (
-        [seen_path]
-        if seen_path is not None
-        else list(_LINE_DIGEST_CACHES)
-    )
-    released = 0
-    for p in paths:
-        entry = _LINE_DIGEST_CACHES.pop(p, None)
-        if entry is not None:
-            entry[1].unpersist()
-            released += 1
-    return released
-
-
-def _line_digest_broadcast(
-    spark,
-    seen_path: str,
-    max_broadcast_digests: int | None = None,
-    grain: str = "line",
-):
-    """Broadcast frozenset of 16-byte digests for a
-    :func:`write_line_digest_table` / :func:`write_span_digest_table`
-    artifact at ``seen_path`` — cached per path, invalidated when the
-    artifact's parquet file listing changes (a wave appending or
-    rewriting the table rotates the cache), released via
-    :func:`release_line_digest_cache` (alias
-    :func:`release_span_digest_cache`). ``grain`` labels the fail-loud
-    messaging so a span-grain caller is pointed at the span-grain
-    bloom writer."""
-    seen_raw = spark.read.parquet(seen_path)
-    sig = tuple(sorted(seen_raw.inputFiles()))
-    entry = _LINE_DIGEST_CACHES.get(seen_path)
-    if entry is not None and entry[0] != sig:
-        entry[1].unpersist()
-        entry = None
-    if entry is None:
-        cap = (
-            max_broadcast_digests
-            if max_broadcast_digests is not None
-            else _LINE_DIGEST_MAX_KEYS
-        )
-        # the broadcast set is the DISTINCT digest set (append-mode
-        # waves overlap by design — 'overlap between appends is
-        # harmless'), so the cap must count distinct keys, not raw
-        # parquet rows; the distinct is the same one the collect pays
-        n = seen_raw.select("digest").distinct().count()
-        if n > cap:
-            raise ValueError(
-                f"{grain}-digest table at {seen_path!r} holds {n} "
-                f"distinct digests (> {cap}) — too large to broadcast "
-                f"exactly; use the bloom tier (write_{grain}_bloom_table "
-                "+ seen_format='bloom'), or pass max_broadcast_digests "
-                "to accept the footprint"
-            )
-        digests = frozenset(
-            bytes.fromhex(r["digest"])
-            for r in seen_raw.select("digest").distinct().collect()
-        )
-        entry = (sig, spark.sparkContext.broadcast(digests))
-        _LINE_DIGEST_CACHES[seen_path] = entry
-    # enforce the caller's cap on cache HITS too — a permissive first
-    # call must not grandfather an oversized set past a later, stricter
-    # caller (the r8 bloom-cache rule; the driver holds the broadcast
-    # value, so len() is free)
-    cap = (
-        max_broadcast_digests
-        if max_broadcast_digests is not None
-        else _LINE_DIGEST_MAX_KEYS
-    )
-    if len(entry[1].value) > cap:
-        raise ValueError(
-            f"{grain}-digest table at {seen_path!r} holds "
-            f"{len(entry[1].value)} distinct digests (> {cap}) — too "
-            f"large to broadcast exactly; use the bloom tier "
-            f"(write_{grain}_bloom_table + seen_format='bloom'), or "
-            "pass max_broadcast_digests to accept the footprint"
-        )
-    return entry[1]
-
-
-#: span-grain alias — line- and span-digest broadcasts share one cache
-#: (keyed by artifact path), so one release function serves both; the
-#: alias keeps span-grain call sites self-describing
-release_span_digest_cache = release_line_digest_cache
-
-
-def _seen_probe_factory(
-    spark,
-    seen_path: str,
-    seen_format: str,
-    max_bitmap_bytes: int | None,
-    max_broadcast_digests: int | None,
-    grain: str = "line",
-):
-    """A zero-arg factory producing a ``key_string → bool`` seen-probe
-    for a digest-table or bloom artifact — the ONE closure-shipping
-    definition the line-grain and span-grain probes share (``grain``
-    labels the digest tier's fail-loud messaging). Call the factory
-    INSIDE the Arrow generator so each task builds its own kernel from
-    the broadcast value."""
-    if seen_format == "bloom":
-        bc_words, m, k, n_shards = _bloom_broadcast(
-            spark, seen_path, max_bitmap_bytes
-        )
-
-        def make_probe():
-            return _bloom_probe_kernel(bc_words.value, m, k, n_shards)
-
-    elif seen_format == "digests":
-        bc = _line_digest_broadcast(
-            spark, seen_path, max_broadcast_digests, grain=grain
-        )
-
-        def make_probe():
-            import hashlib
-
-            seen_set = bc.value
-
-            def seen(key: str) -> bool:
-                return hashlib.md5(key.encode("utf-8")).digest() in seen_set
-
-            return seen
-
-    else:
-        raise ValueError(f"unknown seen_format {seen_format!r}: digests|bloom")
-    return make_probe
-
-
 def line_dedup_against_path(
     df: DataFrame,
     seen_path: str,
     text_col: str = "text",
-    seen_format: str = "digests",
     max_bitmap_bytes: int | None = None,
     max_broadcast_digests: int | None = None,
 ) -> DataFrame:
@@ -1781,66 +1645,50 @@ def line_dedup_against_path(
       ``line_dedup(union)`` restricted to wave-2 docs ==
       ``line_dedup(line_dedup_against_path(wave2, digests(wave1)))``.
 
-    Scale shape: ONE row-local Arrow ``mapInPandas`` pass — no join,
-    no shuffle, no state — with the seen-set in the task closure:
-    ``seen_format="digests"`` broadcasts the exact 16-byte digest set
-    (bounded by ``max_broadcast_digests``, default 10M keys — the
-    exact tier), ``seen_format="bloom"`` probes a
-    :func:`write_line_bloom_table` bitmap via the shared
-    :func:`_bloom_probe_kernel` (the 100-TB tier: bits-per-line
-    instead of 16 bytes; seen lines still always drop, ~FPR of fresh
-    lines drop with them). Append-safe under Structured Streaming.
+    Scale shape: ONE row-local Arrow pass — no join, no shuffle, no
+    state — with the seen-set broadcast; the artifact names its format:
+    a :func:`write_line_digest_table` broadcasts the exact 16-byte
+    digest set (bounded by ``max_broadcast_digests``, default 10M keys
+    — the exact tier), a :func:`write_line_bloom_table` bitmap probes
+    via the shared :func:`_bloom_probe_kernel` (the 100-TB tier:
+    bits-per-line instead of 16 bytes; seen lines still always drop,
+    ~FPR of fresh lines drop with them). Append-safe under Structured
+    Streaming.
 
     Reference deployment shape preserved: the probe composes mid-chain
     in the one StreamingQuery like every row-local stage
     (streaming_component.go:289-360 — transform slots between source
     and sink).
     """
-    spark = df.sparkSession
     if "n_lines_kept" in df.columns:
         raise ValueError(
             "input already has an 'n_lines_kept' column — rename it "
             "before line_dedup_against"
         )
     make_probe = _seen_probe_factory(
-        spark, seen_path, seen_format, max_bitmap_bytes, max_broadcast_digests
+        df.sparkSession, seen_path, "line", max_bitmap_bytes,
+        max_broadcast_digests,
     )
 
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    in_cols = [f.name for f in df.schema.fields]
-    schema = StructType(
-        list(df.schema.fields) + [StructField("n_lines_kept", LongType())]
-    )
-    tcol = text_col
-
-    def gen(batches):
-        import pandas as pd
-
+    def make_fn():
         probe = make_probe()
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            keep_idx, texts, counts = [], [], []
-            for i, t in enumerate(pdf[tcol]):
-                lines = [
-                    li
-                    for li in (t if t is not None else "").split("\n")
-                    if li and not probe(li)
-                ]
-                if lines:
-                    keep_idx.append(i)
-                    texts.append("\n".join(lines))
-                    counts.append(len(lines))
-            if keep_idx:
-                out = pdf.iloc[keep_idx][in_cols].copy()
-                out[tcol] = texts
-                out["n_lines_kept"] = pd.Series(
-                    counts, dtype="int64", index=out.index
-                )
-                yield out
 
-    return df.mapInPandas(gen, schema)
+        def row(t):
+            lines = [
+                li
+                for li in (t if t is not None else "").split("\n")
+                if li and not probe(li)
+            ]
+            return ("\n".join(lines), len(lines)) if lines else None
+
+        return per_row(row)
+
+    from pyspark.sql.types import LongType, StringType
+
+    return arrow_key_pass(
+        df, text_col, make_fn,
+        [(text_col, StringType()), ("n_lines_kept", LongType())],
+    )
 
 
 def _distinct_spans(
@@ -1899,13 +1747,6 @@ def write_span_bloom_table(
     the ordinary portable bloom build over the distinct span strings.
     Cross-wave accumulation is :func:`merge_bloom_tables` ONLY
     (in-place append clobbers bits — see the line-grain writer)."""
-    if mode == "append":
-        raise ValueError(
-            "bloom tables cannot append in place — rows from two waves "
-            "clobber each other's bits at load time (false negatives); "
-            "write each wave to its own path and OR-merge with "
-            "merge_bloom_tables"
-        )
     write_bloom_table(
         _distinct_spans(df, text_col, span_sentences),
         path,
@@ -1923,7 +1764,6 @@ def span_dedup_against_path(
     seen_path: str,
     span_sentences: int = 3,
     text_col: str = "text",
-    seen_format: str = "digests",
     max_bitmap_bytes: int | None = None,
     max_broadcast_digests: int | None = None,
 ) -> DataFrame:
@@ -1959,7 +1799,6 @@ def span_dedup_against_path(
     :func:`_seen_probe_factory`); no join, no shuffle, no state —
     append-safe under Structured Streaming.
     """
-    spark = df.sparkSession
     if span_sentences < 1:
         raise ValueError("span_sentences must be >= 1")
     if "n_sentences_kept" in df.columns:
@@ -1968,56 +1807,38 @@ def span_dedup_against_path(
             "before span_dedup_against"
         )
     make_probe = _seen_probe_factory(
-        spark, seen_path, seen_format, max_bitmap_bytes,
-        max_broadcast_digests, grain="span",
+        df.sparkSession, seen_path, "span", max_bitmap_bytes,
+        max_broadcast_digests,
     )
-
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    in_cols = [f.name for f in df.schema.fields]
-    schema = StructType(
-        list(df.schema.fields) + [StructField("n_sentences_kept", LongType())]
-    )
-    tcol = text_col
     span_k = span_sentences
 
-    def gen(batches):
+    def make_fn():
         import re
-
-        import pandas as pd
 
         probe = make_probe()
         split = re.compile(r"[.!?]").split
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            keep_idx, texts, counts = [], [], []
-            for i, t in enumerate(pdf[tcol]):
-                sents = [
-                    s2
-                    for s in split(t if t is not None else "")
-                    if (s2 := s.strip(" \n"))
-                ]
-                if not sents:
-                    continue
-                drop: set = set()
-                for j in range(0, len(sents) - span_k + 1):
-                    if probe(_SPAN_SEP.join(sents[j : j + span_k])):
-                        drop.update(range(j, j + span_k))
-                kept = [s for j2, s in enumerate(sents) if j2 not in drop]
-                if kept:
-                    keep_idx.append(i)
-                    texts.append("\n".join(kept))
-                    counts.append(len(kept))
-            if keep_idx:
-                out = pdf.iloc[keep_idx][in_cols].copy()
-                out[tcol] = texts
-                out["n_sentences_kept"] = pd.Series(
-                    counts, dtype="int64", index=out.index
-                )
-                yield out
 
-    return df.mapInPandas(gen, schema)
+        def row(t):
+            sents = [
+                s2
+                for s in split(t if t is not None else "")
+                if (s2 := s.strip(" \n"))
+            ]
+            drop: set = set()
+            for j in range(0, len(sents) - span_k + 1):
+                if probe(_SPAN_SEP.join(sents[j : j + span_k])):
+                    drop.update(range(j, j + span_k))
+            kept = [s for j2, s in enumerate(sents) if j2 not in drop]
+            return ("\n".join(kept), len(kept)) if kept else None
+
+        return per_row(row)
+
+    from pyspark.sql.types import LongType, StringType
+
+    return arrow_key_pass(
+        df, text_col, make_fn,
+        [(text_col, StringType()), ("n_sentences_kept", LongType())],
+    )
 
 
 #: Published eval-set decontamination n-gram length: GPT-3 (Brown et
@@ -2127,13 +1948,6 @@ def write_ngram_bloom_table(
     clobbers bits — see the line-grain writer)."""
     if n < 1:
         raise ValueError("n must be >= 1")
-    if mode == "append":
-        raise ValueError(
-            "bloom tables cannot append in place — rows from two waves "
-            "clobber each other's bits at load time (false negatives); "
-            "write each wave to its own path and OR-merge with "
-            "merge_bloom_tables"
-        )
     write_bloom_table(
         _distinct_ngrams(df, text_col, n),
         path,
@@ -2196,7 +2010,6 @@ def decontaminate_against_path(
     action: str = "drop",
     flag_col: str = "contaminated",
     count_col: str = "n_dirty_ngrams",
-    seen_format: str = "digests",
     max_bitmap_bytes: int | None = None,
     max_broadcast_digests: int | None = None,
 ) -> DataFrame:
@@ -2226,10 +2039,10 @@ def decontaminate_against_path(
       whole-document verdict (unlike the line/span grains, which
       excise and reassemble).
 
-    Scale shape: ONE row-local Arrow ``mapInPandas`` pass — no join,
-    no shuffle, no state — with the eval seen-set in the task closure
-    (exact digest broadcast, or a :func:`write_ngram_bloom_table`
-    bitmap via the shared :func:`_seen_probe_factory`). Append-safe
+    Scale shape: ONE row-local Arrow pass — no join, no shuffle, no
+    state — with the eval seen-set broadcast (exact digest set, or a
+    :func:`write_ngram_bloom_table` bitmap — the artifact names its
+    format, :func:`_seen_probe_factory`). Append-safe
     under Structured Streaming (the stream-safe ``decontaminate_against``
     dataop). The per-task n-gram probe memoizes nothing across rows:
     eval membership is O(1) per gram against the closure set.
@@ -2244,77 +2057,19 @@ def decontaminate_against_path(
     the deployment shape (and the published case/punctuation-
     insensitive token convention at the published n).
     """
-    spark = df.sparkSession
     if n < 1:
         raise ValueError("n must be >= 1")
-    if action not in ("drop", "flag"):
-        raise ValueError(f"unknown action {action!r}: drop|flag")
-    if action == "flag":
-        for c in (flag_col, count_col):
-            if c in df.columns:
-                raise ValueError(
-                    f"input already has a {c!r} column — rename it "
-                    "before decontaminate_against"
-                )
+    added = _flag_columns(
+        df, action, flag_col, count_col, "decontaminate_against"
+    )
     make_probe = _seen_probe_factory(
-        spark, seen_path, seen_format, max_bitmap_bytes,
-        max_broadcast_digests, grain="ngram",
+        df.sparkSession, seen_path, "ngram", max_bitmap_bytes,
+        max_broadcast_digests,
     )
-
-    from pyspark.sql.types import (
-        BooleanType,
-        LongType,
-        StructField,
-        StructType,
+    return _drop_or_flag(
+        df, text_col, added,
+        lambda count: _decontam_probe_kernel(make_probe(), n, count),
     )
-
-    in_cols = [f.name for f in df.schema.fields]
-    if action == "flag":
-        schema = StructType(
-            list(df.schema.fields)
-            + [
-                StructField(flag_col, BooleanType()),
-                StructField(count_col, LongType()),
-            ]
-        )
-    else:
-        schema = df.schema
-    tcol = text_col
-    flag_mode = action == "flag"
-
-    def gen(batches):
-        import pandas as pd
-
-        check = _decontam_probe_kernel(make_probe(), n, count=flag_mode)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            keep_idx, flags, counts = [], [], []
-            for i, t in enumerate(pdf[tcol]):
-                if flag_mode:
-                    n_dirty = check(t)
-                    keep_idx.append(i)
-                    flags.append(n_dirty > 0)
-                    counts.append(n_dirty)
-                elif not check(t):
-                    keep_idx.append(i)
-            if keep_idx:
-                out = pdf.iloc[keep_idx][in_cols].copy()
-                if flag_mode:
-                    out[flag_col] = pd.Series(
-                        flags, dtype="bool", index=out.index
-                    )
-                    out[count_col] = pd.Series(
-                        counts, dtype="int64", index=out.index
-                    )
-                yield out
-
-    return df.mapInPandas(gen, schema)
-
-
-#: n-gram-grain alias — the decontamination digest broadcasts share the
-#: line/span digest cache (keyed by artifact path)
-release_ngram_digest_cache = release_line_digest_cache
 
 
 def _simhash_sigs_arrow(
@@ -2549,39 +2304,8 @@ def _distinct_band_keys(
     return scale_out(df.select(text_col)).mapInPandas(gen, schema).distinct()
 
 
-def _write_band_geometry(
-    spark, path: str, n: int, k: int, rows_per_band: int, mode: str
-) -> None:
-    (
-        spark.createDataFrame(
-            [(int(n), int(k), int(rows_per_band))],
-            "n int, k int, rows_per_band int",
-        )
-        .coalesce(1)
-        .write.mode(mode)
-        .parquet(f"{path.rstrip('/')}/geometry")
-    )
-
-
-def _band_geometry(spark, path: str) -> "tuple[int, int, int]":
-    """Read and validate the ONE geometry of a band artifact at
-    ``path`` — the probe derives (n, k, rows_per_band) FROM the
-    artifact, so there is no probe-side parameter to mismatch (the
-    bloom single-geometry lesson, solved by construction). Mixed
-    geometries (appends under different parameters) fail loud."""
-    rows = (
-        spark.read.parquet(f"{path.rstrip('/')}/geometry")
-        .distinct()
-        .collect()
-    )
-    if len(rows) != 1:
-        raise ValueError(
-            f"band artifact at {path!r} holds {len(rows)} distinct "
-            "geometries — every wave must register under the SAME "
-            "(n, k, rows_per_band); rebuild the artifact"
-        )
-    r = rows[0]
-    return int(r["n"]), int(r["k"]), int(r["rows_per_band"])
+#: the columns of a band artifact's ``{path}/geometry`` sidecar
+_BAND_GEOMETRY = ("n", "k", "rows_per_band")
 
 
 def write_band_digest_table(
@@ -2617,26 +2341,16 @@ def write_band_digest_table(
     :func:`minhash_lsh_pairs` candidate-join property).
     """
     _band_geometry_check(n, k, rows_per_band)
-    from .util import path_exists
-
-    if mode == "append" and path_exists(
-        df.sparkSession, f"{path.rstrip('/')}/geometry"
-    ):
-        existing = _band_geometry(df.sparkSession, path)
-        if existing != (int(n), int(k), int(rows_per_band)):
-            raise ValueError(
-                f"geometry mismatch appending to {path!r}: artifact "
-                f"registered under (n, k, rows_per_band)={existing}, "
-                f"append requested {(int(n), int(k), int(rows_per_band))}"
-                " — nothing was written; rebuild or match the geometry"
-            )
+    spark = df.sparkSession
+    geom = (n, k, rows_per_band)
+    check_geometry(spark, path, _BAND_GEOMETRY, geom, mode)
     (
         _distinct_band_keys(df, text_col, n, k, rows_per_band)
         .select(F.md5("band").alias("digest"))
         .write.mode(mode)
         .parquet(f"{path.rstrip('/')}/bands")
     )
-    _write_band_geometry(df.sparkSession, path, n, k, rows_per_band, mode)
+    write_geometry(spark, path, _BAND_GEOMETRY, geom, mode)
 
 
 def write_band_bloom_table(
@@ -2656,22 +2370,13 @@ def write_band_bloom_table(
     wave's distinct band keys — the 100-TB tier of the near-dup
     lifecycle, for waves whose band-key set outgrows the exact digest
     broadcast (size ``capacity`` to the true distinct band-key count,
-    ~= kept_docs x n_bands). Probe via
-    ``neardup_against_path(..., seen_format="bloom")``. No false
+    ~= kept_docs x n_bands). :func:`neardup_against_path` probes it
+    like the digest artifact (the artifact names its format). No false
     negatives: a genuinely colliding band always hits; ~FPR of fresh
     bands hit with it — compounding the LSH candidate FP rate by the
     bloom FP rate (both declared trades). Cross-wave accumulation is
-    :func:`merge_band_bloom_tables` ONLY — appending sparse bitmap rows
-    in place would let the loader's plain row assignment clobber bits
-    across waves (silent false negatives), so ``mode="append"`` is
-    rejected here."""
-    if mode == "append":
-        raise ValueError(
-            "write_band_bloom_table cannot append in place — bloom "
-            "rows from two waves would clobber each other's bits at "
-            "load time (false negatives); write each wave to its own "
-            "path and OR-merge with merge_band_bloom_tables"
-        )
+    :func:`merge_band_bloom_tables` ONLY — :func:`write_bloom_table`
+    rejects in-place ``mode="append"``, before anything is written."""
     _band_geometry_check(n, k, rows_per_band)
     write_bloom_table(
         _distinct_band_keys(df, text_col, n, k, rows_per_band),
@@ -2683,7 +2388,9 @@ def write_band_bloom_table(
         mode=mode,
         n_shards=n_shards,
     )
-    _write_band_geometry(df.sparkSession, path, n, k, rows_per_band, mode)
+    write_geometry(
+        df.sparkSession, path, _BAND_GEOMETRY, (n, k, rows_per_band), mode
+    )
 
 
 def merge_band_bloom_tables(
@@ -2693,7 +2400,7 @@ def merge_band_bloom_tables(
     (the :func:`merge_bloom_tables` wrapper that also carries the
     geometry sidecar, asserting every input registered under the SAME
     (n, k, rows_per_band))."""
-    geoms = {_band_geometry(spark, p) for p in paths}
+    geoms = {read_geometry(spark, p, _BAND_GEOMETRY) for p in paths}
     if len(geoms) != 1:
         raise ValueError(
             f"cannot merge band artifacts with mixed geometries {sorted(geoms)}"
@@ -2704,8 +2411,7 @@ def merge_band_bloom_tables(
         f"{out_path.rstrip('/')}/bands",
         mode=mode,
     )
-    n, k, rpb = next(iter(geoms))
-    _write_band_geometry(spark, out_path, n, k, rpb, mode)
+    write_geometry(spark, out_path, _BAND_GEOMETRY, next(iter(geoms)), mode)
 
 
 def _band_keys_py(n: int, k: int, rows_per_band: int):
@@ -2774,7 +2480,6 @@ def neardup_against_path(
     action: str = "drop",
     flag_col: str = "neardup",
     count_col: str = "n_bands_hit",
-    seen_format: str = "digests",
     max_bitmap_bytes: "int | None" = None,
     max_broadcast_digests: "int | None" = None,
 ) -> DataFrame:
@@ -2807,93 +2512,27 @@ def neardup_against_path(
       within-stream document dups are the dedup STAGE's job for
       :func:`dedup_against_path`.
 
-    Scale shape: ONE row-local Arrow ``mapInPandas`` pass — no join,
-    no shuffle, no state — with the band seen-set in the task closure
-    (exact 16-byte digest broadcast bounded at 10M keys, or a
-    :func:`write_band_bloom_table` bitmap via the shared
-    :func:`_seen_probe_factory`). Append-safe under Structured
+    Scale shape: ONE row-local Arrow pass — no join, no shuffle, no
+    state — with the band seen-set broadcast (exact 16-byte digest set
+    bounded at 10M keys, or a :func:`write_band_bloom_table` bitmap —
+    the artifact names its format, :func:`_seen_probe_factory`).
+    Append-safe under Structured
     Streaming (the stream-safe ``neardup_against`` dataop); the
     reference deployment shape is preserved — the probe composes
     mid-chain in the one StreamingQuery like every row-local stage
     (streaming_component.go:289-360).
     """
+    added = _flag_columns(df, action, flag_col, count_col, "neardup_against")
     spark = df.sparkSession
-    if action not in ("drop", "flag"):
-        raise ValueError(f"unknown action {action!r}: drop|flag")
-    if action == "flag":
-        for c in (flag_col, count_col):
-            if c in df.columns:
-                raise ValueError(
-                    f"input already has a {c!r} column — rename it "
-                    "before neardup_against"
-                )
-    n, k, rows_per_band = _band_geometry(spark, seen_path)
+    geom = read_geometry(spark, seen_path, _BAND_GEOMETRY)
     make_probe = _seen_probe_factory(
-        spark,
-        f"{seen_path.rstrip('/')}/bands",
-        seen_format,
-        max_bitmap_bytes,
+        spark, f"{seen_path.rstrip('/')}/bands", "band", max_bitmap_bytes,
         max_broadcast_digests,
-        grain="band",
     )
-
-    from pyspark.sql.types import (
-        BooleanType,
-        LongType,
-        StructField,
-        StructType,
+    return _drop_or_flag(
+        df, text_col, added,
+        lambda count: _neardup_probe_kernel(make_probe(), *geom, count),
     )
-
-    in_cols = [f.name for f in df.schema.fields]
-    if action == "flag":
-        schema = StructType(
-            list(df.schema.fields)
-            + [
-                StructField(flag_col, BooleanType()),
-                StructField(count_col, LongType()),
-            ]
-        )
-    else:
-        schema = df.schema
-    tcol = text_col
-    flag_mode = action == "flag"
-
-    def gen(batches):
-        import pandas as pd
-
-        check = _neardup_probe_kernel(
-            make_probe(), n, k, rows_per_band, count=flag_mode
-        )
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            keep_idx, flags, counts = [], [], []
-            for i, t in enumerate(pdf[tcol]):
-                if flag_mode:
-                    hits = check(t)
-                    keep_idx.append(i)
-                    flags.append(hits > 0)
-                    counts.append(hits)
-                elif not check(t):
-                    keep_idx.append(i)
-            if keep_idx:
-                out = pdf.iloc[keep_idx][in_cols].copy()
-                if flag_mode:
-                    out[flag_col] = pd.Series(
-                        flags, dtype="bool", index=out.index
-                    )
-                    out[count_col] = pd.Series(
-                        counts, dtype="int64", index=out.index
-                    )
-                yield out
-
-    return df.mapInPandas(gen, schema)
-
-
-#: band-grain alias — the near-dup digest broadcasts share the
-#: line/span/ngram digest cache (keyed by artifact path; release with
-#: the BANDS subpath, f"{path}/bands")
-release_band_digest_cache = release_line_digest_cache
 
 
 def lsh_collision_probability(

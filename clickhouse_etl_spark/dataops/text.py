@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from .fold import fold_lower, fold_space_tokens
 from .hashing import affine_hash, char_fold_hash
-from .util import scale_out
+from .util import arrow_key_pass, scale_out
 
 #: tiny fixed stopword lists per language — heuristic n-gram-free
 #: language ID; deterministic and oracle-replayable. Order matters for
@@ -1024,7 +1024,7 @@ def importance_weights(
     Scale shape: the weight build aggregates straight to BUCKET grain
     (map-side partial combine → a dim-bounded shuffle; the target pass
     re-featurizes only the small target slice), and the scoring pass is
-    ONE row-local Arrow ``mapInPandas`` with the collected weight dict
+    ONE row-local ``mapInArrow`` pass with the collected weight dict
     in the task closure (the classify_against pattern): no corpus-side
     (doc, bucket) shuffle, no join, memory independent of corpus size.
     The frame is deliberately never localCheckpointed: an in-heap
@@ -1194,14 +1194,9 @@ def _iw_score_frame(
     what a streaming chain wants — ``tokens_col``/``score_col`` rename
     them so the stage composes next to other scorers that already own
     the default names)."""
-    import numpy as np
-
     from pyspark.sql import types as T
 
-    added = [
-        T.StructField(tokens_col, T.LongType(), True),
-        T.StructField(score_col, T.LongType(), True),
-    ]
+    added = [(tokens_col, T.LongType()), (score_col, T.LongType())]
     if keep_input:
         clash = {tokens_col, score_col} & set(df.columns)
         if clash:
@@ -1210,38 +1205,31 @@ def _iw_score_frame(
                 "columns before scoring (the op appends "
                 f"{tokens_col}/{score_col})"
             )
-        schema = T.StructType(list(df.schema.fields) + added)
-        out_cols = [f.name for f in df.schema.fields]
+        keep = None
     else:
-        id_field = df.schema[id_col]
-        schema = T.StructType(
-            [T.StructField(id_col, id_field.dataType, id_field.nullable)]
-            + added
-        )
-        out_cols = [id_col]
+        df, keep = df.select(id_col, text_col), [id_col]
 
-    def score_batches(batches):
+    def make_fn():
         score = _iw_kernel(dim, wt_map)
-        for pdf in batches:
-            if not len(pdf):
-                continue
+
+        def fn(texts):
             # Python str.lower() here vs Spark lower() on the
             # weight-build path: identical on ASCII, divergent on
             # locale-sensitive Unicode corners ('İ' etc.) — serve
             # parity is pinned for ASCII corpora
             # (the classify_against family's documented assumption;
             # ADVICE r9). Non-ASCII inputs should normalize_text first.
-            tok_lists = [fold_space_tokens(x) for x in pdf[text_col]]
-            keep = [i for i, tl in enumerate(tok_lists) if tl]
-            if not keep:
-                continue  # token-less docs drop, as in importance_weights
-            n_toks, scores = score([tok_lists[i] for i in keep])
-            out = pdf.iloc[keep][out_cols].copy()
-            out[tokens_col] = np.asarray(n_toks, dtype=np.int64)
-            out[score_col] = np.asarray(scores, dtype=np.int64)
-            yield out
+            tok_lists = [fold_space_tokens(x) for x in texts]
+            # token-less docs drop, as in importance_weights
+            keep_idx = [i for i, tl in enumerate(tok_lists) if tl]
+            if not keep_idx:
+                return [], []
+            n_toks, scores = score([tok_lists[i] for i in keep_idx])
+            return keep_idx, [n_toks, scores]
 
-    return df.mapInPandas(score_batches, schema)
+        return fn
+
+    return arrow_key_pass(df, text_col, make_fn, added, keep=keep)
 
 
 def write_importance_table(
@@ -1285,7 +1273,7 @@ def importance_against_path(
 ) -> DataFrame:
     """Score documents against a persisted importance table
     (:func:`write_importance_table`) — the ONLINE half: one row-local
-    Arrow ``mapInPandas`` pass with the dim-bounded weight dict in the
+    ``mapInArrow`` pass with the dim-bounded weight dict in the
     task closure, so it is stream-safe under append mode and runs per
     micro-batch with NO shuffle and NO state (the
     :func:`classify_against_path` shape). Buckets never seen when the
@@ -1962,7 +1950,7 @@ def classify_against_path(
 ) -> DataFrame:
     """Score documents against a persisted classifier
     (:func:`write_classifier_table`) — the ONLINE half: one row-local
-    Arrow ``mapInPandas`` pass (tokenize → memoized char-fold bucket →
+    ``mapInArrow`` pass (tokenize → memoized char-fold bucket →
     fixed-point tf → dot with the broadcast weight dict → calibrated
     pred), so it is stream-safe under append mode and runs per
     micro-batch with NO shuffle and NO state. The weight table is
@@ -1979,8 +1967,6 @@ def classify_against_path(
     Output: input columns + (score BIGINT, pred INT); token-less
     documents drop (as in the batch op).
     """
-    import pandas as pd
-
     from pyspark.sql import types as T
 
     clash = {"score", "pred"} & set(df.columns)
@@ -1991,33 +1977,25 @@ def classify_against_path(
         )
     dim, s_sum, n_tr, wt = _load_classifier(df.sparkSession, weights_path)
 
-    schema = T.StructType(
-        list(df.schema.fields)
-        + [
-            T.StructField("score", T.LongType(), True),
-            T.StructField("pred", T.IntegerType(), True),
-        ]
-    )
-    in_cols = [f.name for f in df.schema.fields]
-
-    def score_batches(batches):
+    def make_fn():
         score = _score_kernel(dim, wt, s_sum, n_tr)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            tok_lists = [fold_space_tokens(x) for x in pdf[text_col]]
+
+        def fn(texts):
+            tok_lists = [fold_space_tokens(x) for x in texts]
+            # token-less docs drop, as in the batch op
             keep0 = [i for i, tl in enumerate(tok_lists) if tl]
             if not keep0:
-                continue  # token-less docs drop, as in the batch op
+                return [], []
+            # all-unseen docs: the batch inner join drops them
             sel, scores, preds = score([tok_lists[i] for i in keep0])
-            if not sel:
-                continue  # all-unseen docs: the batch inner join drops them
-            out = pdf.iloc[[keep0[j] for j in sel]][in_cols].copy()
-            out["score"] = pd.Series(scores, dtype="int64").values
-            out["pred"] = pd.Series(preds, dtype="int32").values
-            yield out
+            return [keep0[j] for j in sel], [scores, preds]
 
-    return df.mapInPandas(score_batches, schema)
+        return fn
+
+    return arrow_key_pass(
+        df, text_col, make_fn,
+        [("score", T.LongType()), ("pred", T.IntegerType())],
+    )
 
 
 def rare_token_ratio(

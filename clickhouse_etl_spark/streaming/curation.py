@@ -21,9 +21,9 @@ Every stage here is the stream-safe form of an oracle-backed batch op:
 
 - :func:`~clickhouse_etl_spark.dataops.text.normalize_text` — row-local
   Arrow canonicalization (the ``docs_normalize_text`` entry);
-- :func:`~clickhouse_etl_spark.dataops.dedup.dedup_against_path` with
-  ``seen_format="bloom"`` — the 100-TB seen-set tier: one broadcast
-  bitmap probe, no join, no state (``write_bloom_table`` artifacts);
+- :func:`~clickhouse_etl_spark.dataops.dedup.dedup_against_path` on a
+  ``write_bloom_table`` artifact — the 100-TB seen-set tier: one
+  broadcast bitmap probe, no join, no state;
 - :func:`~clickhouse_etl_spark.dataops.dedup.neardup_against_path`
   (optional) — the published MinHash-LSH bucket-removal against a
   persisted band seen-set (``write_band_digest_table`` artifacts),
@@ -58,9 +58,7 @@ def curation_scored_stream(
     importance_path: "str | None" = None,
     decontam_path: "str | None" = None,
     decontam_n: "int | None" = None,
-    decontam_format: str = "digests",
     neardup_path: "str | None" = None,
-    neardup_format: str = "digests",
 ) -> DataFrame:
     """The row-local curation body (normalize → bloom dedup →
     classifier scoring, plus OPTIONAL DSIR importance scoring) without
@@ -75,7 +73,7 @@ def curation_scored_stream(
     before the seen-set probe). Stream-safe under append mode; also
     valid on a batch frame (same plan).
 
-    The whole chain is ONE ``mapInPandas`` pass composing the ops' own
+    The whole chain is ONE Arrow pass composing the ops' own
     row-local kernels (bloom bitmap, classifier weights, and importance
     dict all sit in the task closure anyway), so the corpus crosses the
     Arrow boundary once per micro-batch instead of once per stage —
@@ -86,8 +84,8 @@ def curation_scored_stream(
     ``decontam_path`` (optional) adds benchmark DECONTAMINATION as the
     FIRST stage — drop every document sharing any ``decontam_n``-gram
     (default the published 13) with the persisted eval-set artifact
-    (:func:`~clickhouse_etl_spark.dataops.dedup.write_ngram_digest_table`,
-    or the bloom tier via ``decontam_format="bloom"``). The probe runs
+    (:func:`~clickhouse_etl_spark.dataops.dedup.write_ngram_digest_table`
+    or the bloom tier — the artifact names its format). The probe runs
     on the RAW text (the published protocol's own case/punctuation
     fold makes it normalization-independent, and dropping leaked docs
     before any other work is the deployment order); row-local,
@@ -97,7 +95,7 @@ def curation_scored_stream(
     after the exact bloom dedup (the published order) — drop every
     document whose band keys collide with a persisted
     :func:`~clickhouse_etl_spark.dataops.dedup.write_band_digest_table`
-    artifact (or the bloom tier via ``neardup_format="bloom"``). The
+    artifact (or the bloom tier — the artifact names its format). The
     probe runs on the CANONICAL text, so build the band artifact from
     normalized survivors (``text_col="text_norm"``); geometry is read
     from the artifact. Row-local, early-exits on the first band hit.
@@ -116,13 +114,10 @@ def curation_scored_stream(
             f"input already carries {sorted(clash)} — rename those "
             "columns before the curation pass"
         )
-    import pandas as pd
     from pyspark.sql import types as T
 
     from ..dataops.dedup import (
-        _band_geometry,
-        _bloom_broadcast,
-        _bloom_probe_kernel,
+        _BAND_GEOMETRY,
         _decontam_probe_kernel,
         _neardup_probe_kernel,
         _seen_probe_factory,
@@ -134,10 +129,10 @@ def curation_scored_stream(
         _normalize_kernel,
         _score_kernel,
     )
-    from ..dataops.util import scale_out
+    from ..dataops.util import arrow_key_pass, read_geometry, scale_out
 
     spark = docs.sparkSession
-    bc_words, m, k, n_shards = _bloom_broadcast(spark, bloom_path)
+    make_seen = _seen_probe_factory(spark, bloom_path, "document")
     dim, s_sum, n_tr, wt = _load_classifier(spark, weights_path)
     iw = (
         _load_importance(spark, importance_path)
@@ -145,48 +140,34 @@ def curation_scored_stream(
         else None
     )
     make_dc_probe = (
-        _seen_probe_factory(
-            spark, decontam_path, decontam_format, None, None, grain="ngram"
-        )
+        _seen_probe_factory(spark, decontam_path, "ngram")
         if decontam_path is not None
         else None
     )
     dc_n = decontam_n
     if neardup_path is not None:
-        nd_geom = _band_geometry(spark, neardup_path)
+        nd_geom = read_geometry(spark, neardup_path, _BAND_GEOMETRY)
         make_nd_probe = _seen_probe_factory(
-            spark, f"{neardup_path.rstrip('/')}/bands", neardup_format,
-            None, None, grain="band",
+            spark, f"{neardup_path.rstrip('/')}/bands", "band"
         )
     else:
         nd_geom = make_nd_probe = None
-    in_cols = [f.name for f in docs.schema.fields]
-    schema = T.StructType(
-        list(docs.schema.fields)
-        + [
-            T.StructField("text_norm", T.StringType(), True),
-            T.StructField("n_tokens_raw", T.LongType(), True),
-            T.StructField("n_tokens_norm", T.LongType(), True),
-            T.StructField("score", T.LongType(), True),
-            T.StructField("pred", T.IntegerType(), True),
-        ]
-        + (
-            [
-                T.StructField("iw_tokens", T.LongType(), True),
-                T.StructField("iw_score", T.LongType(), True),
-            ]
-            if iw is not None
-            else []
-        )
-    )
-    tcol = text_col
+    added = [
+        ("text_norm", T.StringType()),
+        ("n_tokens_raw", T.LongType()),
+        ("n_tokens_norm", T.LongType()),
+        ("score", T.LongType()),
+        ("pred", T.IntegerType()),
+    ]
+    if iw is not None:
+        added += [("iw_tokens", T.LongType()), ("iw_score", T.LongType())]
 
     # the fused pass COMPOSES the ops' shared row-local kernels — the
     # single definitions the public ops run — so a semantic change to
     # any stage reaches both by construction
-    def fused(batches):
+    def make_fused():
         norm = _normalize_kernel()
-        seen = _bloom_probe_kernel(bc_words.value, m, k, n_shards)
+        seen = make_seen()
         score = _score_kernel(dim, wt, s_sum, n_tr)
         iw_score = _iw_kernel(iw[0], iw[1]) if iw is not None else None
         dirty = (
@@ -199,14 +180,13 @@ def curation_scored_stream(
             if make_nd_probe is not None
             else None
         )
-        for pdf in batches:
-            if not len(pdf):
-                continue
+
+        def fused(texts):
             # pass 1 (per row): decontamination verdict on the RAW
             # text, then normalize + bloom probe on the canonical
             # text; survivors accumulate token lists
             keep0, norms, nraws, nnorms, tok_lists = [], [], [], [], []
-            for i, x in enumerate(pdf[tcol]):
+            for i, x in enumerate(texts):
                 if dirty is not None and dirty(x):
                     continue  # eval-set collision: drops, never leaks
                 cleaned, nr, nn = norm(x)
@@ -223,31 +203,26 @@ def curation_scored_stream(
                 nnorms.append(nn)
                 tok_lists.append(toks)
             if not keep0:
-                continue
+                return [], []
             # pass 2 (vectorized scorer; all-unseen docs drop inside)
             sel, scores, preds = score(tok_lists)
-            if not sel:
-                continue
-            out = pdf.iloc[[keep0[j] for j in sel]][in_cols].copy()
-            out["text_norm"] = [norms[j] for j in sel]
-            out["n_tokens_raw"] = pd.Series(
-                [nraws[j] for j in sel], dtype="int64"
-            ).values
-            out["n_tokens_norm"] = pd.Series(
-                [nnorms[j] for j in sel], dtype="int64"
-            ).values
-            out["score"] = pd.Series(scores, dtype="int64").values
-            out["pred"] = pd.Series(preds, dtype="int32").values
+            cols = [
+                [norms[j] for j in sel],
+                [nraws[j] for j in sel],
+                [nnorms[j] for j in sel],
+                scores,
+                preds,
+            ]
             if iw_score is not None:
                 # pass 3 (vectorized importance scorer) over the SAME
                 # token lists the classifier consumed — identical to
                 # importance_against_path on text_norm
-                iw_toks, iw_scores = iw_score([tok_lists[j] for j in sel])
-                out["iw_tokens"] = pd.Series(iw_toks, dtype="int64").values
-                out["iw_score"] = pd.Series(iw_scores, dtype="int64").values
-            yield out
+                cols += iw_score([tok_lists[j] for j in sel])
+            return [keep0[j] for j in sel], cols
 
-    return scale_out(docs).mapInPandas(fused, schema)
+        return fused
+
+    return arrow_key_pass(scale_out(docs), text_col, make_fused, added)
 
 
 def curation_rollup_stream(
@@ -262,9 +237,7 @@ def curation_rollup_stream(
     importance_path: "str | None" = None,
     decontam_path: "str | None" = None,
     decontam_n: "int | None" = None,
-    decontam_format: str = "digests",
     neardup_path: "str | None" = None,
-    neardup_format: str = "digests",
 ) -> DataFrame:
     """The full curation chain as ONE streaming frame: scored survivors
     rolled up per (tumbling window, pred) — kept/flagged document
@@ -280,8 +253,7 @@ def curation_rollup_stream(
         docs, bloom_path, weights_path, text_col=text_col, id_col=id_col,
         importance_path=importance_path,
         decontam_path=decontam_path, decontam_n=decontam_n,
-        decontam_format=decontam_format, neardup_path=neardup_path,
-        neardup_format=neardup_format,
+        neardup_path=neardup_path,
     )
     win = F.window(ts_col, window_duration)
     aggs = [

@@ -24,6 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from clickhouse_etl_spark.dataops.util import release_artifact_cache
 from clickhouse_etl_spark.session import get_spark
 from clickhouse_etl_spark.sinks import ClickHouseSink
 
@@ -110,7 +111,6 @@ def ann_serving_bench(spark) -> None:
         pq_index_build,
         pq_index_query,
         pq_index_serve_foreach_batch,
-        release_index_cache,
     )
 
     n_vec = 1_000_000
@@ -141,7 +141,7 @@ def ann_serving_bench(spark) -> None:
             .write.mode("append")
             .parquet(qsrc)
         )
-    release_index_cache(path)
+    release_artifact_cache(path)
     # warm: one batch answer pays codegen + the one-time artifact load
     pq_index_query(
         spark, path,
@@ -198,9 +198,6 @@ def curation_chain_bench(spark) -> None:
     from pyspark.sql import types as T
 
     from clickhouse_etl_spark.dataops.dedup import (
-        release_band_digest_cache,
-        release_bloom_cache,
-        release_ngram_digest_cache,
         write_band_digest_table,
         write_bloom_table,
         write_ngram_digest_table,
@@ -281,9 +278,7 @@ def curation_chain_bench(spark) -> None:
     ):
         best = float("inf")
         for i in range(2):
-            release_bloom_cache(bloom_path)
-            release_ngram_digest_cache()
-            release_band_digest_cache()
+            release_artifact_cache()
             tag = f"{'iw' if iw else 'plain'}{'_dc' if dc else ''}{'_nd' if nd else ''}"
             ckpt = f"{BASE}/curation_ckpt_fused_{tag}_{i}"
             shutil.rmtree(ckpt, ignore_errors=True)
@@ -585,8 +580,6 @@ def line_dedup_lifecycle_bench(spark) -> None:
     closure artifact's footprint)."""
     from clickhouse_etl_spark.dataops.dedup import (
         line_dedup_against_path,
-        release_bloom_cache,
-        release_line_digest_cache,
         write_line_bloom_table,
         write_line_digest_table,
     )
@@ -610,7 +603,7 @@ def line_dedup_lifecycle_bench(spark) -> None:
     results = {}
     for label, kw in (
         ("digests", {"seen_path": digest_path}),
-        ("bloom", {"seen_path": bloom_path, "seen_format": "bloom"}),
+        ("bloom", {"seen_path": bloom_path}),
     ):
         stream = (
             spark.readStream.schema(schema)
@@ -633,8 +626,8 @@ def line_dedup_lifecycle_bench(spark) -> None:
             q.awaitTermination()
             best = min(best, time.perf_counter() - t0)
         results[label] = best
-    release_line_digest_cache(digest_path)
-    release_bloom_cache(bloom_path)
+    release_artifact_cache(digest_path)
+    release_artifact_cache(bloom_path)
     print(
         json.dumps(
             {
@@ -660,8 +653,6 @@ def neardup_lifecycle_bench(spark) -> None:
     compute-heaviest of the row-local probe stages."""
     from clickhouse_etl_spark.dataops.dedup import (
         neardup_against_path,
-        release_band_digest_cache,
-        release_bloom_cache,
         write_band_bloom_table,
         write_band_digest_table,
     )
@@ -685,7 +676,7 @@ def neardup_lifecycle_bench(spark) -> None:
     results = {}
     for label, kw in (
         ("digests", {"seen_path": digest_path}),
-        ("bloom", {"seen_path": bloom_path, "seen_format": "bloom"}),
+        ("bloom", {"seen_path": bloom_path}),
     ):
         stream = (
             spark.readStream.schema(schema)
@@ -708,8 +699,8 @@ def neardup_lifecycle_bench(spark) -> None:
             q.awaitTermination()
             best = min(best, time.perf_counter() - t0)
         results[label] = best
-    release_band_digest_cache(f"{digest_path}/bands")
-    release_bloom_cache(f"{bloom_path}/bands")
+    release_artifact_cache(digest_path)
+    release_artifact_cache(bloom_path)
     print(
         json.dumps(
             {

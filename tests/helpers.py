@@ -109,9 +109,7 @@ def curation_chain(
     importance_path: "str | None" = None,
     decontam_path: "str | None" = None,
     decontam_n: "int | None" = None,
-    decontam_format: str = "digests",
     neardup_path: "str | None" = None,
-    neardup_format: str = "digests",
 ) -> DataFrame:
     """decontaminate_against_path → normalize_text →
     dedup_against_bloom_path → neardup_against_path →
@@ -132,16 +130,14 @@ def curation_chain(
     if decontam_path is not None:
         docs = decontaminate_against_path(
             docs, decontam_path, n=decontam_n or DECONTAM_NGRAM_N,
-            text_col=text_col, seen_format=decontam_format,
+            text_col=text_col,
         )
     out = normalize_text(docs, text_col=text_col, id_col=id_col)
     out = dedup_against_bloom_path(
         out, bloom_path, text_col="text_norm", id_col=id_col
     )
     if neardup_path is not None:
-        out = neardup_against_path(
-            out, neardup_path, text_col="text_norm", seen_format=neardup_format
-        )
+        out = neardup_against_path(out, neardup_path, text_col="text_norm")
     out = classify_against_path(
         out, weights_path, text_col="text_norm", id_col=id_col
     )

@@ -13,6 +13,10 @@ from clickhouse_etl_spark.dataops.dedup import (
 )
 from clickhouse_etl_spark.dataops.similarity import cosine_topk, lsh_bucket_topk
 from clickhouse_etl_spark.dataops.text import language_id
+from clickhouse_etl_spark.dataops.util import (
+    _ARTIFACT_CACHE,
+    release_artifact_cache,
+)
 from clickhouse_etl_spark.sources.batch import load_table
 from tests.helpers import (
     as_id_type,
@@ -1718,11 +1722,116 @@ def test_sample_artifacts_reject_empty_corpus(spark):
         sample_centroids(empty)
 
 
+_PASSTHROUGH_OPS = (
+    "dedup_bloom", "line_dedup", "span_dedup", "decontam_drop",
+    "decontam_flag", "neardup", "vec_dedup", "classify", "importance",
+    "curation",
+)
+
+
+@pytest.fixture(scope="module")
+def passthrough_artifacts(spark, sf_dir, tmp_path_factory):
+    """Corpus docs plus a nullable bigint ``x`` holding odd values past
+    2^53 and a NULL every third row, and one artifact per probe op: the
+    seen-sets come from an unrelated vocabulary (every doc survives),
+    the scorers are trained on the corpus."""
+    from clickhouse_etl_spark.dataops import dedup as dd
+    from clickhouse_etl_spark.dataops.similarity import write_vec_bucket_table
+    from clickhouse_etl_spark.dataops.text import (
+        write_classifier_table,
+        write_importance_table,
+    )
+
+    base = tmp_path_factory.mktemp("passthrough")
+    corpus = load_table(spark, sf_dir, "documents")
+    rows = [
+        (
+            r["doc_id"], r["text"], r["source"],
+            None if i % 3 == 0 else 2**53 + 2 * i + 1,
+            [float((i * 7 + d) % 5 - 2) for d in range(8)],
+        )
+        for i, r in enumerate(corpus.orderBy("doc_id").limit(24).collect())
+    ]
+    frame = spark.createDataFrame(
+        rows,
+        "doc_id long, text string, source string, x bigint, "
+        "embedding array<double>",
+    ).coalesce(1)
+    other = spark.createDataFrame(
+        [(j, f"zq{j} wv{j} kx{j} jy{j}. pm{j} rb{j} tc{j}.\nhn{j} gd{j} fs{j}.")
+         for j in range(20)],
+        "doc_id long, text string",
+    )
+    paths = {k: str(base / k) for k in (
+        "bloom", "line", "span", "ngram", "band", "vec", "clf", "iw",
+    )}
+    dd.write_bloom_table(other, paths["bloom"], capacity=100)
+    dd.write_line_digest_table(other, paths["line"], mode="overwrite")
+    dd.write_span_digest_table(
+        other, paths["span"], span_sentences=2, mode="overwrite"
+    )
+    dd.write_ngram_digest_table(other, paths["ngram"], n=3, mode="overwrite")
+    dd.write_band_digest_table(other, paths["band"], mode="overwrite")
+    write_vec_bucket_table(
+        spark.createDataFrame(
+            [([float(j % 3 + 1)] * 8,) for j in range(3)],
+            "embedding array<double>",
+        ),
+        paths["vec"], dim=8, mode="overwrite",
+    )
+    write_classifier_table(corpus, paths["clf"])
+    write_importance_table(corpus, paths["iw"], target_sources=["src0"])
+    yield frame, paths
+    release_artifact_cache()
+
+
+@pytest.mark.parametrize("op", _PASSTHROUGH_OPS)
+def test_probe_ops_pass_columns_through_exactly(spark, passthrough_artifacts, op):
+    """Every seen-set probe and persisted scorer hands the columns it
+    does not compute back exactly: a nullable bigint past 2^53 next to
+    a NULL in the same batch comes back bit-for-bit (an Arrow→pandas
+    round trip made it float64 and rounded 2^53+1 to 2^53)."""
+    from clickhouse_etl_spark.dataops import dedup as dd
+    from clickhouse_etl_spark.dataops.similarity import vec_dedup_against_path
+    from clickhouse_etl_spark.dataops.text import (
+        classify_against_path,
+        importance_against_path,
+    )
+    from clickhouse_etl_spark.streaming.curation import curation_scored_stream
+
+    frame, p = passthrough_artifacts
+    out = {
+        "dedup_bloom": lambda: dd.dedup_against_path(frame, p["bloom"]),
+        "line_dedup": lambda: dd.line_dedup_against_path(frame, p["line"]),
+        "span_dedup": lambda: dd.span_dedup_against_path(
+            frame, p["span"], span_sentences=2
+        ),
+        "decontam_drop": lambda: dd.decontaminate_against_path(
+            frame, p["ngram"], n=3
+        ),
+        "decontam_flag": lambda: dd.decontaminate_against_path(
+            frame, p["ngram"], n=3, action="flag"
+        ),
+        "neardup": lambda: dd.neardup_against_path(frame, p["band"]),
+        "vec_dedup": lambda: vec_dedup_against_path(
+            frame, p["vec"], action="flag"
+        ),
+        "classify": lambda: classify_against_path(frame, p["clf"]),
+        "importance": lambda: importance_against_path(frame, p["iw"]),
+        "curation": lambda: curation_scored_stream(frame, p["bloom"], p["clf"]),
+    }[op]()
+    want = {r["doc_id"]: r["x"] for r in frame.collect()}
+    got = {r["doc_id"]: r["x"] for r in out.select("doc_id", "x").collect()}
+    assert any(v is not None for v in got.values()), op
+    assert got == {d: want[d] for d in got}, op
+
+
 def test_release_digest_cache(spark, sf_dir, tmp_path):
     """ADVICE r6: per-path digest caches are reusable within a wave and
     releasable when the wave completes."""
     from clickhouse_etl_spark.dataops import dedup as dd
 
+    release_artifact_cache()
     docs = load_table(spark, sf_dir, "documents")
     seen = str(tmp_path / "digests")
     dd.write_digest_table(docs.limit(50), seen)
@@ -1734,10 +1843,10 @@ def test_release_digest_cache(spark, sf_dir, tmp_path):
     out1 = dd.dedup_against_path(stream, seen)
     out2 = dd.dedup_against_path(stream, seen)
     assert out1.isStreaming and out2.isStreaming
-    assert len(dd._DIGEST_CACHES) == 1
-    assert dd.release_digest_cache(seen) == 1
-    assert dd.release_digest_cache(seen) == 0
-    assert not dd._DIGEST_CACHES
+    assert len(_ARTIFACT_CACHE) == 1
+    assert release_artifact_cache(seen) == 1
+    assert release_artifact_cache(seen) == 0
+    assert not _ARTIFACT_CACHE
 
 
 def test_keep_best_per_cluster_semantics(spark):
@@ -1872,14 +1981,14 @@ def test_bloom_table_no_false_negatives_and_fpr(spark, tmp_path):
         [(10_000 + i, f"seen document number {i}") for i in range(2000)],
         ["doc_id", "text"],
     )
-    out = dedup_against_path(replay, path, seen_format="bloom")
+    out = dedup_against_path(replay, path)
     assert out.count() == 0
 
     fresh = spark.createDataFrame(
         [(20_000 + i, f"fresh document number {i}") for i in range(2000)],
         ["doc_id", "text"],
     )
-    kept = dedup_against_path(fresh, path, seen_format="bloom").count()
+    kept = dedup_against_path(fresh, path).count()
     fpr = 1.0 - kept / 2000.0
     assert fpr < 0.03, f"bloom FPR {fpr} exceeds 3% at 10 bits/key, k=7"
 
@@ -1893,8 +2002,8 @@ def test_bloom_table_no_false_negatives_and_fpr(spark, tmp_path):
     # sharded build (the >214M-key tier mechanism): same guarantees
     path4 = str(tmp_path / "bloom_seen_sharded")
     write_bloom_table(seen, path4, capacity=2000, n_shards=4)
-    assert dedup_against_path(replay, path4, seen_format="bloom").count() == 0
-    kept4 = dedup_against_path(fresh, path4, seen_format="bloom").count()
+    assert dedup_against_path(replay, path4).count() == 0
+    kept4 = dedup_against_path(fresh, path4).count()
     assert 1.0 - kept4 / 2000.0 < 0.03
 
     # per-shard bitmap range guard points at the sharding fix
@@ -2114,21 +2223,21 @@ def test_digest_cache_invalidates_on_rewrite(spark, sf_dir, tmp_path):
         .selectExpr("value AS doc_id", "CAST(value AS STRING) AS text")
     )
     dd.dedup_against_path(stream, seen)
-    sig1, frame1 = dd._DIGEST_CACHES[seen]
+    sig1, frame1 = _ARTIFACT_CACHE[seen]
     # repeat call with an unchanged table: reuses the same cache entry
     dd.dedup_against_path(stream, seen)
-    assert dd._DIGEST_CACHES[seen][0] == sig1
-    assert dd._DIGEST_CACHES[seen][1] is frame1
+    assert _ARTIFACT_CACHE[seen][0] == sig1
+    assert _ARTIFACT_CACHE[seen][1] is frame1
     # rewrite the table -> new part files -> cache must rotate
     dd.write_digest_table(docs.limit(40), seen, mode="overwrite")
     dd.dedup_against_path(stream, seen)
-    sig2, frame2 = dd._DIGEST_CACHES[seen]
+    sig2, frame2 = _ARTIFACT_CACHE[seen]
     assert sig2 != sig1
     # the rotated entry is a FRESH frame over the new listing (the old
     # one was unpersisted; storageLevel can't observe that here because
     # the cache manager matches both frames' identical logical plans)
     assert frame2 is not frame1
-    assert dd.release_digest_cache(seen) == 1
+    assert release_artifact_cache(seen) == 1
 
 
 def test_bloom_probe_rejects_mixed_geometry(spark, tmp_path):
@@ -2182,7 +2291,7 @@ def test_bloom_bitmap_size_guard(spark, tmp_path):
     assert dd.dedup_against_bloom_path(
         docs, path, max_bitmap_bytes=1 << 30
     ).count() == 0
-    dd.release_bloom_cache(path)
+    release_artifact_cache(path)
 
 
 def test_release_bloom_cache_and_rewrite_invalidation(spark, tmp_path):
@@ -2191,25 +2300,25 @@ def test_release_bloom_cache_and_rewrite_invalidation(spark, tmp_path):
     rewritten, and releases on demand like the digest cache."""
     from clickhouse_etl_spark.dataops import dedup as dd
 
-    dd.release_bloom_cache()
+    release_artifact_cache()
     docs = spark.createDataFrame(
         [(i, f"doc {i}") for i in range(200)], ["doc_id", "text"]
     )
     path = str(tmp_path / "bloom_cache")
     dd.write_bloom_table(docs, path, capacity=1000)
     dd.dedup_against_bloom_path(docs, path)
-    entry1 = dd._BLOOM_CACHES[path]
+    entry1 = _ARTIFACT_CACHE[path]
     dd.dedup_against_bloom_path(docs, path)
-    assert dd._BLOOM_CACHES[path] is entry1  # reused, not re-broadcast
+    assert _ARTIFACT_CACHE[path] is entry1  # reused, not re-broadcast
     # rewrite with more keys: the probe must pick up the new bitmap
     more = spark.createDataFrame(
         [(i, f"extra {i}") for i in range(300)], ["doc_id", "text"]
     )
     dd.write_bloom_table(docs.unionByName(more), path, capacity=1000)
     assert dd.dedup_against_bloom_path(more, path).count() == 0
-    assert dd._BLOOM_CACHES[path] is not entry1
-    assert dd.release_bloom_cache(path) == 1
-    assert dd.release_bloom_cache(path) == 0
+    assert _ARTIFACT_CACHE[path] is not entry1
+    assert release_artifact_cache(path) == 1
+    assert release_artifact_cache(path) == 0
 
 
 def test_shingle_stream_preserves_id_type(spark):
@@ -2292,10 +2401,7 @@ def test_curation_fused_engine_identical(spark, sf_dir, tmp_path):
     all-unseen-bucket drops, exact scores and calibrated preds."""
     from pyspark.sql import functions as F
 
-    from clickhouse_etl_spark.dataops.dedup import (
-        release_bloom_cache,
-        write_bloom_table,
-    )
+    from clickhouse_etl_spark.dataops.dedup import write_bloom_table
     from clickhouse_etl_spark.dataops.text import (
         normalize_text,
         write_classifier_table,
@@ -2380,10 +2486,7 @@ def test_curation_fused_engine_identical(spark, sf_dir, tmp_path):
     # probe on the RAW text — fused == chained with the stage active,
     # every benchmark-colliding doc is gone, the stage strictly
     # shrinks the survivor set, and clean survivors are unchanged
-    from clickhouse_etl_spark.dataops.dedup import (
-        release_ngram_digest_cache,
-        write_ngram_digest_table,
-    )
+    from clickhouse_etl_spark.dataops.dedup import write_ngram_digest_table
 
     dc_path = str(tmp_path / "fused_eval_ngrams")
     write_ngram_digest_table(
@@ -2430,7 +2533,6 @@ def test_curation_fused_engine_identical(spark, sf_dir, tmp_path):
     # canonical text (composition law)
     from clickhouse_etl_spark.dataops.dedup import (
         neardup_against_path,
-        release_band_digest_cache,
         write_band_digest_table,
     )
 
@@ -2461,9 +2563,9 @@ def test_curation_fused_engine_identical(spark, sf_dir, tmp_path):
         ).select("doc_id").collect()
     }
     assert set(a4) == {row for row in a3 if row[id_i] in nd_clean_ids}
-    release_band_digest_cache(f"{nd_path}/bands")
-    release_ngram_digest_cache(dc_path)
-    release_bloom_cache(bloom)
+    release_artifact_cache(nd_path)
+    release_artifact_cache(dc_path)
+    release_artifact_cache(bloom)
 
 
 def test_shingle_stream_null_id_both_engines(spark):
@@ -2598,20 +2700,20 @@ def test_index_cache_survives_append_rotates_on_rebuild(spark, sf_dir, tmp_path)
 
     emb = load_table(spark, sf_dir, "embeddings")
     path = str(tmp_path / "cache_idx")
-    sim.release_index_cache()
+    release_artifact_cache()
     sim.pq_index_build(emb.filter("vec_id < 400"), path)
     queries = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
     before = sim.pq_index_query(spark, path, queries).collect()
     assert before
-    entry0 = sim._INDEX_CACHES[path]
+    entry0 = _ARTIFACT_CACHE[path]
 
     # append new vectors: cache entry reused, appended ids queryable
     sim.pq_index_append(spark, path, emb.filter("vec_id >= 400"))
     after = sim.pq_index_query(spark, path, queries)
     ids_after = {r["neighbor_id"] for r in after.collect()}
-    assert sim._INDEX_CACHES[path] is entry0
+    assert _ARTIFACT_CACHE[path] is entry0
     n_codes = spark.read.parquet(f"{path}/codes").count()
     assert n_codes == emb.count()  # append landed
     assert ids_after  # answers still flow over the grown index
@@ -2619,8 +2721,8 @@ def test_index_cache_survives_append_rotates_on_rebuild(spark, sf_dir, tmp_path)
     # rebuild: listings change -> cache rotates
     sim.pq_index_build(emb, path)
     sim.pq_index_query(spark, path, queries.limit(1)).collect()
-    assert sim._INDEX_CACHES[path] is not entry0
-    sim.release_index_cache(path)
+    assert _ARTIFACT_CACHE[path] is not entry0
+    release_artifact_cache(path)
 
 
 @pytest.mark.heavy
@@ -2640,7 +2742,7 @@ def test_pq_index_cell_skew_report_and_rebalance(spark, sf_dir, tmp_path):
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.filter("vec_id < 250").select("vec_id", "embedding")
     path = str(tmp_path / "skew_idx")
-    sim.release_index_cache()
+    release_artifact_cache()
     sim.pq_index_build(base, path, n_centroids=8)
     stats0 = sim.pq_index_cell_stats(spark, path)
     assert stats0["n_cells"] == 8
@@ -2714,7 +2816,7 @@ def test_pq_index_cell_skew_report_and_rebalance(spark, sf_dir, tmp_path):
     sim.pq_index_build(base, lean, n_centroids=8, store_vectors=False)
     with pytest.raises(ValueError, match="store_vectors"):
         sim.pq_index_rebalance(spark, lean)
-    sim.release_index_cache()
+    release_artifact_cache()
 
 
 def test_gopher_rules_engines_identical(spark):
@@ -2855,7 +2957,7 @@ def test_serving_chunks_oversized_query_batch(spark, sf_dir, tmp_path):
 
     emb = load_table(spark, sf_dir, "embeddings")
     path = str(tmp_path / "serve_chunk_idx")
-    sim.release_index_cache()
+    release_artifact_cache()
     sim.pq_index_build(emb.filter("vec_id < 400"), path)
     queries = emb.filter(F.col("vec_id") < 25).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -2884,7 +2986,7 @@ def test_serving_chunks_oversized_query_batch(spark, sf_dir, tmp_path):
         sim.pq_index_query_chunked(
             spark, path, queries, k=3, max_queries=10, max_serve_chunks=2
         )
-    sim.release_index_cache()
+    release_artifact_cache()
 
 
 def test_c4_filters_battery(spark):
@@ -3053,8 +3155,6 @@ def test_span_dedup_against_lifecycle(spark, tmp_path):
     corpus; the Python sentence split replays the Spark expression."""
     from clickhouse_etl_spark.dataops.dedup import (
         _sentences_expr,
-        release_bloom_cache,
-        release_line_digest_cache,
         span_dedup_against_path,
         write_span_bloom_table,
         write_span_digest_table,
@@ -3099,12 +3199,12 @@ def test_span_dedup_against_lifecycle(spark, tmp_path):
     bloom_out = {
         r["doc_id"]: (r["text"], r["n_sentences_kept"])
         for r in span_dedup_against_path(
-            wave2, bpath, seen_format="bloom"
+            wave2, bpath
         ).collect()
     }
     assert bloom_out == out
     assert (
-        span_dedup_against_path(wave1, bpath, seen_format="bloom").count() == 0
+        span_dedup_against_path(wave1, bpath).count() == 0
     )
 
     # Python split parity with the Spark expression on the edges
@@ -3133,8 +3233,8 @@ def test_span_dedup_against_lifecycle(spark, tmp_path):
         span_dedup_against_path(
             span_dedup_against_path(wave2, path), path
         )
-    release_line_digest_cache()
-    release_bloom_cache()
+    release_artifact_cache()
+    release_artifact_cache()
 
 
 def test_line_dedup_against_lifecycle(spark, tmp_path):
@@ -3147,7 +3247,6 @@ def test_line_dedup_against_lifecycle(spark, tmp_path):
     from clickhouse_etl_spark.dataops.dedup import (
         line_dedup,
         line_dedup_against_path,
-        release_line_digest_cache,
         write_line_digest_table,
     )
 
@@ -3196,7 +3295,7 @@ def test_line_dedup_against_lifecycle(spark, tmp_path):
         r["doc_id"]: r["text_dedup"] for r in line_dedup(probed_frame).collect()
     }
     assert composed == union_out
-    assert release_line_digest_cache(path) == 1
+    assert release_artifact_cache(path) == 1
 
 
 def test_line_dedup_against_bloom_tier(spark, tmp_path):
@@ -3205,7 +3304,6 @@ def test_line_dedup_against_bloom_tier(spark, tmp_path):
     the bloom probe equals the exact digest probe row for row."""
     from clickhouse_etl_spark.dataops.dedup import (
         line_dedup_against_path,
-        release_bloom_cache,
         write_line_bloom_table,
         write_line_digest_table,
     )
@@ -3227,11 +3325,11 @@ def test_line_dedup_against_bloom_tier(spark, tmp_path):
     write_line_digest_table(wave1, dpath, mode="overwrite")
 
     # replaying wave 1 through the bloom probe leaves nothing
-    assert line_dedup_against_path(wave1, bpath, seen_format="bloom").count() == 0
+    assert line_dedup_against_path(wave1, bpath).count() == 0
 
     bloom_out = {
         r["doc_id"]: (r["text"], r["n_lines_kept"])
-        for r in line_dedup_against_path(wave2, bpath, seen_format="bloom").collect()
+        for r in line_dedup_against_path(wave2, bpath).collect()
     }
     digest_out = {
         r["doc_id"]: (r["text"], r["n_lines_kept"])
@@ -3240,7 +3338,7 @@ def test_line_dedup_against_bloom_tier(spark, tmp_path):
     assert bloom_out == digest_out
     assert set(bloom_out) == {100 + i for i in range(50)}
     assert all(t == f"fresh content line {k - 100}." for k, (t, _) in bloom_out.items())
-    release_bloom_cache(bpath)
+    release_artifact_cache(bpath)
 
 
 def test_line_digest_cache_rotates_on_append(spark, tmp_path):
@@ -3250,7 +3348,6 @@ def test_line_digest_cache_rotates_on_append(spark, tmp_path):
     at line grain)."""
     from clickhouse_etl_spark.dataops.dedup import (
         line_dedup_against_path,
-        release_line_digest_cache,
         write_line_digest_table,
     )
 
@@ -3267,13 +3364,13 @@ def test_line_digest_cache_rotates_on_append(spark, tmp_path):
     write_line_digest_table(w2, path, mode="append")
     out2 = line_dedup_against_path(probe_doc, path).collect()
     assert out2[0]["text"] == "still fresh line."
-    assert release_line_digest_cache() >= 1
+    assert release_artifact_cache() >= 1
 
 
 def test_line_dedup_against_guards(spark, tmp_path):
     """Fail-loud surfaces: a seen-set too large to broadcast exactly
     names the bloom tier; an input already carrying n_lines_kept is a
-    clash; an unknown seen_format raises."""
+    clash; a table of no seen-set format raises."""
     import pytest as _pytest
 
     from clickhouse_etl_spark.dataops.dedup import (
@@ -3308,8 +3405,12 @@ def test_line_dedup_against_guards(spark, tmp_path):
         line_dedup_against_path(
             w1.withColumn("n_lines_kept", F.lit(1)), path
         )
-    with _pytest.raises(ValueError, match="seen_format"):
-        line_dedup_against_path(w1, path, seen_format="nope")
+    # the artifact names its format: a table that is neither a digest
+    # nor a bloom table is refused
+    other = str(tmp_path / "not_a_seen_set")
+    w1.write.parquet(other)
+    with _pytest.raises(ValueError, match="neither a bloom table"):
+        line_dedup_against_path(w1, other)
 
 
 def test_importance_weights_target_affinity(spark):
@@ -3483,7 +3584,6 @@ def test_decontaminate_against_lifecycle(spark, tmp_path):
     cached seen-set rotates on the listing change."""
     from clickhouse_etl_spark.dataops.dedup import (
         decontaminate_against_path,
-        release_ngram_digest_cache,
         write_ngram_digest_table,
     )
 
@@ -3547,7 +3647,7 @@ def test_decontaminate_against_lifecycle(spark, tmp_path):
     }
     assert flagged2[12] == (True, 1)
     assert flagged2[10] == (True, 2)  # suite-1 verdicts unchanged
-    assert release_ngram_digest_cache(path) == 1
+    assert release_artifact_cache(path) == 1
 
 
 def test_decontaminate_ngram_catalyst_python_parity(spark):
@@ -3590,7 +3690,6 @@ def test_decontaminate_bloom_tier(spark, tmp_path):
     tiers agree exactly."""
     from clickhouse_etl_spark.dataops.dedup import (
         decontaminate_against_path,
-        release_bloom_cache,
         write_ngram_bloom_table,
         write_ngram_digest_table,
     )
@@ -3622,7 +3721,7 @@ def test_decontaminate_bloom_tier(spark, tmp_path):
     blo = {
         r["doc_id"]: (r["contaminated"], r["n_dirty_ngrams"])
         for r in decontaminate_against_path(
-            train, bpath, n=5, action="flag", seen_format="bloom"
+            train, bpath, n=5, action="flag"
         ).collect()
     }
     assert {d for d, (c, _) in dig.items() if c} == {100 + i for i in range(40) if i % 2 == 0}
@@ -3632,7 +3731,7 @@ def test_decontaminate_bloom_tier(spark, tmp_path):
         if c:
             assert blo[d][0]
     assert blo == dig  # deterministic corpus: tiers agree exactly here
-    release_bloom_cache(bpath)
+    release_artifact_cache(bpath)
 
 
 def test_decontaminate_guards(spark, tmp_path):
@@ -3700,7 +3799,6 @@ def test_neardup_against_lifecycle(spark, tmp_path):
     from clickhouse_etl_spark.dataops.dedup import (
         _distinct_band_keys,
         neardup_against_path,
-        release_band_digest_cache,
         write_band_digest_table,
     )
 
@@ -3769,7 +3867,7 @@ def test_neardup_against_lifecycle(spark, tmp_path):
         for r in neardup_against_path(wave3, path, action="flag").collect()
     }
     assert flagged3[20] == 4
-    assert release_band_digest_cache(f"{path}/bands") == 1
+    assert release_artifact_cache(path) == 1
 
 
 def test_neardup_band_catalyst_python_parity(spark):
@@ -3872,7 +3970,6 @@ def test_neardup_bloom_tier(spark, tmp_path):
     from clickhouse_etl_spark.dataops.dedup import (
         merge_band_bloom_tables,
         neardup_against_path,
-        release_bloom_cache,
         write_band_bloom_table,
         write_band_digest_table,
     )
@@ -3907,7 +4004,7 @@ def test_neardup_bloom_tier(spark, tmp_path):
     bloom_flags = {
         r["doc_id"]
         for r in neardup_against_path(
-            probe_df, bpath, action="flag", seen_format="bloom"
+            probe_df, bpath, action="flag"
         ).collect()
         if r["neardup"]
     }
@@ -3926,12 +4023,12 @@ def test_neardup_bloom_tier(spark, tmp_path):
     merged_flags = {
         r["doc_id"]
         for r in neardup_against_path(
-            probe_df, mpath, action="flag", seen_format="bloom"
+            probe_df, mpath, action="flag"
         ).collect()
         if r["neardup"]
     }
     assert bloom_flags | {12} <= merged_flags
-    release_bloom_cache()
+    release_artifact_cache()
 
 
 @pytest.mark.heavy
@@ -3976,9 +4073,10 @@ def test_neardup_guards(spark, tmp_path):
     ] == [True]
     # a legacy artifact that DID accumulate two geometries (pre-guard
     # code) still fails loud at probe time
-    from clickhouse_etl_spark.dataops.dedup import _write_band_geometry
+    from clickhouse_etl_spark.dataops.dedup import _BAND_GEOMETRY
+    from clickhouse_etl_spark.dataops.util import write_geometry
 
-    _write_band_geometry(spark, path, 3, 4, 2, "append")
+    write_geometry(spark, path, _BAND_GEOMETRY, (3, 4, 2), "append")
     with _pytest.raises(ValueError, match="distinct geometries"):
         neardup_against_path(docs, path)
 
@@ -4165,7 +4263,6 @@ def test_vec_dedup_against_lifecycle(spark, sf_dir, tmp_path):
     and the cache rotates on the listing change."""
     from clickhouse_etl_spark.dataops.similarity import (
         _vec_bucket_keys_py,
-        release_vec_bucket_cache,
         vec_dedup_against_path,
         write_vec_bucket_table,
     )
@@ -4227,7 +4324,7 @@ def test_vec_dedup_against_lifecycle(spark, sf_dir, tmp_path):
         path, action="flag",
     ).collect()[0]
     assert again["semantic_neardup"] and again["n_tables_hit"] == 8
-    assert release_vec_bucket_cache(path) == 1
+    assert release_artifact_cache(path) == 1
 
 
 @pytest.mark.heavy
@@ -4325,11 +4422,10 @@ def test_vec_dedup_against_guards(spark, tmp_path):
 
     # a legacy artifact that DID accumulate two geometries (written by
     # pre-guard code) still fails loud at probe time
-    from clickhouse_etl_spark.dataops.similarity import (
-        _write_vec_bucket_geometry,
-    )
+    from clickhouse_etl_spark.dataops.similarity import _VEC_BUCKET_GEOMETRY
+    from clickhouse_etl_spark.dataops.util import write_geometry
 
-    _write_vec_bucket_geometry(spark, path, 8, 4, 8, "append")
+    write_geometry(spark, path, _VEC_BUCKET_GEOMETRY, (8, 4, 8), "append")
     with _pytest.raises(ValueError, match="distinct geometries"):
         vec_dedup_against_path(vecs, path)
 

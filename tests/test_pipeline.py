@@ -11,6 +11,7 @@ import json
 
 import pytest
 
+from clickhouse_etl_spark.dataops.util import release_artifact_cache
 from clickhouse_etl_spark.plans import compile_pipeline
 from clickhouse_etl_spark.spec import parse_pipeline_json
 from tests.helpers import curation_chain, required_dataop_params
@@ -173,7 +174,8 @@ def test_dataop_transforms_in_spec(spark):
 
 def test_dataop_params_bound_at_parse_time():
     """A dataop param the op's function does not accept — e.g. a saved
-    spec that still sets ``engine`` — and a missing no-default param
+    spec that still sets ``engine`` or ``seen_format`` (the artifact now
+    names its format) — and a missing no-default param
     both fail at PARSE time with a SpecError naming the param, instead
     of a TypeError on the first chain run."""
     import inspect
@@ -199,6 +201,10 @@ def test_dataop_params_bound_at_parse_time():
 
     with _pytest.raises(SpecError, match="engine"):
         parse_pipeline_json(_doc({"op": "normalize_text", "engine": "catalyst"}))
+    with _pytest.raises(SpecError, match="seen_format"):
+        parse_pipeline_json(_doc({
+            "op": "dedup_against", "seen_path": "/seen", "seen_format": "bloom",
+        }))
     with _pytest.raises(SpecError, match="seen_path"):
         parse_pipeline_json(_doc({"op": "dedup_against"}))
     ok = parse_pipeline_json(_doc({"op": "normalize_text", "text_col": "body"}))
@@ -624,7 +630,7 @@ def test_classify_against_requires_weights_path_at_parse_time(spark):
 
 
 def test_dedup_against_bloom_on_streaming_chain(spark, tmp_path):
-    """seen_format="bloom" on the declarable dedup_against dataop: the
+    """A bloom artifact on the declarable dedup_against dataop: the
     probe is one row-local Arrow pass against the closure-shipped
     bitmap — stream-safe — and drops exactly the seen documents on
     this corpus (false positives are possible in general, not
@@ -664,7 +670,7 @@ def test_dedup_against_bloom_on_streaming_chain(spark, tmp_path):
         dataops=(
             DataopConfig(
                 op="dedup_against",
-                params={"seen_path": bloom_dir, "seen_format": "bloom"},
+                params={"seen_path": bloom_dir},
             ),
         ),
     )
@@ -733,17 +739,14 @@ def test_repetition_signals_streaming_chain_runs(spark, tmp_path):
 def test_streaming_curation_dataops_spec_chain(spark, tmp_path):
     """The full curation deployment declared through the SPEC surface
     (VERDICT r7 #2, public-API form): normalize_text →
-    dedup_against(seen_format=bloom) → classify_against as v3 dataop
+    dedup_against(bloom artifact) → classify_against as v3 dataop
     transforms on a STREAMING source — the reference's fixed
     filter→dedup→transform order extended with the LLM ops. The stream
     output must equal the fused single-pass curation body on the same
     wave."""
     from pyspark.sql import types as T
 
-    from clickhouse_etl_spark.dataops.dedup import (
-        release_bloom_cache,
-        write_bloom_table,
-    )
+    from clickhouse_etl_spark.dataops.dedup import write_bloom_table
     from clickhouse_etl_spark.dataops.text import (
         normalize_text,
         write_classifier_table,
@@ -795,8 +798,7 @@ def test_streaming_curation_dataops_spec_chain(spark, tmp_path):
         dataops=(
             DataopConfig(op="normalize_text"),
             DataopConfig(op="dedup_against", params={
-                "seen_path": bloom, "seen_format": "bloom",
-                "text_col": "text_norm",
+                "seen_path": bloom, "text_col": "text_norm",
             }),
             DataopConfig(op="classify_against", params={
                 "weights_path": weights, "text_col": "text_norm",
@@ -819,7 +821,7 @@ def test_streaming_curation_dataops_spec_chain(spark, tmp_path):
         for r in spark.sql("SELECT * FROM curation_spec_chain").collect()
     )
     assert got == truth
-    release_bloom_cache(bloom)
+    release_artifact_cache(bloom)
 
 
 @pytest.mark.heavy
@@ -835,9 +837,6 @@ def test_six_stage_curation_chain_from_one_pipeline_json(spark, tmp_path):
     from pyspark.sql import types as T
 
     from clickhouse_etl_spark.dataops.dedup import (
-        release_band_digest_cache,
-        release_bloom_cache,
-        release_ngram_digest_cache,
         write_band_digest_table,
         write_bloom_table,
         write_ngram_digest_table,
@@ -918,7 +917,7 @@ def test_six_stage_curation_chain_from_one_pipeline_json(spark, tmp_path):
              "config": {"op": "normalize_text"}},
             {"type": "dataop", "source_id": "documents",
              "config": {"op": "dedup_against", "seen_path": bloom,
-                        "seen_format": "bloom", "text_col": "text_norm"}},
+                        "text_col": "text_norm"}},
             {"type": "dataop", "source_id": "documents",
              "config": {"op": "neardup_against", "seen_path": nd_path,
                         "text_col": "text_norm"}},
@@ -969,9 +968,9 @@ def test_six_stage_curation_chain_from_one_pipeline_json(spark, tmp_path):
         for r in spark.sql("SELECT * FROM curation_six_stage").collect()
     )
     assert got == truth
-    for rel in (release_bloom_cache, release_ngram_digest_cache):
+    for rel in (release_artifact_cache, release_artifact_cache):
         rel()
-    release_band_digest_cache()
+    release_artifact_cache()
 
 
 @pytest.mark.heavy
@@ -988,7 +987,6 @@ def test_multi_wave_curation_lifecycle(spark, tmp_path):
 
     from clickhouse_etl_spark.dataops.dedup import (
         merge_bloom_tables,
-        release_bloom_cache,
         write_bloom_table,
     )
     from clickhouse_etl_spark.dataops.text import (
@@ -1060,7 +1058,7 @@ def test_multi_wave_curation_lifecycle(spark, tmp_path):
         for r in spark.read.parquet(rebuilt).collect()
     )
     assert a == b
-    release_bloom_cache()
+    release_artifact_cache()
 
 
 @pytest.mark.heavy
@@ -1079,7 +1077,6 @@ def test_ann_serve_on_spec_surface(spark, sf_dir, tmp_path):
     from clickhouse_etl_spark.dataops.similarity import (
         pq_index_build,
         pq_index_query,
-        release_index_cache,
     )
     from clickhouse_etl_spark.plans.compiler import (
         DATAOPS,
@@ -1114,7 +1111,7 @@ def test_ann_serve_on_spec_surface(spark, sf_dir, tmp_path):
 
     emb = load_table(spark, sf_dir, "embeddings")
     index_path = str(tmp_path / "serve_idx")
-    release_index_cache()
+    release_artifact_cache()
     pq_index_build(emb.filter("vec_id < 400"), index_path)
     queries = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -1190,7 +1187,7 @@ def test_ann_serve_on_spec_surface(spark, sf_dir, tmp_path):
     )
     with _pytest.raises(SpecError, match="SINK-SIDE"):
         streaming_source_chain(cfg, "query_id", value_is_json=False)(stream)
-    release_index_cache()
+    release_artifact_cache()
 
 
 def test_r9_dataops_on_spec_surface(spark, tmp_path):

@@ -14,6 +14,10 @@ import os
 import pytest
 from pyspark.sql import types as T
 
+from clickhouse_etl_spark.dataops.util import (
+    _ARTIFACT_CACHE,
+    release_artifact_cache,
+)
 from clickhouse_etl_spark.sinks import (
     Classification,
     ClickHouseSink,
@@ -771,10 +775,7 @@ def test_streaming_curation_chain_parity_with_batch(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from clickhouse_etl_spark.dataops.dedup import (
-        release_bloom_cache,
-        write_bloom_table,
-    )
+    from clickhouse_etl_spark.dataops.dedup import write_bloom_table
     from clickhouse_etl_spark.dataops.text import (
         normalize_text,
         write_classifier_table,
@@ -809,7 +810,7 @@ def test_streaming_curation_chain_parity_with_batch(spark, tmp_path):
     }
     assert truth, "batch curation rollup is empty"
     assert len({k[0] for k in truth}) > 3, "need several windows"
-    release_bloom_cache(bloom)
+    release_artifact_cache(bloom)
 
     # stream the same corpus + a far-future sentinel doc that survives
     # every row-local stage (fresh text, trained stopword buckets) so
@@ -848,7 +849,7 @@ def test_streaming_curation_chain_parity_with_batch(spark, tmp_path):
         if r["window_start_us"] < sentinel_us - 600_000_000
     }
     assert got == truth
-    release_bloom_cache(bloom)
+    release_artifact_cache(bloom)
 
 
 def test_sum_rollup_int_cents_exact_past_2e53(spark):
@@ -886,10 +887,7 @@ def test_curation_stream_to_idempotent_sink_with_replay(spark, tmp_path):
     batch dedup) on the curation stream."""
     from pyspark.sql import functions as F
 
-    from clickhouse_etl_spark.dataops.dedup import (
-        release_bloom_cache,
-        write_bloom_table,
-    )
+    from clickhouse_etl_spark.dataops.dedup import write_bloom_table
     from clickhouse_etl_spark.dataops.text import (
         normalize_text,
         write_classifier_table,
@@ -963,7 +961,7 @@ def test_curation_stream_to_idempotent_sink_with_replay(spark, tmp_path):
             .select(F.col("_batch_id")).distinct().collect()
         }
         assert batches_again == batches_first
-    release_bloom_cache(bloom)
+    release_artifact_cache(bloom)
 
 
 def test_pq_index_online_serving_parity(spark, tmp_path):
@@ -990,7 +988,7 @@ def test_pq_index_online_serving_parity(spark, tmp_path):
         tuple(r) for r in sim.pq_index_query(spark, path, queries).collect()
     )
     assert truth
-    entry0 = sim._INDEX_CACHES[path]
+    entry0 = _ARTIFACT_CACHE[path]
 
     src = str(tmp_path / "serve_queries")
     # two files -> two micro-batches
@@ -1015,13 +1013,13 @@ def test_pq_index_online_serving_parity(spark, tmp_path):
     q.awaitTermination(180)
     assert sorted(got) == truth
     # every batch served from the ONE cached artifact load
-    assert sim._INDEX_CACHES[path] is entry0
+    assert _ARTIFACT_CACHE[path] is entry0
     # rebuild rotates the cache (new artifact listing)
     sim.pq_index_build(emb.filter("vec_id % 2 = 0"), path)
     sim.pq_index_query(spark, path, queries.limit(1))
-    assert sim._INDEX_CACHES[path] is not entry0
-    assert sim.release_index_cache(path) == 1
-    assert sim.release_index_cache(path) == 0
+    assert _ARTIFACT_CACHE[path] is not entry0
+    assert release_artifact_cache(path) == 1
+    assert release_artifact_cache(path) == 0
 
 
 def test_line_dedup_against_stream_parity_and_wave_lifecycle(spark, tmp_path):
@@ -1034,7 +1032,6 @@ def test_line_dedup_against_stream_parity_and_wave_lifecycle(spark, tmp_path):
     wave-3 doc against the accumulated set."""
     from clickhouse_etl_spark.dataops.dedup import (
         line_dedup_against_path,
-        release_line_digest_cache,
         write_line_digest_table,
     )
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig
@@ -1126,7 +1123,7 @@ def test_line_dedup_against_stream_parity_and_wave_lifecycle(spark, tmp_path):
         for r in line_dedup_against_path(wave3, seen).collect()
     }
     assert out3 == {21: "third wave only line."}
-    release_line_digest_cache()
+    release_artifact_cache()
 
 def test_decontaminate_against_stream_parity(spark, tmp_path):
     """Streaming decontamination: a training stream probes the
@@ -1136,7 +1133,6 @@ def test_decontaminate_against_stream_parity(spark, tmp_path):
     at n-gram grain."""
     from clickhouse_etl_spark.dataops.dedup import (
         decontaminate_against_path,
-        release_ngram_digest_cache,
         write_ngram_digest_table,
     )
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig
@@ -1215,7 +1211,7 @@ def test_decontaminate_against_stream_parity(spark, tmp_path):
         for r in spark.sql("SELECT * FROM decontam_stream_out").collect()
     }
     assert got == truth
-    release_ngram_digest_cache()
+    release_artifact_cache()
 
 
 def test_neardup_against_stream_parity(spark, tmp_path):
@@ -1226,7 +1222,6 @@ def test_neardup_against_stream_parity(spark, tmp_path):
     at near-dup grain."""
     from clickhouse_etl_spark.dataops.dedup import (
         neardup_against_path,
-        release_band_digest_cache,
         write_band_digest_table,
     )
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig
@@ -1303,4 +1298,4 @@ def test_neardup_against_stream_parity(spark, tmp_path):
         for r in spark.sql("SELECT * FROM neardup_stream_out").collect()
     }
     assert got == truth
-    release_band_digest_cache()
+    release_artifact_cache()
