@@ -14,7 +14,7 @@ Spark mapping:
   ``window_s`` bucket. This is the deterministic, shuffle-once,
   SQL-expressible form of the TTL rule; the processing-time ->
   event-time shift is the documented divergence (SURVEY.md §7.5.2).
-- streaming: ``dropDuplicatesWithinWatermark`` in streaming/runner.py
+- streaming: :func:`dedup_within_watermark` (``dropDuplicatesWithinWatermark``)
   gives the faithful "seen within the last window" behavior with state
   eviction by watermark.
 
@@ -79,4 +79,19 @@ def dedup_windowed(
         df.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
+    )
+
+
+def dedup_within_watermark(df: DataFrame, key: str, ts_col: str, window_s: float) -> DataFrame:
+    """Streaming form: drop a row whose key was already seen within the
+    last ``window_s`` of event time (``ts_col``); state is evicted by
+    the watermark."""
+    df = df.withWatermark(ts_col, f"{int(window_s)} seconds")
+    # dropDuplicatesWithinWatermark takes column NAMES — route a
+    # dot-path key through the same dual resolution as batch dedup by
+    # materializing it as a helper column first
+    return (
+        df.withColumn("_dedup_key", _key_col(df, key))
+        .dropDuplicatesWithinWatermark(["_dedup_key"])
+        .drop("_dedup_key")
     )

@@ -1,15 +1,18 @@
-"""Spec -> plan compiler: one operator library, two runners.
+"""Spec -> plan compiler: one pipeline assembly for batch and stream.
 
 ``compile_pipeline`` turns a validated :class:`PipelineSpec` into a
-:class:`CompiledPipeline` whose ``run_batch`` executes the declarative
-chain over per-source batch DataFrames (parquet/JSON fixtures — this is
-the oracle-checked path), and whose transform chain is reused verbatim
-by the streaming runner (streaming/runner.py).
+:class:`CompiledPipeline`: one :func:`source_chain` per source plus the
+one :func:`join_and_map` step. ``run_batch`` executes them over
+per-source batch DataFrames (parquet/JSON fixtures — this is the
+oracle-checked path); the streaming runner (streaming/runner.py) runs
+the same chains and the same join step over streaming frames.
 
 Stage order within a source is fixed — filter -> dedup -> stateless
-transform — matching the reference's hardcoded processor order
-(cmd/glassflow/dedup_component.go:210-225). Disabled stages are
-simply absent (reference uses NoopProcessor).
+transform -> dataops — matching the reference's hardcoded processor
+order (cmd/glassflow/dedup_component.go:210-225). Disabled stages are
+simply absent (reference uses NoopProcessor). The chain branches on
+``df.isStreaming`` only where batch and stream really differ: the
+dedup form, and which dataops may run.
 
 There is deliberately no optimizer here: the spec is declarative and
 compiles 1:1 to DataFrame operations; Catalyst owns predicate pushdown,
@@ -26,7 +29,7 @@ from typing import Callable, Optional
 
 from pyspark.sql import DataFrame
 
-from ..operators.dedup import dedup_first_wins, dedup_windowed
+from ..operators.dedup import dedup_first_wins, dedup_windowed, dedup_within_watermark
 from ..operators.filter import apply_filter
 from ..operators.join import temporal_join_batch
 from ..operators.mapper import apply_sink_mapping
@@ -37,7 +40,7 @@ from ..spec.model import PipelineSpec, SourceConfig, SpecError
 @dataclass
 class CompiledPipeline:
     spec: PipelineSpec
-    #: per-source transform chain (filter -> dedup -> stateless transform)
+    #: per-source chain (filter -> dedup -> transform -> dataops)
     source_chains: dict[str, Callable[[DataFrame], DataFrame]]
 
     def run_batch(
@@ -52,51 +55,106 @@ class CompiledPipeline:
         deterministic arrival-order tiebreak per source (batch mode has
         no arrival order — SURVEY.md §7.5.1).
         """
-        ts_cols = ts_cols or {}
-        order_cols = order_cols or {}
-        staged: dict[str, DataFrame] = {}
-        for sid, chain in self.source_chains.items():
-            df = inputs[sid]
-            staged[sid] = chain(df)
+        staged = {sid: chain(inputs[sid]) for sid, chain in self.source_chains.items()}
+        return join_and_map(self.spec, staged, ts_cols, order_cols)
 
-        spec = self.spec
-        if spec.join is not None:
-            left = staged[spec.join.left.source_id]
-            right = staged[spec.join.right.source_id]
+
+def join_and_map(
+    spec: PipelineSpec,
+    staged: dict[str, DataFrame],
+    ts_cols: Optional[dict[str, str]] = None,
+    order_cols: Optional[dict[str, list[str]]] = None,
+    state_gc_timeout_ms: Optional[int] = None,
+) -> DataFrame:
+    """Join the staged per-source frames (if the spec declares a join)
+    and apply the sink mapping. Streaming frames take the stateful
+    :func:`temporal_join_streaming` (``state_gc_timeout_ms`` is its
+    processing-time GC backstop); batch frames take
+    :func:`temporal_join_batch`."""
+    ts_cols = ts_cols or {}
+    order_cols = order_cols or {}
+    join = spec.join
+    if join is None:
+        if len(staged) != 1:
+            raise ValueError("multiple sources without a join are separate pipelines")
+        df = next(iter(staged.values()))
+    else:
+        left = staged[join.left.source_id]
+        right = staged[join.right.source_id]
+        if left.isStreaming:
+            # lazy: the streaming package imports this module
+            from ..streaming.temporal_join import temporal_join_streaming
+
+            df = temporal_join_streaming(
+                left,
+                right,
+                join,
+                left_ts=ts_cols[join.left.source_id],
+                right_ts=ts_cols[join.right.source_id],
+                state_gc_timeout_ms=state_gc_timeout_ms,
+            )
+        else:
             df = temporal_join_batch(
                 left,
                 right,
-                spec.join,
-                right_ts_col=ts_cols.get(spec.join.right.source_id),
-                right_tiebreak=order_cols.get(spec.join.right.source_id, []),
-                left_ts_col=ts_cols.get(spec.join.left.source_id),
+                join,
+                right_ts_col=ts_cols.get(join.right.source_id),
+                right_tiebreak=order_cols.get(join.right.source_id, []),
+                left_ts_col=ts_cols.get(join.left.source_id),
             )
-        else:
-            if len(staged) != 1:
-                raise ValueError("multiple sources without a join are separate pipelines")
-            df = next(iter(staged.values()))
 
-        if spec.sink.mapping:
-            df = apply_sink_mapping(df, spec.sink.mapping)
-        return df
+    if spec.sink.mapping:
+        df = apply_sink_mapping(df, spec.sink.mapping)
+    return df
 
 
-def _chain_for_source(
+def source_chain(
     src: SourceConfig,
-    ts_col: Optional[str],
-    order: list[str],
+    ts_col: Optional[str] = None,
+    order_cols: Optional[list[str]] = None,
 ) -> Callable[[DataFrame], DataFrame]:
+    """The per-source chain for batch and streaming frames alike.
+
+    Batch dedup keeps the first row per key (per ``ts_col`` window
+    bucket when the stage declares a window), "first" by
+    ``order_cols``; streaming dedup drops keys seen within the window
+    of event time ``ts_col`` (default window 1h). A streaming frame
+    accepts only ``STREAM_SAFE_DATAOPS`` and raises SpecError on any
+    other op when the chain is applied."""
+    order = list(order_cols or [])
+
     def chain(df: DataFrame) -> DataFrame:
+        streaming = df.isStreaming
         if src.filter is not None:
             df = apply_filter(df, src.filter)
         if src.dedup is not None:
-            if ts_col and src.dedup.time_window_s:
+            if streaming:
+                df = dedup_within_watermark(
+                    df, src.dedup.key, ts_col, src.dedup.time_window_s or 3600
+                )
+            elif ts_col and src.dedup.time_window_s:
                 df = dedup_windowed(df, src.dedup.key, ts_col, src.dedup.time_window_s, order)
             else:
                 df = dedup_first_wins(df, src.dedup.key, order or df.columns[:1])
         if src.transform is not None:
             df = apply_transform(df, src.transform)
         for d in src.dataops:
+            if streaming and d.op == "ann_serve":
+                raise SpecError(
+                    "dataop 'ann_serve' streams SINK-SIDE only: declare "
+                    "it as the LAST transform of a joinless single-source "
+                    "pipeline and StreamingPipeline wires it into "
+                    "foreachBatch (it collects each micro-batch's bounded "
+                    "query set to prune the codes scan, which a mid-chain "
+                    "streaming frame cannot do)."
+                )
+            if streaming and d.op not in STREAM_SAFE_DATAOPS:
+                raise SpecError(
+                    f"dataop {d.op!r} is batch-only (needs a bounded corpus); "
+                    f"stream-safe ops: {sorted(STREAM_SAFE_DATAOPS)}. For "
+                    "streaming dedup use the dedup stage "
+                    "(dropDuplicatesWithinWatermark)."
+                )
             df = resolve_dataop(d.op)(df, **d.params)
         return df
 
@@ -104,8 +162,8 @@ def _chain_for_source(
 
 
 # Every dataop name a spec may declare (validated at parse time by
-# spec.model). The batch chain applies all of them; the streaming chain
-# applies only STREAM_SAFE_DATAOPS and raises SpecError on the rest.
+# spec.model). source_chain applies all of them to a batch frame; a
+# streaming frame accepts only STREAM_SAFE_DATAOPS (SpecError otherwise).
 DATAOPS = frozenset({
     "exact_dedup", "simhash", "language_id", "quality_score", "token_stats",
     "fingerprint", "repetition_signals", "split_assign", "mixture_sample",
@@ -208,10 +266,10 @@ STREAM_SAFE_DATAOPS = DATAOPS - {
 def resolve_dataop(op: str):
     """Beyond-reference spec extension: training-data ops declared as
     ``{"type": "dataop", "config": {"op": ..., ...params}}`` transforms
-    run after the reference's fixed stage order — the batch chain
-    applies every op in ``DATAOPS``; the streaming chain applies the
-    ``STREAM_SAFE_DATAOPS`` subset and rejects the rest at assembly
-    time.  Corpus-global ops (near-dup pair mining, clustering,
+    run after the reference's fixed stage order — :func:`source_chain`
+    applies every op in ``DATAOPS`` to a batch frame; a streaming frame
+    accepts the ``STREAM_SAFE_DATAOPS`` subset and rejects the rest at
+    assembly time.  Corpus-global ops (near-dup pair mining, clustering,
     packing) stay library-level because they need a bounded batch to
     be well-defined."""
     from ..dataops.chunking import (
@@ -371,9 +429,7 @@ def compile_pipeline(
     ts_cols = ts_cols or {}
     order_cols = order_cols or {}
     chains = {
-        s.source_id: _chain_for_source(
-            s, ts_cols.get(s.source_id), order_cols.get(s.source_id, [])
-        )
+        s.source_id: source_chain(s, ts_cols.get(s.source_id), order_cols.get(s.source_id))
         for s in spec.sources
     }
     return CompiledPipeline(spec=spec, source_chains=chains)

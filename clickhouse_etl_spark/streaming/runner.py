@@ -1,4 +1,4 @@
-"""Streaming runner: the same operator chain under Structured Streaming.
+"""Streaming runner: the compiler's pipeline under Structured Streaming.
 
 One ``StreamingQuery`` per pipeline (the reference's per-stage pods +
 NATS hops collapse into a single Spark DAG — SURVEY.md §3.2). Delivery
@@ -6,24 +6,27 @@ semantics: checkpointing + the sink's idempotency column give
 at-least-once with harmless replays, replacing the reference's
 ack/commit choreography (kafka/consumer.go:253-362).
 
-Dedup is ``dropDuplicatesWithinWatermark`` — the faithful "first seen
-within window wins" with state eviction by watermark (the reference's
-Badger TTL, deduplication/badger/deduplication.go:30-103, shifted from
+The per-source chains and the join/mapping step come from
+plans/compiler.py; the runner adds only what streaming needs: JSON
+validation with a DLQ query per source, the state GC timeout, sink-side
+ANN serving, and the trigger. Dedup on a streaming frame is
+``dropDuplicatesWithinWatermark`` — the faithful "first seen within
+window wins" with state eviction by watermark (the reference's Badger
+TTL, deduplication/badger/deduplication.go:30-103, shifted from
 processing to event time as documented).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.filter import apply_filter
-from ..operators.transform import apply_transform
 from ..operators.validate import validate_json
+from ..plans.compiler import compile_pipeline, join_and_map
 from ..spec.model import PipelineSpec, SourceConfig
 
 
@@ -68,69 +71,6 @@ def kafka_source_stream(
     )
 
 
-def streaming_source_chain(
-    src: SourceConfig,
-    ts_col: str,
-    value_is_json: bool = True,
-    dlq_sink: Optional[Callable[[DataFrame], None]] = None,
-) -> Callable[[DataFrame], DataFrame]:
-    """Per-source streaming chain: validate -> filter -> dedup-within-
-    watermark -> transform -> dataops. Same fixed order as batch
-    (cmd/glassflow/dedup_component.go:210-225); spec-declared dataops
-    apply the STREAM_SAFE_DATAOPS subset only — batch-only ops
-    (exact_dedup's corpus window, simhash's per-doc aggregation) raise
-    SpecError at assembly time instead of silently skipping."""
-
-    def chain(df: DataFrame) -> DataFrame:
-        if value_is_json and src.schema_fields and "value" in df.columns:
-            ok, dlq = validate_json(df, src.schema_fields, component=f"ingestor:{src.source_id}")
-            if dlq_sink is not None:
-                dlq_sink(dlq)
-            df = ok
-        if src.filter is not None:
-            df = apply_filter(df, src.filter)
-        if src.dedup is not None:
-            window_s = src.dedup.time_window_s or 3600
-            df = df.withWatermark(ts_col, f"{int(window_s)} seconds")
-            # dropDuplicatesWithinWatermark takes column NAMES — route a
-            # dot-path key through the same dual resolution as batch
-            # dedup by materializing it as a helper column first
-            from ..operators.dedup import _key_col
-
-            df = (
-                df.withColumn("_dedup_key", _key_col(df, src.dedup.key))
-                .dropDuplicatesWithinWatermark(["_dedup_key"])
-                .drop("_dedup_key")
-            )
-        if src.transform is not None:
-            df = apply_transform(df, src.transform)
-        if src.dataops:
-            from ..plans.compiler import STREAM_SAFE_DATAOPS, resolve_dataop
-            from ..spec.model import SpecError
-
-            for d in src.dataops:
-                if d.op == "ann_serve":
-                    raise SpecError(
-                        "dataop 'ann_serve' streams SINK-SIDE only: declare "
-                        "it as the LAST transform of a joinless single-source "
-                        "pipeline and StreamingPipeline wires it into "
-                        "foreachBatch (it collects each micro-batch's bounded "
-                        "query set to prune the codes scan, which a mid-chain "
-                        "streaming frame cannot do)."
-                    )
-                if d.op not in STREAM_SAFE_DATAOPS:
-                    raise SpecError(
-                        f"dataop {d.op!r} is batch-only (needs a bounded corpus); "
-                        f"stream-safe ops: {sorted(STREAM_SAFE_DATAOPS)}. For "
-                        "streaming dedup use the dedup stage "
-                        "(dropDuplicatesWithinWatermark)."
-                    )
-                df = resolve_dataop(d.op)(df, **d.params)
-        return df
-
-    return chain
-
-
 @dataclass
 class StreamingPipeline:
     spec: PipelineSpec
@@ -162,26 +102,23 @@ class StreamingPipeline:
         # chain and wired into foreachBatch — each micro-batch of query
         # vectors runs the exact pq_index_query path (session-cached
         # artifacts, partition-pruned codes scan) and the ANSWER frame
-        # reaches the sink. Any other position raises at assembly time
-        # (streaming_source_chain).
-        import dataclasses as _dc
-
+        # reaches the sink. Any other position raises when the chain is
+        # applied (plans.compiler.source_chain).
+        spec = self.spec
         serve_cfg = None
-        pipe_sources = self.spec.sources
         if (
-            self.spec.join is None
-            and len(pipe_sources) == 1
-            and pipe_sources[0].dataops
-            and pipe_sources[0].dataops[-1].op == "ann_serve"
+            spec.join is None
+            and len(spec.sources) == 1
+            and spec.sources[0].dataops
+            and spec.sources[0].dataops[-1].op == "ann_serve"
         ):
-            src0 = pipe_sources[0]
+            src0 = spec.sources[0]
             serve_cfg = src0.dataops[-1]
-            pipe_sources = (
-                _dc.replace(src0, dataops=src0.dataops[:-1]),
-            )
+            spec = replace(spec, sources=(replace(src0, dataops=src0.dataops[:-1]),))
+        plan = compile_pipeline(spec, ts_cols)
 
         staged: dict[str, DataFrame] = {}
-        for src in pipe_sources:
+        for src in spec.sources:
             source_df = sources[src.source_id]
             ts = ts_cols[src.source_id]
             if ts in source_df.columns and isinstance(
@@ -191,84 +128,55 @@ class StreamingPipeline:
                 # which withWatermark rejects as event time — read them
                 # in the session zone once, before any watermark is set
                 source_df = source_df.withColumn(ts, F.col(ts).cast("timestamp"))
-            # schema validation with a DLQ branch: the failure frame runs
-            # as its OWN StreamingQuery over the same source (each query
-            # keeps independent offsets — the reference's per-operator
-            # DLQ middleware, processor/dlq_processor.go:13-60)
-            if dlq_writer is not None and src.schema_fields and "value" in source_df.columns:
-                _, dlq_frame = validate_json(
-                    source_df, src.schema_fields, component=f"ingestor:{src.source_id}"
+            if src.schema_fields and "value" in source_df.columns:
+                # a source-side event-time column (e.g. _kafka_ts) rides
+                # through validation next to the typed payload
+                payload = {f.name for f in src.schema_fields}
+                keep = [ts] if ts in source_df.columns and ts not in payload else None
+                source_df, dlq_frame = validate_json(
+                    source_df, src.schema_fields,
+                    component=f"ingestor:{src.source_id}", keep_cols=keep,
                 )
-                dq = (
-                    dlq_frame.writeStream.foreachBatch(
-                        lambda df, _bid: dlq_writer.write(df) if not df.isEmpty() else None
+                if dlq_writer is not None:
+                    # the failure frame runs as its OWN StreamingQuery
+                    # over the same source (each query keeps independent
+                    # offsets — the reference's per-operator DLQ
+                    # middleware, processor/dlq_processor.go:13-60)
+                    dq = (
+                        dlq_frame.writeStream.foreachBatch(
+                            lambda df, _bid: dlq_writer.write(df) if not df.isEmpty() else None
+                        )
+                        .option("checkpointLocation", f"{self.checkpoint_dir}/dlq_{src.source_id}")
+                        .outputMode("append")
+                        .trigger(**trigger)
+                        .start()
                     )
-                    .option("checkpointLocation", f"{self.checkpoint_dir}/dlq_{src.source_id}")
-                    .outputMode("append")
-                    .trigger(**trigger)
-                    .start()
-                )
-                self.dlq_queries.append(dq)
-            chain = streaming_source_chain(src, ts)
-            staged[src.source_id] = chain(source_df)
-
-        if self.spec.join is not None:
-            from .temporal_join import temporal_join_streaming
-
-            left = staged[self.spec.join.left.source_id]
-            right = staged[self.spec.join.right.source_id]
-            # output schema from the join rules against the staged frames
-            fields = []
-            for rule in self.spec.join.output_fields:
-                side = left if rule.source_id == self.spec.join.left.source_id else right
-                dt = side.schema[rule.name].dataType if rule.name in side.columns else T.StringType()
-                fields.append(T.StructField(rule.output_name, dt, True))
-            # GC timers only for continuous deployments — a registered
-            # timer keeps availableNow runs alive with empty epochs
-            continuous = "availableNow" not in trigger
-            gc_ms = None
-            if continuous:
-                w = max(self.spec.join.left.time_window_s, self.spec.join.right.time_window_s)
-                gc_ms = int(w * 1000 * 2) or 3600_000
-            df = temporal_join_streaming(
-                left,
-                right,
-                self.spec.join,
-                left_ts=ts_cols[self.spec.join.left.source_id],
-                right_ts=ts_cols[self.spec.join.right.source_id],
-                output_schema=T.StructType(fields),
-                state_gc_timeout_ms=gc_ms,
-            )
-        else:
-            df = next(iter(staged.values()))
+                    self.dlq_queries.append(dq)
+            staged[src.source_id] = plan.source_chains[src.source_id](source_df)
 
         if serve_cfg is not None:
             # the sink mapping (if any) applies to the ANSWER frame, so
             # it moves inside the serving foreachBatch; the streaming
             # frame itself stays the raw query stream
+            from ..dataops.similarity import pq_index_serve_foreach_batch
+
+            ((sid, df),) = staged.items()
             params = dict(serve_cfg.params)
             index_path = params.pop("index_path")
             inner_sink = sink_fn
-            mapping = self.spec.sink.mapping
 
-            def sink_fn(batch_df: DataFrame, batch_id: int) -> None:
-                # chunked wrapper: a backlog micro-batch over the LUT
-                # bound splits instead of killing the StreamingQuery
-                from ..dataops.similarity import pq_index_query_chunked
+            def mapped_sink(ans: DataFrame, batch_id: int) -> None:
+                inner_sink(join_and_map(spec, {sid: ans}), batch_id)
 
-                ans = pq_index_query_chunked(
-                    batch_df.sparkSession, index_path, batch_df, **params
-                )
-                if mapping:
-                    from ..operators.mapper import apply_sink_mapping
-
-                    ans = apply_sink_mapping(ans, mapping)
-                inner_sink(ans, batch_id)
-
-        elif self.spec.sink.mapping:
-            from ..operators.mapper import apply_sink_mapping
-
-            df = apply_sink_mapping(df, self.spec.sink.mapping)
+            sink_fn = pq_index_serve_foreach_batch(spark, index_path, mapped_sink, **params)
+        else:
+            # GC timers only for continuous deployments — a registered
+            # timer keeps availableNow runs alive with empty epochs
+            gc_ms = None
+            if spec.join is not None and "availableNow" not in trigger:
+                w = max(spec.join.left.time_window_s, spec.join.right.time_window_s)
+                gc_ms = int(w * 1000 * 2) or 3600_000
+            df = join_and_map(spec, staged, ts_cols, state_gc_timeout_ms=gc_ms)
 
         writer = (
             df.writeStream.foreachBatch(sink_fn)

@@ -720,8 +720,6 @@ def stateful_join_bench(spark, n_left: int = 2_000_000, n_keys: int = 9_000) -> 
     """Stateful temporal-join throughput: n_left left rows + one right
     row per key through applyInPandasWithState (the faithful
     latest-wins path)."""
-    from pyspark.sql import types as T
-
     from clickhouse_etl_spark.spec.model import (
         JoinConfig, JoinOutputField, JoinSourceConfig,
     )
@@ -765,16 +763,7 @@ def stateful_join_bench(spark, n_left: int = 2_000_000, n_keys: int = 9_000) -> 
             JoinOutputField("r", "r_score", "score"),
         ),
     )
-    out_schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
-    joined = temporal_join_streaming(
-        left, right, cfg, left_ts="ts", right_ts="rts", output_schema=out_schema
-    )
+    joined = temporal_join_streaming(left, right, cfg, left_ts="ts", right_ts="rts")
     # best-of-2 with a FRESH checkpoint each run: the first pass pays
     # Python-worker startup + RocksDB init + codegen (r7 measured 16.0s
     # cold vs 7.3s warm on identical code — the r5→r6 "regression" to

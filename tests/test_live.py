@@ -89,7 +89,6 @@ def test_kafka_pipeline_dedup_golden(spark, tmp_path):
     from clickhouse_etl_spark.streaming.runner import (
         StreamingPipeline,
         kafka_source_stream,
-        streaming_source_chain,  # noqa: F401  (imported for parity docs)
     )
 
     topic = f"live_smoke_{uuid.uuid4().hex[:8]}"

@@ -225,7 +225,7 @@ def test_dataop_params_bound_at_parse_time():
 def test_streaming_chain_applies_stream_safe_dataops(spark, tmp_path):
     """ADVICE r3: spec-declared dataops must not silently vanish in a
     streaming deployment — the stream-safe subset applies in
-    streaming_source_chain; batch-only ops raise SpecError at assembly
+    the one source_chain; batch-only ops raise SpecError at assembly
     time (plan construction, no query started)."""
     import pytest as _pytest
 
@@ -236,7 +236,7 @@ def test_streaming_chain_applies_stream_safe_dataops(spark, tmp_path):
         SourceConfig,
         SpecError,
     )
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
+    from clickhouse_etl_spark.plans.compiler import source_chain
 
     schema = T.StructType([
         T.StructField("doc_id", T.LongType()),
@@ -253,7 +253,7 @@ def test_streaming_chain_applies_stream_safe_dataops(spark, tmp_path):
         source_id="documents",
         dataops=(DataopConfig(op="token_stats"), DataopConfig(op="quality_score")),
     )
-    out = streaming_source_chain(safe, "ts", value_is_json=False)(stream)
+    out = source_chain(safe, "ts")(stream)
     assert out.isStreaming
     assert "n_tokens" in out.columns and "quality" in out.columns
 
@@ -262,14 +262,14 @@ def test_streaming_chain_applies_stream_safe_dataops(spark, tmp_path):
         source_id="documents", dataops=(DataopConfig(op="upsample_mixture",
                                                      params={"source_col": "text"}),)
     )
-    out2 = streaming_source_chain(ups, "ts", value_is_json=False)(stream)
+    out2 = source_chain(ups, "ts")(stream)
     assert out2.isStreaming and "copy_idx" in out2.columns
 
     unsafe = SourceConfig(
         source_id="documents", dataops=(DataopConfig(op="exact_dedup"),)
     )
     with _pytest.raises(SpecError, match="batch-only"):
-        streaming_source_chain(unsafe, "ts", value_is_json=False)(stream)
+        source_chain(unsafe, "ts")(stream)
 
 
 def test_r4_dataops_on_spec_surface(spark, tmp_path):
@@ -283,7 +283,7 @@ def test_r4_dataops_on_spec_surface(spark, tmp_path):
         resolve_dataop,
     )
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig, SpecError
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
+    from clickhouse_etl_spark.plans.compiler import source_chain
 
     new_ops = {"span_dedup", "rare_token_ratio", "balanced_sample"}
     assert new_ops <= DATAOPS and not (new_ops & STREAM_SAFE_DATAOPS)
@@ -305,7 +305,7 @@ def test_r4_dataops_on_spec_surface(spark, tmp_path):
     for op in sorted(new_ops):
         cfg = SourceConfig(source_id="documents", dataops=(DataopConfig(op=op),))
         with pytest.raises(SpecError, match="batch-only"):
-            streaming_source_chain(cfg, "ts", value_is_json=False)(stream)
+            source_chain(cfg, "ts")(stream)
 
 
 def test_dedup_against_streaming_parity_with_batch(spark, tmp_path):
@@ -319,7 +319,7 @@ def test_dedup_against_streaming_parity_with_batch(spark, tmp_path):
     from clickhouse_etl_spark.dataops.dedup import dedup_against_path
     from clickhouse_etl_spark.plans.compiler import STREAM_SAFE_DATAOPS
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
+    from clickhouse_etl_spark.plans.compiler import source_chain
 
     assert "dedup_against" in STREAM_SAFE_DATAOPS
 
@@ -353,7 +353,7 @@ def test_dedup_against_streaming_parity_with_batch(spark, tmp_path):
         source_id="documents",
         dataops=(DataopConfig(op="dedup_against", params={"seen_path": seen_dir}),),
     )
-    out = streaming_source_chain(src, "ts", value_is_json=False)(stream)
+    out = source_chain(src, "ts")(stream)
     assert out.isStreaming
     q = (
         out.writeStream.format("memory")
@@ -427,7 +427,7 @@ def test_r6_dataops_on_spec_surface(spark, tmp_path):
         resolve_dataop,
     )
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig, SpecError
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
+    from clickhouse_etl_spark.plans.compiler import source_chain
 
     assert {"normalize_text", "hash_embedding"} <= DATAOPS
     assert "normalize_text" in STREAM_SAFE_DATAOPS
@@ -454,13 +454,13 @@ def test_r6_dataops_on_spec_surface(spark, tmp_path):
     safe = SourceConfig(
         source_id="documents", dataops=(DataopConfig(op="normalize_text"),)
     )
-    out = streaming_source_chain(safe, "ts", value_is_json=False)(stream)
+    out = source_chain(safe, "ts")(stream)
     assert out.isStreaming and "text_norm" in out.columns
     unsafe = SourceConfig(
         source_id="documents", dataops=(DataopConfig(op="hash_embedding"),)
     )
     with _pytest.raises(SpecError, match="batch-only"):
-        streaming_source_chain(unsafe, "ts", value_is_json=False)(stream)
+        source_chain(unsafe, "ts")(stream)
 
 
 def test_r7_dataops_on_spec_surface(spark, tmp_path):
@@ -480,7 +480,7 @@ def test_r7_dataops_on_spec_surface(spark, tmp_path):
         resolve_dataop,
     )
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig, SpecError
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
+    from clickhouse_etl_spark.plans.compiler import source_chain
 
     assert {"trained_classifier", "cluster_sample"} <= DATAOPS
     assert not ({"trained_classifier", "cluster_sample"} & STREAM_SAFE_DATAOPS)
@@ -516,7 +516,7 @@ def test_r7_dataops_on_spec_surface(spark, tmp_path):
     for op in ("trained_classifier", "cluster_sample"):
         cfg = SourceConfig(source_id="documents", dataops=(DataopConfig(op=op),))
         with _pytest.raises(SpecError, match="batch-only"):
-            streaming_source_chain(cfg, "ts", value_is_json=False)(stream)
+            source_chain(cfg, "ts")(stream)
 
 
 def test_classify_against_streaming_parity_with_batch(spark, tmp_path):
@@ -535,7 +535,7 @@ def test_classify_against_streaming_parity_with_batch(spark, tmp_path):
     )
     from clickhouse_etl_spark.plans.compiler import STREAM_SAFE_DATAOPS
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
+    from clickhouse_etl_spark.plans.compiler import source_chain
 
     assert "classify_against" in STREAM_SAFE_DATAOPS
 
@@ -577,7 +577,7 @@ def test_classify_against_streaming_parity_with_batch(spark, tmp_path):
             DataopConfig(op="classify_against", params={"weights_path": weights_dir}),
         ),
     )
-    out = streaming_source_chain(src, "ts", value_is_json=False)(stream)
+    out = source_chain(src, "ts")(stream)
     assert out.isStreaming
     q = (
         out.writeStream.format("memory")
@@ -639,7 +639,7 @@ def test_dedup_against_bloom_on_streaming_chain(spark, tmp_path):
 
     from clickhouse_etl_spark.dataops.dedup import write_bloom_table
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
+    from clickhouse_etl_spark.plans.compiler import source_chain
 
     seen = spark.createDataFrame(
         [(100, "already ingested one"), (101, "already ingested two")],
@@ -674,7 +674,7 @@ def test_dedup_against_bloom_on_streaming_chain(spark, tmp_path):
             ),
         ),
     )
-    out = streaming_source_chain(src, "ts", value_is_json=False)(stream)
+    out = source_chain(src, "ts")(stream)
     assert out.isStreaming
     q = (
         out.writeStream.format("memory")
@@ -700,7 +700,7 @@ def test_repetition_signals_streaming_chain_runs(spark, tmp_path):
     from pyspark.sql import types as T
 
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
+    from clickhouse_etl_spark.plans.compiler import source_chain
 
     schema = T.StructType([
         T.StructField("doc_id", T.LongType()),
@@ -720,7 +720,7 @@ def test_repetition_signals_streaming_chain_runs(spark, tmp_path):
         source_id="documents",
         dataops=(DataopConfig(op="repetition_signals"),),
     )
-    out = streaming_source_chain(src, "ts", value_is_json=False)(stream)
+    out = source_chain(src, "ts")(stream)
     assert out.isStreaming
     q = (
         out.writeStream.format("memory")
@@ -753,7 +753,7 @@ def test_streaming_curation_dataops_spec_chain(spark, tmp_path):
     )
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig
     from clickhouse_etl_spark.streaming.curation import curation_scored_stream
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
+    from clickhouse_etl_spark.plans.compiler import source_chain
 
     corpus = spark.createDataFrame(
         [(i, "the a quick brown fox jumps over " * (1 + i % 5)) for i in range(80)],
@@ -805,7 +805,7 @@ def test_streaming_curation_dataops_spec_chain(spark, tmp_path):
             }),
         ),
     )
-    out = streaming_source_chain(src, "ts", value_is_json=False)(stream)
+    out = source_chain(src, "ts")(stream)
     assert out.isStreaming
     q = (
         out.writeStream.format("memory")
@@ -847,7 +847,7 @@ def test_six_stage_curation_chain_from_one_pipeline_json(spark, tmp_path):
         write_importance_table,
     )
     from clickhouse_etl_spark.sources import load_table
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
+    from clickhouse_etl_spark.plans.compiler import source_chain
 
     corpus = (
         load_table(spark, "/root/testdata/sf0.001", "documents")
@@ -950,9 +950,7 @@ def test_six_stage_curation_chain_from_one_pipeline_json(spark, tmp_path):
         T.StructField("ts", T.TimestampType()),
     ])
     stream = spark.readStream.schema(schema).parquet(wave_dir)
-    out = streaming_source_chain(
-        spec.source("documents"), "ts", value_is_json=False
-    )(stream)
+    out = source_chain(spec.source("documents"), "ts")(stream)
     assert out.isStreaming
     q = (
         out.writeStream.format("memory")
@@ -1091,7 +1089,7 @@ def test_ann_serve_on_spec_surface(spark, sf_dir, tmp_path):
         SpecError,
     )
     from clickhouse_etl_spark.streaming import StreamingPipeline
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
+    from clickhouse_etl_spark.plans.compiler import source_chain
 
     assert "ann_serve" in DATAOPS
     assert "ann_serve" not in STREAM_SAFE_DATAOPS  # mid-chain: rejected
@@ -1186,7 +1184,7 @@ def test_ann_serve_on_spec_surface(spark, sf_dir, tmp_path):
         ),
     )
     with _pytest.raises(SpecError, match="SINK-SIDE"):
-        streaming_source_chain(cfg, "query_id", value_is_json=False)(stream)
+        source_chain(cfg, "query_id")(stream)
     release_artifact_cache()
 
 
@@ -1206,7 +1204,7 @@ def test_r9_dataops_on_spec_surface(spark, tmp_path):
         resolve_dataop,
     )
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig, SpecError
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
+    from clickhouse_etl_spark.plans.compiler import source_chain
 
     assert {"gopher_rules", "temperature_mixture"} <= DATAOPS
     assert "gopher_rules" in STREAM_SAFE_DATAOPS
@@ -1239,13 +1237,13 @@ def test_r9_dataops_on_spec_surface(spark, tmp_path):
     safe = SourceConfig(
         source_id="documents", dataops=(DataopConfig(op="gopher_rules"),)
     )
-    out = streaming_source_chain(safe, "ts", value_is_json=False)(stream)
+    out = source_chain(safe, "ts")(stream)
     assert out.isStreaming and "pass_gopher" in out.columns
     unsafe = SourceConfig(
         source_id="documents", dataops=(DataopConfig(op="temperature_mixture"),)
     )
     with _pytest.raises(SpecError, match="batch-only"):
-        streaming_source_chain(unsafe, "ts", value_is_json=False)(stream)
+        source_chain(unsafe, "ts")(stream)
 
 
 def test_c4_and_line_dedup_on_spec_surface(spark, tmp_path):
@@ -1264,7 +1262,7 @@ def test_c4_and_line_dedup_on_spec_surface(spark, tmp_path):
         resolve_dataop,
     )
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig, SpecError
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
+    from clickhouse_etl_spark.plans.compiler import source_chain
 
     assert {"c4_filters", "line_dedup"} <= DATAOPS
     assert "c4_filters" in STREAM_SAFE_DATAOPS
@@ -1295,13 +1293,13 @@ def test_c4_and_line_dedup_on_spec_surface(spark, tmp_path):
     safe = SourceConfig(
         source_id="documents", dataops=(DataopConfig(op="c4_filters"),)
     )
-    out = streaming_source_chain(safe, "ts", value_is_json=False)(stream)
+    out = source_chain(safe, "ts")(stream)
     assert out.isStreaming and "pass_c4" in out.columns
     unsafe = SourceConfig(
         source_id="documents", dataops=(DataopConfig(op="line_dedup"),)
     )
     with _pytest.raises(SpecError, match="batch-only"):
-        streaming_source_chain(unsafe, "ts", value_is_json=False)(stream)
+        source_chain(unsafe, "ts")(stream)
 
 
 def test_line_dedup_against_on_spec_surface(spark, tmp_path):
@@ -1323,7 +1321,7 @@ def test_line_dedup_against_on_spec_surface(spark, tmp_path):
     )
     from clickhouse_etl_spark.spec import parse_pipeline_json
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig, SpecError
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
+    from clickhouse_etl_spark.plans.compiler import source_chain
 
     assert "line_dedup_against" in DATAOPS
     assert "line_dedup_against" in STREAM_SAFE_DATAOPS
@@ -1383,7 +1381,7 @@ def test_line_dedup_against_on_spec_surface(spark, tmp_path):
         source_id="documents",
         dataops=(DataopConfig(op="line_dedup_against", params={"seen_path": seen}),),
     )
-    out_stream = streaming_source_chain(safe, "ts", value_is_json=False)(stream)
+    out_stream = source_chain(safe, "ts")(stream)
     assert out_stream.isStreaming and "n_lines_kept" in out_stream.columns
 
     # the span-grain sibling shares the surface contract: stream-safe,
@@ -1409,7 +1407,7 @@ def test_line_dedup_against_on_spec_surface(spark, tmp_path):
         ),
     )
     stream2 = spark.readStream.schema(schema).parquet(src_dir)
-    out2 = streaming_source_chain(safe_span, "ts", value_is_json=False)(stream2)
+    out2 = source_chain(safe_span, "ts")(stream2)
     assert out2.isStreaming and "n_sentences_kept" in out2.columns
 
 
@@ -1482,7 +1480,7 @@ def test_importance_against_on_spec_surface(spark, tmp_path):
     )
     from clickhouse_etl_spark.spec import parse_pipeline_json
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig, SpecError
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
+    from clickhouse_etl_spark.plans.compiler import source_chain
 
     assert "importance_against" in DATAOPS
     assert "importance_against" in STREAM_SAFE_DATAOPS
@@ -1530,7 +1528,7 @@ def test_importance_against_on_spec_surface(spark, tmp_path):
         dataops=(DataopConfig(op="importance_against",
                               params={"weights_path": path}),),
     )
-    s_out = streaming_source_chain(safe, "ts", value_is_json=False)(stream)
+    s_out = source_chain(safe, "ts")(stream)
     assert s_out.isStreaming and "score" in s_out.columns
 
 
@@ -1553,7 +1551,7 @@ def test_decontaminate_against_on_spec_surface(spark, tmp_path):
     )
     from clickhouse_etl_spark.spec import parse_pipeline_json
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig, SpecError
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
+    from clickhouse_etl_spark.plans.compiler import source_chain
 
     assert "decontaminate_against" in DATAOPS
     assert "decontaminate_against" in STREAM_SAFE_DATAOPS
@@ -1620,7 +1618,7 @@ def test_decontaminate_against_on_spec_surface(spark, tmp_path):
             op="decontaminate_against", params={"seen_path": seen, "n": 3}
         ),),
     )
-    out_stream = streaming_source_chain(safe, "ts", value_is_json=False)(stream)
+    out_stream = source_chain(safe, "ts")(stream)
     assert out_stream.isStreaming
     assert set(out_stream.columns) == {"doc_id", "text", "ts"}
 
@@ -1645,7 +1643,7 @@ def test_neardup_against_on_spec_surface(spark, tmp_path):
     )
     from clickhouse_etl_spark.spec import parse_pipeline_json
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig, SpecError
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
+    from clickhouse_etl_spark.plans.compiler import source_chain
 
     assert "neardup_against" in DATAOPS
     assert "neardup_against" in STREAM_SAFE_DATAOPS
@@ -1712,6 +1710,6 @@ def test_neardup_against_on_spec_surface(spark, tmp_path):
             op="neardup_against", params={"seen_path": seen}
         ),),
     )
-    out_stream = streaming_source_chain(safe, "ts", value_is_json=False)(stream)
+    out_stream = source_chain(safe, "ts")(stream)
     assert out_stream.isStreaming
     assert set(out_stream.columns) == {"doc_id", "text", "ts"}

@@ -93,16 +93,13 @@ def test_temporal_join_streaming_semantics(spark, tmp_path):
     left = spark.readStream.schema(LEFT_SCHEMA).parquet(lpath)
     right = spark.readStream.schema(RIGHT_SCHEMA).parquet(rpath)
 
-    out_schema = T.StructType(
-        [
-            T.StructField("id", T.StringType()),
-            T.StructField("name", T.StringType()),
-            T.StructField("email", T.StringType()),
-        ]
-    )
-    joined = temporal_join_streaming(
-        left, right, _join_cfg(), left_ts="lts", right_ts="rts", output_schema=out_schema
-    )
+    joined = temporal_join_streaming(left, right, _join_cfg(), left_ts="lts", right_ts="rts")
+    # output schema derived from the rules: rule order, source types
+    assert [(f.name, f.dataType) for f in joined.schema] == [
+        ("id", T.StringType()),
+        ("name", T.StringType()),
+        ("email", T.StringType()),
+    ]
     q = (
         joined.writeStream.format("memory")
         .queryName("tj_out")
@@ -334,6 +331,67 @@ def test_streaming_pipeline_accepts_ntz_event_time(spark, tmp_path):
     ]
 
 
+def test_streaming_json_source_keeps_event_time_column(spark, tmp_path):
+    """A JSON source whose event time is a SOURCE column (``_kafka_ts``,
+    not a payload field) can carry a dedup stage: validation passes the
+    column through next to the typed payload, the watermark dedup keeps
+    the first row per key across micro-batches, and invalid payloads
+    still reach the DLQ."""
+    from pyspark.sql import functions as F
+
+    doc = {
+        "version": "v3", "pipeline_id": "jts", "name": "json-ts",
+        "sources": [
+            {"type": "kafka", "source_id": "events", "topic": "events",
+             "schema_fields": [{"name": "id", "type": "int"},
+                               {"name": "name", "type": "string"}]},
+        ],
+        "transforms": [{"type": "dedup", "source_id": "events",
+                        "config": {"key": "id", "time_window": "1h"}}],
+        "sink": {
+            "type": "clickhouse", "table": "out", "max_delay_time": "1s",
+            "mapping": [
+                {"name": "id", "column_name": "id", "column_type": "Int32"},
+                {"name": "name", "column_name": "name", "column_type": "String"},
+            ],
+        },
+    }
+    inp = tmp_path / "json_in"
+    inp.mkdir()
+    files = (
+        ("a.json", ['{"id": 1, "name": "first"}', '{"id": 2, "name": "two"}']),
+        ("b.json", ['{"id": 1, "name": "second"}', '{broken', '{"id": 3, "name": "three"}']),
+    )
+    for i, (name, lines) in enumerate(files):
+        path = inp / name
+        path.write_text("\n".join(lines) + "\n")
+        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
+    src = (
+        spark.readStream.option("maxFilesPerTrigger", 1).text(str(inp))
+        .withColumn("_kafka_ts", F.lit("2024-01-01 00:00:00").cast("timestamp"))
+    )
+    sink = ClickHouseSink(table="out", parquet_fallback_path=str(tmp_path / "sink_jts"))
+    dlq = DLQWriter(str(tmp_path / "dlq_jts"))
+    pipe = StreamingPipeline(
+        spec=parse_pipeline_json(json.dumps(doc)),
+        checkpoint_dir=str(tmp_path / "ckpt_jts"),
+    )
+    q = pipe.start(
+        spark, sources={"events": src}, ts_cols={"events": "_kafka_ts"},
+        sink_fn=sink.foreach_batch(), trigger={"availableNow": True}, dlq_writer=dlq,
+    )
+    q.awaitTermination(120)
+    for dq in pipe.dlq_queries:
+        dq.awaitTermination(120)
+    assert q.exception() is None
+    rows = spark.read.parquet(str(tmp_path / "sink_jts")).collect()
+    assert sorted((r["id"], r["name"]) for r in rows) == [
+        (1, "first"), (2, "two"), (3, "three")
+    ]
+    failures = dlq.read(spark).collect()
+    assert [r["error"] for r in failures] == ["malformed JSON"]
+
+
 def test_streaming_dlq_branch(spark, tmp_path):
     """Per-operator DLQ middleware in streaming: malformed payloads land
     in the DLQ table while valid rows flow to the sink
@@ -442,42 +500,6 @@ def test_metrics_listener_captures_progress(spark, tmp_path):
         assert snap["batches"] >= 1
     finally:
         spark.streams.removeListener(listener)
-
-
-def test_stream_stream_join_all_matches(spark, tmp_path):
-    """Built-in watermarked stream-stream join: emits ALL in-window right
-    matches (vs the stateful temporal join's latest-wins)."""
-    from clickhouse_etl_spark.streaming.stream_join import stream_stream_join
-
-    base = ts("2024-01-01T10:00:00")
-    lpath = _write_stream_input(
-        spark, str(tmp_path), "l",
-        [("u1", "Alice", base + dt.timedelta(seconds=1))], LEFT_SCHEMA,
-    )
-    rpath = _write_stream_input(
-        spark, str(tmp_path), "r",
-        [("u1", "old@x.com", base), ("u1", "new@x.com", base + dt.timedelta(milliseconds=500))],
-        RIGHT_SCHEMA,
-    )
-    joined = stream_stream_join(
-        spark.readStream.schema(LEFT_SCHEMA).parquet(lpath),
-        spark.readStream.schema(RIGHT_SCHEMA).parquet(rpath),
-        _join_cfg(),
-        left_ts="lts",
-        right_ts="rts",
-    )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("ssj_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_ssj"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = {(r["id"], r["email"]) for r in spark.sql("SELECT * FROM ssj_out").collect()}
-    # BOTH right rows match (multi-match semantics — documented contrast)
-    assert rows == {("u1", "old@x.com"), ("u1", "new@x.com")}
 
 
 def test_streaming_otlp_metric_rollup(spark, tmp_path):
@@ -1035,7 +1057,7 @@ def test_line_dedup_against_stream_parity_and_wave_lifecycle(spark, tmp_path):
         write_line_digest_table,
     )
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
+    from clickhouse_etl_spark.plans.compiler import source_chain
 
     wave1 = spark.createDataFrame(
         [
@@ -1092,7 +1114,7 @@ def test_line_dedup_against_stream_parity_and_wave_lifecycle(spark, tmp_path):
         .parquet(src)
     )
     q = (
-        streaming_source_chain(cfg, "ts", value_is_json=False)(stream)
+        source_chain(cfg, "ts")(stream)
         .writeStream.format("memory")
         .queryName("line_dedup_stream_out")
         .outputMode("append")
@@ -1136,7 +1158,7 @@ def test_decontaminate_against_stream_parity(spark, tmp_path):
         write_ngram_digest_table,
     )
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
+    from clickhouse_etl_spark.plans.compiler import source_chain
 
     bench = spark.createDataFrame(
         [
@@ -1197,7 +1219,7 @@ def test_decontaminate_against_stream_parity(spark, tmp_path):
         .parquet(src)
     )
     q = (
-        streaming_source_chain(cfg, "ts", value_is_json=False)(stream)
+        source_chain(cfg, "ts")(stream)
         .writeStream.format("memory")
         .queryName("decontam_stream_out")
         .outputMode("append")
@@ -1225,7 +1247,7 @@ def test_neardup_against_stream_parity(spark, tmp_path):
         write_band_digest_table,
     )
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
+    from clickhouse_etl_spark.plans.compiler import source_chain
 
     wave1 = spark.createDataFrame(
         [
@@ -1284,7 +1306,7 @@ def test_neardup_against_stream_parity(spark, tmp_path):
         .parquet(src)
     )
     q = (
-        streaming_source_chain(cfg, "ts", value_is_json=False)(stream)
+        source_chain(cfg, "ts")(stream)
         .writeStream.format("memory")
         .queryName("neardup_stream_out")
         .outputMode("append")
